@@ -49,8 +49,16 @@ class BroadcastPolygonIndex:
     """
 
     _OFF = 1 << 25  # planar cell ids stay positive for any earthly coord
+    # a cell id packs cx + _OFF and cy + _OFF into 26 bits each; earthly
+    # coordinates fit them only up to this level, past it ids can collide
+    MAX_LEVEL = 25
 
     def __init__(self, polygon_rows: list[dict], level: int = 12, max_cells: int = 256):
+        if level > self.MAX_LEVEL:
+            raise ValueError(
+                f"level {level} is above {self.MAX_LEVEL}, the highest level "
+                "whose cell ids fit their 26-bit fields"
+            )
         self.keys = []
         self.polys = []
         # coverings adapt per polygon (big polygon → coarser cells), so the
@@ -327,9 +335,22 @@ def pip_tile_rollup(
     point set and gives the Python stage true map-side combine — the
     shuffle is O(polygons × tiles), independent of input rows.
     """
-    index = BroadcastPolygonIndex(polygon_rows, level=level)
-    keys = list(index.keys)
-    karr = np.array([str(k) for k in keys] + [None], dtype=object)
+    kernel = tile_rollup_kernel(
+        BroadcastPolygonIndex(polygon_rows, level=level), res, grid, lon_col, lat_col
+    )
+    # project to the two columns the kernel reads — mapInPandas is
+    # opaque to Catalyst, so without this every point column crosses
+    # the Arrow boundary (guide §4: pass only what the function needs)
+    partial = points.select(lon_col, lat_col).mapInPandas(
+        kernel, "polygon_key string, tile long, pn long"
+    )
+    return partial.groupBy("polygon_key", "tile").agg(F.sum("pn").alias("n_points"))
+
+
+def tile_rollup_kernel(index, res: int, grid: str, lon_col: str, lat_col: str):
+    """The mapInPandas kernel of `pip_tile_rollup`: pandas batches of
+    points in, one frame of (polygon_key, tile, pn) partial counts out."""
+    karr = np.array([str(k) for k in index.keys] + [None], dtype=object)
 
     def _reduce_pairs(t, h, w):
         # group-sum (tile, hit) pairs with one lexsort — tile ids span
@@ -350,6 +371,8 @@ def pip_tile_rollup(
         hs: list = []
         ws: list = []
         for pdf in iterator:
+            if not len(pdf):
+                continue
             lon = pdf[lon_col].to_numpy(np.float64)
             lat = pdf[lat_col].to_numpy(np.float64)
             hit = index.lookup(lon, lat)
@@ -383,13 +406,7 @@ def pip_tile_rollup(
             "pn": n,
         })
 
-    # project to the two columns the kernel reads — mapInPandas is
-    # opaque to Catalyst, so without this every point column crosses
-    # the Arrow boundary (guide §4: pass only what the function needs)
-    partial = points.select(lon_col, lat_col).mapInPandas(
-        kernel, "polygon_key string, tile long, pn long"
-    )
-    return partial.groupBy("polygon_key", "tile").agg(F.sum("pn").alias("n_points"))
+    return kernel
 
 
 # --- large×large: covering-cell equi-join ------------------------------------

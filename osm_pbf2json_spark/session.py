@@ -9,6 +9,16 @@ the same Arrow / AQE / shuffle posture:
 - AQE ON incl. skew-join: hot H3 cells / hot node refs re-split at runtime.
 - shuffle partitions sized for the local sandbox; on a real cluster this is
   overridden by --conf (AQE coalescing makes the initial number forgiving).
+- Python workers fork from `osm_pbf2json_spark._daemon`
+  (`spark.python.daemon.module`). PySpark calls
+  `importlib.invalidate_caches()` at the start of every task, and on
+  CPython 3.11 that re-reads the whole directory of every zip archive with
+  a cached importer (pyspark.zip, py4j, the spark-core jar): about 0.2 CPU-s
+  per task, more than most kernels here. The daemon drops those cached
+  importers first. The package's import root goes on
+  `spark.executorEnv.PYTHONPATH` so the daemon can be started from any
+  cwd, including `spark-submit --py-files` jobs. Sessions not built here
+  keep Spark's default daemon.
 """
 
 from __future__ import annotations
@@ -18,6 +28,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# the directory holding the package, or the --py-files zip it came from
+IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_session(
@@ -46,7 +58,13 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "osm_pbf2json_spark._daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    paths = [IMPORT_ROOT, *conf.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)]
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -485,3 +485,42 @@ def test_broadcast_index_batched_refine_matches_bruteforce():
         ref[m] = ci
     assert (got == ref).all()
     assert (got >= 0).sum() > 1000  # hits actually exercised
+
+
+def _rollup(batches):
+    """Drive the pip_tile_rollup kernel as plain pandas, no Spark."""
+    import pandas as pd
+
+    index = S.BroadcastPolygonIndex([SQUARE_A, SQUARE_B])
+    kernel = S.tile_rollup_kernel(index, 9, "hex", "lon", "lat")
+    frames = [pd.DataFrame({"lon": lon, "lat": lat}, dtype=np.float64) for lon, lat in batches]
+    out = list(kernel(iter(frames)))
+    assert len(out) == 1
+    assert list(out[0].columns) == ["polygon_key", "tile", "pn"]
+    return out[0]
+
+
+def test_tile_rollup_kernel_empty_batches():
+    assert _rollup([]).empty
+    assert _rollup([([], [])]).empty
+    out = _rollup([([], []), ([2.0], [2.0]), ([], [])])
+    assert out["polygon_key"].tolist() == ["A"]
+    assert out["pn"].tolist() == [1]
+
+
+def test_tile_rollup_kernel_one_row_and_nan():
+    out = _rollup([([12.0], [12.0])])
+    assert out["polygon_key"].tolist() == ["B"] and out["pn"].tolist() == [1]
+    out = _rollup([([np.nan], [2.0])])
+    assert out["polygon_key"].tolist() == [None] and out["pn"].tolist() == [1]
+    out = _rollup([([2.0, np.nan, 2.0, 3.0], [2.0, 2.0, np.nan, 3.0])])
+    got = out.groupby(out["polygon_key"].fillna("-"))["pn"].sum().to_dict()
+    assert got == {"A": 2, "-": 2}
+
+
+def test_broadcast_index_rejects_colliding_levels():
+    import pytest
+
+    S.BroadcastPolygonIndex([SQUARE_A], level=S.BroadcastPolygonIndex.MAX_LEVEL)
+    with pytest.raises(ValueError, match="level 27 .* 25"):
+        S.BroadcastPolygonIndex([SQUARE_A], level=27)

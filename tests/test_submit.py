@@ -27,6 +27,54 @@ def test_pyfiles_zip_reproducible(tmp_path):
     assert zip_fingerprint(z1) == zip_fingerprint(z2)
 
 
+def _submit_env():
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    return env
+
+
+_SMOKE_JOB = """
+from osm_pbf2json_spark.session import get_session
+
+
+def kernel(iterator):
+    import sys
+
+    for pdf in iterator:
+        pdf["daemon"] = sys.modules["__main__"].__spec__.name
+        yield pdf
+
+
+spark = get_session(master="local[2]", shuffle_partitions=2)
+out = spark.range(0, 1000, numPartitions=2).mapInPandas(kernel, "id long, daemon string")
+for r in out.groupBy("daemon").count().collect():
+    print(f"SMOKE {r['daemon']} {r['count']}")
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(shutil.which("spark-submit") is None, reason="no spark-submit")
+def test_spark_submit_pyfiles_smoke(tmp_path):
+    """The worker daemon `get_session` selects must start when the engine
+    ships only as a --py-files zip (no fixture needed)."""
+    zip_path = os.path.abspath(build_zip(str(tmp_path / "dist")))
+    job = tmp_path / "smoke_job.py"
+    job.write_text(_SMOKE_JOB)
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[2]", "--conf", "spark.ui.enabled=false",
+         "--py-files", zip_path, str(job)],
+        cwd=str(tmp_path),  # engine package resolvable ONLY via the zip
+        env=_submit_env(),
+        capture_output=True,
+        text=True,
+        timeout=420,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    smoke = [line.split() for line in proc.stdout.splitlines() if line.startswith("SMOKE ")]
+    assert smoke == [["SMOKE", "osm_pbf2json_spark._daemon", "1000"]]
+
+
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="no spark-submit")
 def test_spark_submit_pyfiles_objects(tmp_path):
     fixture = ensure_fixture("alexanderplatz")
@@ -34,9 +82,6 @@ def test_spark_submit_pyfiles_objects(tmp_path):
     shim = tmp_path / "submit_cli.py"
     shutil.copy(os.path.join(REPO, "tools", "submit_cli.py"), shim)
 
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["PYSPARK_PYTHON"] = sys.executable
-    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
     proc = subprocess.run(
         [
             "spark-submit",
@@ -50,7 +95,7 @@ def test_spark_submit_pyfiles_objects(tmp_path):
             "-t", "amenity~fountain+tourism,amenity~townhall",
         ],
         cwd=str(tmp_path),  # engine package resolvable ONLY via the zip
-        env=env,
+        env=_submit_env(),
         capture_output=True,
         text=True,
         timeout=420,
