@@ -67,10 +67,26 @@ def main(argv=None, spark=None, out=None):
     args = build_parser().parse_args(argv)
     out = out or sys.stdout
 
+    from .session import get_session
+
+    spark = spark or get_session(app_name="osm-pbf2json-spark-cli")
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    try:
+        _run(args, spark, out)
+    finally:
+        # a command pins its PBF decode cache and the closure's
+        # localCheckpoints; release them (blocking), or a long-lived
+        # session that runs many commands holds them all
+        for rdd_id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
+            if rdd_id not in pinned:
+                rdd.unpersist(True)
+    return 0
+
+
+def _run(args, spark, out) -> None:
     from .operators.boundaries import boundaries
     from .operators.objects import objects
     from .operators.streets import streets
-    from .session import get_session
     from .sinks import (
         boundaries_geojson,
         boundaries_json_lines,
@@ -79,8 +95,6 @@ def main(argv=None, spark=None, out=None):
         streets_json_lines,
     )
     from .sources.fixtures import load_entities
-
-    spark = spark or get_session(app_name="osm-pbf2json-spark-cli")
 
     path = args.path
     if path.endswith(".pbf"):
@@ -109,7 +123,6 @@ def main(argv=None, spark=None, out=None):
         else:
             for r in boundaries_json_lines(df).collect():
                 out.write(r["value"] + "\n")
-    return 0
 
 
 if __name__ == "__main__":

@@ -16,6 +16,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+# rows in the deterministic training sample (`_pq_sample`) that the IVF,
+# PQ and OPQ trainers draw, and that cosine_topk_ivfpq shares among them
+PQ_SAMPLE_ROWS = 2048
+
 
 def _dot(x, y):
     return F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda s, z: s + z)
@@ -73,7 +77,7 @@ def _plane_buckets(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
 def train_ivf_centroids(
     df: DataFrame,
     n_centroids: int = 16,
-    sample_rows: int = 2048,
+    sample_rows: int = PQ_SAMPLE_ROWS,
     iters: int = 8,
     vec_col: str = "embedding",
     seed: int = 42,
@@ -236,7 +240,7 @@ def train_pq_codebooks(
     df: DataFrame,
     m: int = 8,
     k_codes: int = 16,
-    sample_rows: int = 2048,
+    sample_rows: int = PQ_SAMPLE_ROWS,
     iters: int = 8,
     vec_col: str = "embedding",
     seed: int = 42,
@@ -262,7 +266,7 @@ def train_pq_codebooks_residual(
     centroids: np.ndarray,
     m: int = 8,
     k_codes: int = 16,
-    sample_rows: int = 2048,
+    sample_rows: int = PQ_SAMPLE_ROWS,
     iters: int = 8,
     vec_col: str = "embedding",
     seed: int = 42,
@@ -286,7 +290,7 @@ def train_opq(
     centroids: np.ndarray | None = None,
     m: int = 8,
     k_codes: int = 16,
-    sample_rows: int = 2048,
+    sample_rows: int = PQ_SAMPLE_ROWS,
     iters: int = 8,
     outer: int = 6,
     vec_col: str = "embedding",
@@ -547,7 +551,7 @@ def cosine_topk_ivfpq(
     # value-identical to each trainer collecting its own, and at scale
     # it halves the training-time corpus scans
     shared = (
-        _pq_sample(df, vec_col, 2048)
+        _pq_sample(df, vec_col, PQ_SAMPLE_ROWS)
         if centroids is None or codebooks is None
         else None
     )

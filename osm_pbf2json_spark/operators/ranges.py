@@ -34,7 +34,12 @@ def interval_overlap_join(
     a small-estimate input would evaluate every candidate pair in the
     narrow probe stage; the pinned shuffle also redistributes a narrow
     input, so no explicit pre-widening exchange is applied (see
-    bbox_self_join)."""
+    bbox_self_join).
+
+    The shuffled-hash build side is held in memory per partition and
+    cannot spill the way sort-merge does, so one hot (key, bin) can OOM
+    an executor; split such keys with the salting helpers in
+    `plans/partitioning.py` (`hot_keys`, `salted_join`)."""
 
     def bin_of(c):
         return F.floor(c / bin_size).cast("long")

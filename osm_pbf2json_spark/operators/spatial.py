@@ -434,7 +434,13 @@ def pip_join_cells(
     The point side needs no explicit widening: the pinned shuffle join
     redistributes it across `spark.sql.shuffle.partitions` anyway, so
     the ray-cast refine always runs at full parallelism and a narrow
-    single-file input costs no extra round-robin exchange."""
+    single-file input costs no extra round-robin exchange.
+
+    Skew: the join is pinned to SHUFFLE_HASH, whose build side (the
+    polygon coverings) is held in memory per partition and cannot spill
+    the way sort-merge does. A hot cell covered by many polygons can
+    therefore OOM an executor; split such keys with the salting helpers
+    in `plans/partitioning.py` (`hot_keys`, `salted_join`)."""
     s = 360.0 / (1 << level)
 
     pts = points.withColumn(
@@ -544,6 +550,12 @@ def bbox_self_join(
     a single-file input replicated far beyond its size (measured: a
     round-robin exchange costs ~3× the whole query at bench scale,
     and helps only above ~4× replication on 32 cores).
+
+    The shuffled-hash build side is held in memory per partition and
+    cannot spill the way sort-merge does, so one hot cell (many boxes
+    over the same spot) can OOM an executor; split such keys with the
+    salting helpers in `plans/partitioning.py` (`hot_keys`,
+    `salted_join`).
     """
     withc = boxes.withColumn(
         "_cell", F.explode(_bbox_cells(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"), pad, cell))

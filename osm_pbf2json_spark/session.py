@@ -19,6 +19,17 @@ the same Arrow / AQE / shuffle posture:
   `spark.executorEnv.PYTHONPATH` so the daemon can be started from any
   cwd, including `spark-submit --py-files` jobs. Sessions not built here
   keep Spark's default daemon.
+- Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`)
+  holds `CODEGEN_CACHE_ENTRIES` classes instead of 100. One `objects`
+  call on a small table generates about 180-220 classes, and a session
+  that repeats objects + boundaries + streets CLI commands about 240. At
+  100 entries every repeat command evicted its own classes and compiled
+  them again with Janino (about 260 compiles per CLI round), and the JIT
+  then compiled the new classes again. The conf is static: the JVM reads
+  it once, when its codegen cache is first built, so only sessions that
+  `get_session` starts get it; the external-driver session of
+  `__spark_entry__.py` keeps Spark's default. `extra_conf` overrides it
+  like any other conf.
 """
 
 from __future__ import annotations
@@ -28,6 +39,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# Spark's compiled-class cache size (default 100). Distinct classes
+# measured: 238 for a perfbench osm_cli session (repeated objects +
+# boundaries + streets commands), 440 for a bench.py run, 1,481 for the
+# whole test suite; 4096 keeps at least 2x headroom over the largest.
+CODEGEN_CACHE_ENTRIES = 4096
 # the directory holding the package, or the --py-files zip it came from
 IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -59,6 +75,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "osm_pbf2json_spark._daemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     conf = dict(extra_conf or {})
     paths = [IMPORT_ROOT, *conf.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)]

@@ -13,6 +13,7 @@ from osm_pbf2json_spark.plans.partitioning import (
     salted_join,
 )
 from osm_pbf2json_spark.sources.fixtures import ensure_fixture
+from tests.test_objects import make_tables
 
 GONTARD_SEGMENTS = [
     [
@@ -83,6 +84,29 @@ def test_cli_boundaries(spark):
     lines = sorted(out.getvalue().strip().split("\n"))
     assert len(lines) == 2
     assert "Kreuzberg" in lines[0] and "Mitte" in lines[1]
+
+
+def test_cli_releases_what_it_pins(spark, tmp_path):
+    """A session that runs many commands keeps no persistent RDD a
+    command pinned: the closure's localCheckpoints are released."""
+    t = make_tables(
+        spark,
+        nodes=[(1, 52.0, 6.0, {}), (2, 50.0, 6.0, {}), (43, 52.0, 8.0, {"x": "n"})],
+        ways=[(10, [1, 2], {"x": "w"})],
+        relations=[(44, [("way", 10, "s"), ("node", 43, "s")], {"x": "y"})],
+    )
+    for name in ("nodes", "ways", "relations"):
+        getattr(t, name).write.parquet(str(tmp_path / f"{name}.parquet"))
+
+    def persistent():  # the GC may release earlier tests' RDDs meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    for _ in range(2):
+        out = io.StringIO()
+        cli_main([str(tmp_path), "objects", "-t", "x"], spark=spark, out=out)
+        assert len(out.getvalue().splitlines()) == 3
+        assert persistent() <= before
 
 
 def test_salted_join_equivalence(spark):

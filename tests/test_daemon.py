@@ -75,7 +75,11 @@ def test_get_session_selects_daemon_and_merges_pythonpath(monkeypatch):
     conf = session.get_session(extra_conf={"spark.executorEnv.PYTHONPATH": caller})
 
     assert conf["spark.python.daemon.module"] == "osm_pbf2json_spark._daemon"
+    assert conf["spark.sql.codegen.cache.maxEntries"] == str(session.CODEGEN_CACHE_ENTRIES)
     assert conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep) == [
         session.IMPORT_ROOT,
         "/opt/libs",
     ]
+
+    override = session.get_session(extra_conf={"spark.sql.codegen.cache.maxEntries": "64"})
+    assert override["spark.sql.codegen.cache.maxEntries"] == "64"

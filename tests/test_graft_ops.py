@@ -805,6 +805,13 @@ def test_png_invalid_filter_raises():
         decode_png(payload)
 
 
+def test_pq_trainers_share_the_sample_size():
+    import inspect
+
+    trainers = (ann.train_ivf_centroids, ann.train_pq_codebooks, ann.train_pq_codebooks_residual, ann.train_opq)
+    assert {inspect.signature(f).parameters["sample_rows"].default for f in trainers} == {ann.PQ_SAMPLE_ROWS}
+
+
 def test_pq_recall_and_self_hit(spark):
     """Trained PQ (m=8 subspaces, 16 codes) vs brute force: self-query
     ranks itself first; recall@10 clears a sane floor for random-ish

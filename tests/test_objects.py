@@ -144,6 +144,32 @@ def test_nested_relations(spark):
     assert coords == [(6.0, 50.0), (8.0, 52.0), (6.0, 52.0), (6.0, 50.0)]
 
 
+def test_repeat_objects_call_compiles_no_classes(spark):
+    # one objects() call generates more classes than Spark's default
+    # codegen cache (100 entries) holds; get_session sizes the cache so a
+    # repeat call reuses every one. AQE is off because its re-planning
+    # depends on which stage finishes first, and a variant plan is new code.
+    t = make_tables(
+        spark,
+        nodes=[(1, 52.0, 6.0, {}), (2, 50.0, 6.0, {}), (43, 52.0, 8.0, {})],
+        relations=[
+            (42, [("node", 1, "s"), ("node", 2, "s")], {}),
+            (44, [("relation", 42, "s"), ("node", 43, "s")], {"x": "y"}),
+        ],
+    )
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        objects(t, "x", retain_coordinates=True).collect()
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        objects(t, "x", retain_coordinates=True).collect()
+        compiled = compiles.METRIC_COMPILATION_TIME().getCount() - before
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert compiled == 0
+
+
 def test_nested_relation_cycle(spark):
     # mod.rs:416-435: cycle tolerated; root resolves to the node only
     t = make_tables(
