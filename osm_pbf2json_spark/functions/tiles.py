@@ -70,17 +70,6 @@ def hex_unpack(cell):
     return res, q, r
 
 
-def hex_center(cell):
-    """Cell id → (lon, lat) of the hex center."""
-    res, q, r = hex_unpack(cell)
-    size = HEX_BASE_SIZE / HEX_APERTURE ** (res.astype(np.float64) / 2.0)
-    # inverse of hex_cell's forward transform:
-    # qf = (√3/3·lon − lat/3)/s ; rf = (2/3·lat)/s
-    lat = 1.5 * r * size
-    lon = (q * size + lat / 3.0) * (3.0 / _SQRT3)
-    return lon, lat
-
-
 def hex_k_ring(cell: int, k: int) -> np.ndarray:
     """All cells within hex-grid distance k of `cell` (single query cell;
     k-ring for the kNN expansion loop)."""
@@ -95,16 +84,6 @@ def hex_k_ring(cell: int, k: int) -> np.ndarray:
                 | np.int64(r + dr + _Q_OFF)
             )
     return np.array(out, dtype=np.int64)
-
-
-def hex_ring(cell: int, k: int) -> np.ndarray:
-    """Exactly the cells at hex distance k (hollow ring)."""
-    if k == 0:
-        return np.array([cell], dtype=np.int64)
-    inner = set(hex_k_ring(cell, k - 1).tolist())
-    return np.array(
-        [c for c in hex_k_ring(cell, k).tolist() if c not in inner], dtype=np.int64
-    )
 
 
 def hex_covering_bbox(
@@ -315,18 +294,3 @@ def quad_covering_bbox_batch(
     cells = (np.int64(level) << np.int64(58)) | _hilbert_d(level, ii, jj)
     return [cells[offs[b] : offs[b] + counts[b]] for b in range(B)]
 
-
-# --- distance ----------------------------------------------------------------
-
-
-def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Great-circle distance in meters (vectorized)."""
-    r = 6_371_008.8
-    p1 = np.radians(np.asarray(lat1, dtype=np.float64))
-    p2 = np.radians(np.asarray(lat2, dtype=np.float64))
-    dp = p2 - p1
-    dl = np.radians(np.asarray(lon2, dtype=np.float64)) - np.radians(
-        np.asarray(lon1, dtype=np.float64)
-    )
-    a = np.sin(dp / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2.0) ** 2
-    return 2.0 * r * np.arcsin(np.sqrt(a))

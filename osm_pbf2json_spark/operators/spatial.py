@@ -796,77 +796,14 @@ def hex_kring_join(
     )
 
 
-def quad_tile_cols(
-    df: DataFrame, level: int, lon_col="lon", lat_col="lat", out="tile"
-) -> DataFrame:
-    """Hilbert quad cell id as a chain of cheap projections — pure
-    Catalyst, bit-identical to functions.tiles.quad_cell.
-
-    The classic xy→d bit-rotation loop is unrolled into one withColumn
-    step per curve level. Each step's outputs are referenced multiple
-    times by the next, and CollapseProject keeps multiply-referenced
-    non-cheap expressions materialized (SPARK-36718), so the plan stays
-    LINEAR in `level` instead of the 2^level blow-up a single nested
-    Column expression would suffer.
-
-    Measured tradeoff (sf0.1, local[32]): standalone encode is on par
-    with the Arrow kernel, but FUSED into a larger stage (explode+agg
-    pyramids) the long codegen chain drops off the JIT fast path and
-    runs ~2.6× slower — so point_tile defaults to the Arrow kernel for
-    quad and this stays the option for Python-worker-free plans
-    (streaming without worker spin-up, environments without Python on
-    executors)."""
-    n = 1 << level
-    zero = F.lit(0).cast("long")
-    fx = (F.col(lon_col) - F.lit(-180.0)) / F.lit(360.0)
-    fy = (F.col(lat_col) - F.lit(-90.0)) / F.lit(180.0)
-    df = df.withColumn(
-        "_qx",
-        F.greatest(zero, F.least(F.lit(n - 1).cast("long"), (fx * n).cast("long"))),
-    ).withColumn(
-        "_qy",
-        F.greatest(zero, F.least(F.lit(n - 1).cast("long"), (fy * n).cast("long"))),
-    ).withColumn("_qd", zero)
-    s = n >> 1
-    while s > 0:
-        sl = F.lit(s).cast("long")
-        df = (
-            df.withColumn("_rx", (F.col("_qx").bitwiseAND(sl) > 0).cast("long"))
-            .withColumn("_ry", (F.col("_qy").bitwiseAND(sl) > 0).cast("long"))
-        )
-        df = df.withColumn(
-            "_qd",
-            F.col("_qd")
-            + F.lit(s * s).cast("long")
-            * (F.col("_rx") * 3).bitwiseXOR(F.col("_ry")),
-        )
-        flip = (F.col("_ry") == 0) & (F.col("_rx") == 1)
-        swap = F.col("_ry") == 0
-        df = (
-            df.withColumn(
-                "_xf", F.when(flip, F.lit(s - 1) - F.col("_qx")).otherwise(F.col("_qx"))
-            )
-            .withColumn(
-                "_yf", F.when(flip, F.lit(s - 1) - F.col("_qy")).otherwise(F.col("_qy"))
-            )
-        )
-        df = (
-            df.withColumn("_qx", F.when(swap, F.col("_yf")).otherwise(F.col("_xf")))
-            .withColumn("_qy", F.when(swap, F.col("_xf")).otherwise(F.col("_yf")))
-        )
-        s >>= 1
-    df = df.withColumn(
-        out, F.shiftleft(F.lit(level).cast("long"), 58).bitwiseOR(F.col("_qd"))
-    )
-    return df.drop("_qx", "_qy", "_qd", "_rx", "_ry", "_xf", "_yf")
-
-
 def point_tile(points: DataFrame, res: int, lon_col="lon", lat_col="lat", grid="hex"):
     """Column helper: tile id of each point. Hex is PURE Catalyst
     (hex_cell_col — small expression, stays on the codegen fast path);
-    quad uses the Arrow batch kernel, which measures ~2.6× faster than
-    the unrolled Hilbert projection chain when fused into larger stages
-    (see quad_tile_cols for the Python-worker-free alternative)."""
+    quad uses the Arrow batch kernel: a pure-Catalyst Hilbert encode (the
+    curve loop unrolled into one projection per level) measured on par
+    standalone but ~2.6× slower fused into explode+agg stages (sf0.1,
+    local[32]), where its long codegen chain falls off the JIT fast
+    path."""
     if grid == "hex":
         return points.withColumn(
             "tile", hex_cell_col(F.col(lon_col), F.col(lat_col), res)

@@ -6,10 +6,11 @@ events into the same tile space the batch engine queries:
 
 - `streaming_tile_counts`: watermarked sliding-window counts per tile —
   late data beyond the watermark is dropped, windows close incrementally.
-- `streaming_pip_flags`: per-microbatch broadcast PIP annotation — the
-  stateless mapInPandas kernel works unchanged on streaming frames.
 
-Both operate on any streaming DataFrame with (ts timestamp, lon, lat).
+It operates on any streaming DataFrame with (ts timestamp, lon, lat).
+Per-microbatch PIP annotation needs no wrapper: the batch
+`operators.spatial.pip_join_broadcast` is a stateless mapInPandas and
+works unchanged on streaming frames.
 """
 
 from __future__ import annotations
@@ -39,34 +40,3 @@ def streaming_tile_counts(
     return tiled.groupBy(win.alias("w"), "tile").agg(
         F.count("*").alias("n_events")
     ).select(F.col("w.start").alias("window_start"), "tile", "n_events")
-
-
-def streaming_pip_flags(stream_df: DataFrame, polygon_rows: list[dict]) -> DataFrame:
-    """Stateless streaming PIP annotation via the batch broadcast kernel."""
-    from ..operators.spatial import pip_join_broadcast
-
-    return pip_join_broadcast(stream_df, polygon_rows, out_col="polygon_key")
-
-
-def streaming_dedup(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: drop rows whose normalized-text fingerprint
-    already appeared within the watermark horizon.
-
-    `dropDuplicatesWithinWatermark` keeps state only as long as the
-    watermark — the 100-TB-stream shape, unlike plain dropDuplicates
-    whose key state grows without bound. The fingerprint is the same
-    Catalyst expression the batch `exact_dedup` groups on, so batch and
-    streaming dedup agree on what "duplicate" means."""
-    from ..functions.text import fingerprint
-
-    return (
-        stream_df.withColumn("_fp", fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_fp"])
-        .drop("_fp")
-    )

@@ -311,44 +311,10 @@ def test_hex_cell_col_bit_parity_and_kring_join(spark):
     assert "pythonUDF" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_quad_tile_cols_bit_parity(spark):
-    """The unrolled-Hilbert projection chain is bit-identical to the
-    NumPy quad_cell kernel at every level, including world-edge points,
-    with a Python-free linear plan."""
-    import numpy as np
-
-    from osm_pbf2json_spark.functions import tiles as T
-    from osm_pbf2json_spark.operators.spatial import point_tile
-
-    rng = np.random.default_rng(3)
-    pts = [
-        (i, float(x), float(y))
-        for i, (x, y) in enumerate(
-            rng.uniform([-180, -90], [180, 90], size=(2000, 2))
-        )
-    ]
-    pts += [
-        (9990, -180.0, -90.0),
-        (9991, 180.0, 90.0),
-        (9992, 0.0, 0.0),
-        (9993, 179.999999, 89.999999),
-    ]
-    from osm_pbf2json_spark.operators.spatial import quad_tile_cols
-
-    df = spark.createDataFrame(pts, "id long, lon double, lat double")
-    for lvl in (0, 5, 12, 20):
-        got = {r["id"]: r["tile"] for r in quad_tile_cols(df, lvl).collect()}
-        want = T.quad_cell(
-            np.array([p[1] for p in pts]), np.array([p[2] for p in pts]), lvl
-        )
-        assert all(got[p[0]] == int(w) for p, w in zip(pts, want)), lvl
-    plan = quad_tile_cols(df, 12)._jdf.queryExecution().executedPlan().toString()
-    assert "pythonUDF" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_covering_guards_reject_degenerate_bboxes():
     """A corrupt world-spanning geometry fails loudly at covering time
-    (with the offending bbox in the message) instead of OOMing a task."""
+    (with the offending bbox in the message) instead of OOMing a task;
+    a bbox beyond the world bounds and an empty batch cover nothing."""
     import pytest
 
     from osm_pbf2json_spark.functions import tiles as T
@@ -362,6 +328,22 @@ def test_covering_guards_reject_degenerate_bboxes():
     assert len(T.quad_covering_bbox(13.0, 52.0, 13.2, 52.1, 9, max_cells=None)) > 0
     # adaptive covering coarsens instead of raising
     assert len(T.quad_covering_bbox(-180, -90, 180, 90, 15, max_cells=256)) <= 256
+    # a bbox entirely beyond the world bounds yields an EMPTY quad
+    # covering in the batch kernel, matching the scalar one, instead of
+    # a negative-dimension crash
+    scalar = T.quad_covering_bbox(190.0, 0.0, 195.0, 1.0, 10, max_cells=None)
+    batch = T.quad_covering_bbox_batch(
+        np.array([190.0, 0.0]), np.array([0.0, 0.0]),
+        np.array([195.0, 1.0]), np.array([1.0, 1.0]), 10,
+    )
+    assert len(scalar) == 0 and len(batch[0]) == 0
+    want = T.quad_covering_bbox(0.0, 0.0, 1.0, 1.0, 10, max_cells=None)
+    assert (batch[1] == want).all()
+    # empty-batch guard on the hex side
+    empty = T.hex_covering_bbox_batch(
+        np.zeros(0), np.zeros(0), np.zeros(0), np.zeros(0), 7
+    )
+    assert empty == []
 
 
 def test_knn_grid_size_caps_histogram():
