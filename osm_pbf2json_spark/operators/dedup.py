@@ -177,6 +177,27 @@ def minhash_signatures(
     )
 
 
+def merge_signatures(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Minhash signatures are MERGEABLE: sig(Sa ∪ Sb) = elementwise
+    min(sig(Sa), sig(Sb)). Given per-batch signature tables keyed by id,
+    this derives the combined index without touching text again —
+    incremental dedup-index maintenance costs O(|new batch|), not
+    O(corpus). Pure zip_with/least, full-outer on id."""
+    return (
+        a.alias("a")
+        .join(b.alias("b"), "id", "full_outer")
+        .select(
+            "id",
+            F.when(F.col("a.sig").isNull(), F.col("b.sig"))
+            .when(F.col("b.sig").isNull(), F.col("a.sig"))
+            .otherwise(
+                F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: F.least(x, y))
+            )
+            .alias("sig"),
+        )
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.7,
@@ -297,6 +318,25 @@ def contamination_hits(
         tr.join(F.broadcast(ev), "h")
         .groupBy("id")
         .agg(F.count("*").alias("n_hits"))
+    )
+
+
+def decontaminate(
+    train: DataFrame,
+    eval_df: DataFrame,
+    n: int = 13,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_hits: int = 1,
+    hash: str = "xxh",
+) -> DataFrame:
+    """Train rows with fewer than `min_hits` eval n-gram hits (anti-join
+    against the flagged set) — the output corpus is safe to train on."""
+    flagged = contamination_hits(
+        train, eval_df, n=n, text_col=text_col, id_col=id_col, hash=hash
+    ).filter(F.col("n_hits") >= min_hits)
+    return train.join(
+        flagged.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
 
 

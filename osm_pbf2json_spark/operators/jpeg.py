@@ -14,9 +14,9 @@ round-trip tested without golden binaries from external tools; the
 decoder is additionally pinned by a hand-constructed spec-literal
 golden in tests (solid-gray block with known DC coefficient).
 
-Like the PNG codec in multimodal.py, this is the engine's answer to
-"multimodal columns" at 100 TB: the decode itself is a per-payload CPU
-kernel invoked from mapInPandas — embarrassingly parallel, no shuffle.
+No engine path calls this codec: the `multimodal.decode_media`
+dispatcher that used it is gone, and the module stays only until its
+tests are retired with it (ROADMAP direction 3).
 """
 
 from __future__ import annotations
@@ -239,8 +239,7 @@ def decode_jpeg(payload: bytes, max_pixels: int = 64_000_000):
     NotImplementedError for arithmetic-coded / hierarchical / 12-bit
     streams and ValueError for malformed data — truncation, missing
     tables, and bad segment lengths are all normalized to ValueError
-    here so callers get one exception contract (a corrupt crawl payload
-    must route to format-NULL, not fail the Spark job). `max_pixels`
+    here so callers get one exception contract. `max_pixels`
     bounds allocation against crafted headers (a 2-byte dimension field
     can declare a 65535² image — a 34 GB plane — from a 200-byte
     payload)."""
@@ -402,7 +401,7 @@ def _decode_jpeg(payload: bytes, max_pixels: int):
     if adobe_transform == 0 or cids == (0x52, 0x47, 0x42):  # 'R','G','B'
         # Adobe APP14 transform 0 / RGB component ids: planes are stored
         # as R,G,B — applying the YCbCr matrix would silently produce
-        # garbage colors, so route to the stub path instead
+        # garbage colors, so refuse instead
         raise NotImplementedError("RGB-coded 3-component JPEG (no YCbCr)")
     Y, Cb, Cr = chans
     r = Y + 1.402 * (Cr - 128.0)

@@ -7,11 +7,14 @@ they are:
 - stable under data growth: a key keeps its split when new rows arrive,
   which is what training/eval contamination control needs;
 - pushdown-friendly: the predicate is a plain Catalyst expression.
+
+`stratified_sample_exact` is the exception — it needs per-group counts
+(one small agg) to hit exact per-stratum rates via a window rank.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 _BUCKETS = 1_000_000
@@ -65,3 +68,25 @@ def hash_split(
         for i in reversed(range(len(fractions) - 1)):
             expr = F.when(b < int(sum(fractions[: i + 1]) * _BUCKETS), F.lit(i)).otherwise(expr)
     return df.withColumn(split_col, expr.cast("int"))
+
+
+def stratified_sample_exact(
+    df: DataFrame,
+    rate: float,
+    strata_cols=("lang",),
+    key_cols=("doc_id",),
+) -> DataFrame:
+    """EXACTLY ceil(rate × n) rows per stratum, chosen deterministically
+    (smallest key hashes win — a uniform draw under xxhash64). One count
+    agg + one window; no driver loop, no rand()."""
+    strata = list(strata_cols)
+    counts = df.groupBy(*strata).agg(F.count("*").alias("_n"))
+    w = Window.partitionBy(*strata).orderBy(
+        _bucket(key_cols, 0).asc(), *[F.col(c).asc() for c in key_cols]
+    )
+    return (
+        df.join(F.broadcast(counts), strata)
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= F.ceil(F.col("_n") * F.lit(rate)))
+        .drop("_n", "_rk")
+    )

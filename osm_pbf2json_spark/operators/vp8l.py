@@ -1,8 +1,7 @@
 """VP8L (WebP-lossless) bitstream decoder, written from the public
 "WebP Lossless Bitstream Specification" (Google, also RFC 9649 §3-5).
-Pure stdlib/NumPy like the sibling JPEG/GIF/PNG/TIFF decoders — no
-media libraries exist in this environment, and the graft's multimodal
-tier treats every decoder as a from-scratch spec implementation.
+Pure stdlib/NumPy like the sibling JPEG decoder, written as a
+from-scratch spec implementation.
 
 Covered (the full still-image coding model):
 
@@ -30,8 +29,9 @@ round-trip tests exercise the decoder on arbitrary images without any
 same-path coupling between the two directions.
 
 Reference parity note: the reference repo (osm-pbf2json) has no image
-path at all — this module exists for the graft's multimodal columns
-(SURVEY §2 graft tier), mirroring how jpeg.py backs decode_media.
+path at all, and no engine path calls this decoder since the
+`multimodal.decode_media` dispatcher is gone; the module stays only
+until its tests are retired with it (ROADMAP direction 3).
 """
 
 from __future__ import annotations
@@ -442,7 +442,7 @@ def _inv_color_index(
 def decode_vp8l(chunk: bytes, max_pixels: int = 64_000_000):
     """VP8L chunk payload (starting at the 0x2F signature) →
     (width, height, HxWx3 uint8 RGB, alpha_used). Raises ValueError on
-    malformed streams (decode_media routes those to format-NULL)."""
+    malformed streams."""
     if not chunk or chunk[0] != 0x2F:
         raise ValueError("bad VP8L signature")
     br = _BitReader(chunk[1:])

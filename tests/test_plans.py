@@ -98,6 +98,27 @@ def test_salted_join_is_deterministic_expression(spark):
     assert "monotonically" not in plan and "rand(" not in plan
 
 
+def test_bucketed_join_no_exchange(spark, tmp_path):
+    """Same-bucketed tables join with NO Exchange on either side — the
+    pay-the-shuffle-once posture for repeated big x big key joins."""
+    from osm_pbf2json_spark.plans.bucketing import bucketed_join, write_bucketed
+
+    a = spark.range(0, 10000).selectExpr("id AS k", "id * 2 AS va")
+    b = spark.range(0, 10000).selectExpr("id AS k", "id * 3 AS vb")
+    try:
+        write_bucketed(a, "bkt_a", "k", n_buckets=8)
+        write_bucketed(b, "bkt_b", "k", n_buckets=8)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        joined = bucketed_join(spark, "bkt_a", "bkt_b", "k")
+        plan = _plan(joined)
+        assert "Exchange" not in plan, plan
+        assert joined.count() == 10000
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.sql("DROP TABLE IF EXISTS bkt_a")
+        spark.sql("DROP TABLE IF EXISTS bkt_b")
+
+
 def test_cell_split_polygons_stay_off_the_cell_join(spark):
     """Shuffle-volume gate for split_streets_by_cells: the cell-explode
     candidate join must shuffle ids + bboxes ONLY — no Exchange in the

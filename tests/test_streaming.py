@@ -64,6 +64,188 @@ def test_streaming_pip_flags(spark, tmp_path):
     assert got == {1: "A", 2: None}
 
 
+def test_streaming_dedup(spark, tmp_path):
+    from osm_pbf2json_spark.streaming.tiles_stream import streaming_dedup
+
+    src = str(tmp_path / "dsrc")
+    os.makedirs(src)
+    batch = spark.createDataFrame(
+        [
+            ("2024-01-01 00:00:01", 1, "alpha beta"),
+            ("2024-01-01 00:00:02", 2, "ALPHA   beta!"),  # same fingerprint as 1
+            ("2024-01-01 00:00:03", 3, "gamma delta"),
+            ("2024-01-01 00:00:04", 4, "alpha beta"),      # dup again
+        ],
+        "ts_s string, doc_id long, text string",
+    ).select(F.to_timestamp("ts_s").alias("ts"), "doc_id", "text")
+    batch.write.parquet(src, mode="overwrite")
+
+    stream = spark.readStream.schema("ts timestamp, doc_id long, text string").parquet(src)
+    q = (
+        streaming_dedup(stream)
+        .writeStream.format("memory")
+        .queryName("dedup_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = spark.sql("select * from dedup_stream").collect()
+    # one survivor per distinct normalized text
+    texts = sorted({r["text"].lower().replace("!", "").split()[0] for r in rows})
+    assert len(rows) == 2 and texts == ["alpha", "gamma"]
+
+
+def test_incremental_signature_index(spark, tmp_path):
+    """foreachBatch index maintenance: two microbatches (one file each)
+    min-merged into a versioned index that equals the batch signatures
+    of the full corpus."""
+    from osm_pbf2json_spark.operators.dedup import minhash_signatures
+    from osm_pbf2json_spark.streaming.index_maintain import (
+        maintain_signature_index,
+        read_signature_index,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
+    src = str(tmp_path / "docs_src")
+    # one file per half -> maxFilesPerTrigger=1 makes two microbatches
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
+        src + "/p=0", mode="overwrite"
+    )
+    docs.filter(F.col("doc_id") % 2 != 0).coalesce(1).write.parquet(
+        src + "/p=1", mode="overwrite"
+    )
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/p=*")
+    )
+    q = maintain_signature_index(
+        stream, str(tmp_path / "idx"), str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(180)
+    idx = read_signature_index(spark, str(tmp_path / "idx"))
+    full = minhash_signatures(docs)
+    assert idx.count() == full.count() == 60
+    diff = (
+        idx.alias("i")
+        .join(full.alias("f"), "id")
+        .filter(F.col("i.sig") != F.col("f.sig"))
+        .count()
+    )
+    assert diff == 0
+
+
+def test_signature_index_retry_idempotent(spark, tmp_path):
+    """A re-run epoch reads the version strictly OLDER than itself, so
+    retrying after a committed write neither crashes ('overwrite a path
+    being read') nor double-merges."""
+    import pyspark.sql.functions as F
+    from osm_pbf2json_spark.operators.dedup import minhash_signatures
+    from osm_pbf2json_spark.streaming.index_maintain import read_signature_index
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(40)
+    idx = str(tmp_path / "idx")
+    sigs = minhash_signatures(docs)
+    sigs.write.mode("overwrite").parquet(idx + "/v=0")
+    # simulate epoch 1 running twice: both runs read v=0, not v=1
+    assert read_signature_index(spark, idx, before=1).count() == 40
+    sigs.write.mode("overwrite").parquet(idx + "/v=1")
+    again = read_signature_index(spark, idx, before=1)
+    assert again.count() == 40  # still v=0
+    assert read_signature_index(spark, idx).count() == 40  # latest = v=1
+
+
+def test_signature_index_fresh_checkpoint_existing_index(spark, tmp_path):
+    """Index versions come from the index (max+1), NOT the epoch id: a
+    fresh checkpoint pointed at an existing index dir must fold the new
+    batch into the prior signatures instead of silently losing them
+    (epoch restarts at 0; the old scheme wrote v=0, pruned it, and kept
+    serving the stale max)."""
+    from osm_pbf2json_spark.operators.dedup import minhash_signatures
+    from osm_pbf2json_spark.streaming.index_maintain import (
+        maintain_signature_index,
+        read_signature_index,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
+    half_a = docs.filter(F.col("doc_id") % 2 == 0)
+    half_b = docs.filter(F.col("doc_id") % 2 != 0)
+    src_a, src_b = str(tmp_path / "src_a"), str(tmp_path / "src_b")
+    half_a.coalesce(1).write.parquet(src_a, mode="overwrite")
+    half_b.coalesce(1).write.parquet(src_b, mode="overwrite")
+    idx = str(tmp_path / "idx")
+
+    # run 1: checkpoint ck1, consumes half_a
+    q = maintain_signature_index(
+        spark.readStream.schema(docs.schema).parquet(src_a),
+        idx,
+        str(tmp_path / "ck1"),
+    )
+    q.awaitTermination(120)
+    assert read_signature_index(spark, idx).count() == half_a.count()
+
+    # run 2: FRESH checkpoint ck2 (epoch ids restart at 0), same index
+    q = maintain_signature_index(
+        spark.readStream.schema(docs.schema).parquet(src_b),
+        idx,
+        str(tmp_path / "ck2"),
+    )
+    q.awaitTermination(120)
+    merged = read_signature_index(spark, idx)
+    full = minhash_signatures(docs)
+    assert merged.count() == 60
+    diff = (
+        merged.alias("i")
+        .join(full.alias("f"), "id")
+        .filter(F.col("i.sig") != F.col("f.sig"))
+        .count()
+    )
+    assert diff == 0
+
+
+def test_signature_index_crashed_epoch_marker_pruned(spark, tmp_path):
+    """A marker from an epoch that crashed BEFORE its data write commits
+    claims a version that never commits. Once retention passes that
+    version, the marker must be pruned too — otherwise _epochs/ leaks
+    entries and max(claims) permanently advances the version counter."""
+    import os
+
+    from osm_pbf2json_spark.streaming.index_maintain import (
+        _claimed_versions,
+        maintain_signature_index,
+        read_signature_index,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(30)
+    idx = str(tmp_path / "idx")
+    # fake crashed epoch: claims v=0, never writes v=0 data
+    os.makedirs(idx + "/_epochs")
+    with open(idx + "/_epochs/epoch-deadbeef0000-0", "w") as f:
+        f.write("0")
+
+    for i, src in enumerate(("src_a", "src_b", "src_c")):
+        p = str(tmp_path / src)
+        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
+            p, mode="overwrite"
+        )
+        q = maintain_signature_index(
+            docs.sparkSession.readStream.schema(docs.schema).parquet(p),
+            idx,
+            str(tmp_path / f"ck{i}"),
+            keep_versions=2,
+        )
+        q.awaitTermination(120)
+
+    # the 3 real epochs allocated v=1..3 (crashed claim advanced the
+    # counter once — acceptable); retention keeps v=2,3 and the orphan
+    # marker for never-committed v=0 is gone
+    claims = _claimed_versions(idx)
+    assert "epoch-deadbeef0000-0" not in claims
+    assert all(v >= 2 for v in claims.values()), claims
+    assert read_signature_index(spark, idx).count() == 30
+
+
 def test_pbf_unsupported_compression_raises(tmp_path):
     """A Blob carrying an lzma/lz4/zstd payload raises instead of being
     silently skipped (silent entity loss on files from other writers)."""
