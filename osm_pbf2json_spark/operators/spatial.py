@@ -6,9 +6,11 @@ Spark-native operators sized for 10¹²-row inputs:
 
 - `pip_join_broadcast`: the north rule's flagship — polygons (small side:
   admin boundaries are ≤10⁵ globally) are indexed into a driver-built
-  cell→candidates map and BROADCAST; points stream through a mapInPandas
-  kernel that does covering-cell lookup (filter) + vectorized ray-casting
-  (refine). No shuffle of the big side at all.
+  cell→candidates map with a true-hit answer per cell and BROADCAST;
+  points stream through a mapInPandas kernel that does covering-cell
+  lookup (filter), takes the answer of cells no edge comes near, and
+  ray-casts the rest in one vectorized pass (refine). No shuffle of the
+  big side at all.
 - `pip_join_cells`: large×large fallback — both sides exploded to
   covering cells, Catalyst plans a plain shuffle/broadcast hash equi-join
   on cell, then the exact test refines. Skewed hot cells are handled by
@@ -33,10 +35,18 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from ..functions import tiles as T
-from ..functions.geometry import pip_contains_col, points_in_polygons
+from ..functions.geometry import pip_contains_col
 
 
 # --- flagship: broadcast PIP join -------------------------------------------
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated aranges: starts[i] .. starts[i] + counts[i] - 1 for
+    each i, in order (the flat index of a CSR pair expansion)."""
+    return np.arange(int(counts.sum())) + np.repeat(
+        starts - (np.cumsum(counts) - counts), counts
+    )
 
 
 class BroadcastPolygonIndex:
@@ -45,13 +55,25 @@ class BroadcastPolygonIndex:
     polygons: list of dicts {key: any, polygons: [[ring=[(lon,lat)...]]]}.
     Cells at `level` covering each polygon bbox map to candidate indexes —
     the NumPy analog of the reference's STR-bulk-loaded RTree
-    (mod.rs:175, admin.rs:8-15).
+    (mod.rs:175, admin.rs:8-15). Each cell also holds a true-hit answer
+    (the interior-cell filter of ACT, EDBT 2020): a cell that no polygon
+    edge comes near has one answer for every point in it, decided once
+    here, so only points in cells an edge passes through are ray-cast.
     """
 
     _OFF = 1 << 25  # planar cell ids stay positive for any earthly coord
     # a cell id packs cx + _OFF and cy + _OFF into 26 bits each; earthly
     # coordinates fit them only up to this level, past it ids can collide
     MAX_LEVEL = 25
+    # a cell with an edge closer than this is refined point by point; the
+    # margin covers the rounding in floor(lon / s) and in the edge pieces
+    _EPS = 1e-9
+    _REFINE = -1  # hit-table value: ray-cast the cell's points
+    _MISS = -2  # hit-table value: no candidate contains the cell
+    _NONE = np.iinfo(np.int64).max  # "no match yet" in min-folds
+    # edges per ray-cast chunk: a 65k-point flagship batch ray-casts ~2x
+    # faster in 64k-edge chunks than whole (a dozen arrays of this length)
+    _CHUNK_EDGES = 1 << 16
 
     def __init__(self, polygon_rows: list[dict], level: int = 12, max_cells: int = 256):
         if level > self.MAX_LEVEL:
@@ -59,236 +81,207 @@ class BroadcastPolygonIndex:
                 f"level {level} is above {self.MAX_LEVEL}, the highest level "
                 "whose cell ids fit their 26-bit fields"
             )
+        # flat ring/edge tables for the batched ray-cast, laid out as
+        # points_in_polygons reads a polygon: empty polygons skipped, a
+        # ring < 3 points has 0 edges (never inside / never a hole hit),
+        # rings 1.. of a polygon are its holes
         self.keys = []
-        self.polys = []
-        # coverings adapt per polygon (big polygon → coarser cells), so the
-        # index is a map per level actually used: level → {cell → [poly idx]}.
-        # The bucketing grid is INTERNAL to this index (the exact PIP
-        # refine decides membership), so cells are a plain planar floor
-        # grid at size 360°/2^level packed into one long — the
-        # space-filling-curve encode the r5 index used cost ~18 ms per
-        # 65k-row batch in lookup() for locality that a per-batch
-        # candidate probe never exploits.
-        self.cell_maps: dict[int, dict[int, list[int]]] = {}
-        for idx, row in enumerate(polygon_rows):
-            rings = [
-                [np.asarray(ring, dtype=np.float64).reshape(-1, 2) for ring in poly]
-                for poly in row["polygons"]
-            ]
-            pts = np.vstack([r for poly in rings for r in poly])
-            self.keys.append(row["key"])
-            self.polys.append(rings)
-            x0, y0 = pts[:, 0].min(), pts[:, 1].min()
-            x1, y1 = pts[:, 0].max(), pts[:, 1].max()
-            # coarsen per polygon until its bbox covering fits max_cells
-            lvl = max(0, int(level))
-            while lvl > 0:
-                s = 360.0 / (1 << lvl)
-                nx = int(np.floor(x1 / s)) - int(np.floor(x0 / s)) + 1
-                ny = int(np.floor(y1 / s)) - int(np.floor(y0 / s)) + 1
-                if nx * ny <= max_cells:
-                    break
-                lvl -= 1
-            s = 360.0 / (1 << lvl)
-            cx0, cx1 = int(np.floor(x0 / s)), int(np.floor(x1 / s))
-            cy0, cy1 = int(np.floor(y0 / s)), int(np.floor(y1 / s))
-            cmap = self.cell_maps.setdefault(lvl, {})
-            for cx in range(cx0, cx1 + 1):
-                base = (cx + self._OFF) << 26
-                for cy in range(cy0, cy1 + 1):
-                    cmap.setdefault(base + cy + self._OFF, []).append(idx)
-        # CSR form per level (sorted cell array + offsets + flat candidate
-        # indexes): lookup resolves a batch's unique cells with ONE
-        # searchsorted instead of a Python dict probe per cell
-        self._csr: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for lvl, cmap in self.cell_maps.items():
-            cs = np.fromiter(cmap.keys(), dtype=np.int64, count=len(cmap))
-            order = np.argsort(cs)
-            cs = cs[order]
-            cand_lists = list(cmap.values())
-            cnts = np.array([len(cand_lists[i]) for i in order], dtype=np.int64)
-            starts = np.concatenate([[0], np.cumsum(cnts)]).astype(np.int64)
-            flat = np.concatenate(
-                [np.asarray(cand_lists[i], dtype=np.int64) for i in order]
-            ) if len(order) else np.empty(0, np.int64)
-            self._csr[lvl] = (cs, starts, flat)
-        # flat ring/edge tables for the BATCHED exact refine: one
-        # vectorized parity pass over every (point, candidate) pair's
-        # edges replaces one points_in_polygons call per candidate
-        # polygon per batch. Ring layout mirrors points_in_polygons:
-        # empty polygons skipped, rings < 3 points contribute 0 edges
-        # (never inside / never a hole hit), holes are rings 1.. of
-        # each polygon.
-        ex0p, ey0p, ex1p, ey1p = [], [], [], []
-        ring_ecnt: list[int] = []
+        arrs: list[np.ndarray] = []
+        ring_row: list[int] = []
         ring_hole: list[bool] = []
-        ring_newpoly: list[bool] = []
-        ci_ring_off = [0]
-        for rings_list in self.polys:
-            for rings in rings_list:
-                if not len(rings):
-                    continue
+        for idx, row in enumerate(polygon_rows):
+            self.keys.append(row["key"])
+            for rings in row["polygons"]:
                 for hi, ring in enumerate(rings):
-                    r = np.asarray(ring, np.float64).reshape(-1, 2)
-                    ne = len(r) - 1 if len(r) >= 3 else 0
-                    if ne > 0:
-                        ex0p.append(r[:-1, 0])
-                        ey0p.append(r[:-1, 1])
-                        ex1p.append(r[1:, 0])
-                        ey1p.append(r[1:, 1])
-                    ring_ecnt.append(ne)
+                    arrs.append(np.asarray(ring, np.float64).reshape(-1, 2))
+                    ring_row.append(idx)
                     ring_hole.append(hi > 0)
-                    ring_newpoly.append(hi == 0)
-            ci_ring_off.append(len(ring_ecnt))
-        self._ex0 = np.concatenate(ex0p) if ex0p else np.empty(0)
-        self._ey0 = np.concatenate(ey0p) if ey0p else np.empty(0)
-        self._ex1 = np.concatenate(ex1p) if ex1p else np.empty(0)
-        self._ey1 = np.concatenate(ey1p) if ey1p else np.empty(0)
-        self._ring_ecnt = np.asarray(ring_ecnt, np.int64)
-        self._ring_estart = np.concatenate(
-            [[0], np.cumsum(self._ring_ecnt)]
-        ).astype(np.int64)[:-1]
+        npoly = len(self.keys)
+        xy = np.concatenate(arrs) if arrs else np.empty((0, 2))
+        if not np.isfinite(xy).all():
+            raise ValueError("polygon coordinates must be finite")
+        ring_row = np.asarray(ring_row, np.int64)
+        npts = np.array([len(a) for a in arrs], np.int64)
+        pt0 = np.cumsum(npts) - npts  # first point of each ring
+        ecnt = np.where(npts >= 3, npts - 1, 0)
+        estart = np.cumsum(ecnt) - ecnt
+        # edge j runs from point j to j + 1 of its ring; a polygon's
+        # rings are contiguous and start with its exterior, and a
+        # candidate's edges are contiguous
+        e = _ranges(pt0, ecnt)
+        self._ex0, self._ey0 = xy[e, 0], xy[e, 1]
+        self._ex1, self._ey1 = xy[e + 1, 0], xy[e + 1, 1]
+        self._edge_ring = np.repeat(np.arange(len(arrs)), ecnt)
+        self._edge_first = np.zeros(len(e), bool)
+        self._edge_first[estart[ecnt > 0]] = True
         self._ring_hole = np.asarray(ring_hole, bool)
-        self._ring_newpoly = np.asarray(ring_newpoly, bool)
-        self._ci_ring_off = np.asarray(ci_ring_off, np.int64)
-        self._ci_nrings = np.diff(self._ci_ring_off)
-        # per-candidate edge volume, for chunking the pair expansion
-        ring_etot = np.concatenate([[0], np.cumsum(self._ring_ecnt)])
-        self._ci_etot = (
-            ring_etot[self._ci_ring_off[1:]] - ring_etot[self._ci_ring_off[:-1]]
-        )
+        self._ring_poly = np.cumsum(~self._ring_hole) - 1
+        self._ci_etot = np.bincount(ring_row, weights=ecnt, minlength=npoly).astype(np.int64)
+        self._ci_estart = np.cumsum(self._ci_etot) - self._ci_etot
+        # the ray-cast of an unclosed ring is not constant away from its
+        # edges (parity flips along rays from its loose ends), so cells of
+        # a candidate with one are always refined
+        rr = np.flatnonzero(ecnt)
+        ring_open = (xy[pt0[rr]] != xy[pt0[rr] + npts[rr] - 1]).any(axis=1)
+        ci_open = np.bincount(ring_row[rr[ring_open]], minlength=npoly) > 0
+
+        # per-polygon bbox, then the finest level <= `level` whose bbox
+        # covering fits max_cells (level 0 if none does); polygons with
+        # no points get no cells
+        row_pts = np.bincount(ring_row, weights=npts, minlength=npoly).astype(np.int64)
+        rows = np.flatnonzero(row_pts)
+        first = (np.cumsum(row_pts) - row_pts)[rows]
+        bx0, by0 = (np.minimum.reduceat(xy[:, i], first) for i in (0, 1))
+        bx1, by1 = (np.maximum.reduceat(xy[:, i], first) for i in (0, 1))
+        tries = np.arange(max(0, int(level)), -1, -1)
+        ts = np.ldexp(360.0, -tries)
+        fits = (
+            (np.floor(bx1[:, None] / ts) - np.floor(bx0[:, None] / ts) + 1)
+            * (np.floor(by1[:, None] / ts) - np.floor(by0[:, None] / ts) + 1)
+        ) <= max_cells
+        fits[:, -1] = True
+        lvl = tries[fits.argmax(axis=1)]
+        s = np.ldexp(360.0, -lvl)
+        cx0 = np.floor(bx0 / s).astype(np.int64)
+        cy0 = np.floor(by0 / s).astype(np.int64)
+        ny = np.floor(by1 / s).astype(np.int64) - cy0 + 1
+        n = (np.floor(bx1 / s).astype(np.int64) - cx0 + 1) * ny
+        # every (cell, polygon) pair of the bbox coverings
+        r = np.repeat(np.arange(len(rows)), n)
+        k = _ranges(np.zeros_like(n), n)
+        cell = ((cx0[r] + k // ny[r] + self._OFF) << 26) + cy0[r] + k % ny[r] + self._OFF
+        row_lvl = np.full(npoly, -1, np.int64)
+        row_lvl[rows] = lvl
+        edge_lvl = row_lvl[ring_row[self._edge_ring]]
+        # CSR form per level (sorted cells + offsets + flat candidate
+        # indexes + true-hit table). The grid is internal to this index: a
+        # plain planar floor grid at 360°/2^level packed into one long,
+        # since a space-filling-curve encode buys locality that a
+        # per-batch probe never exploits.
+        self._csr: dict[int, tuple[np.ndarray, ...]] = {}
+        for L in np.unique(lvl).tolist():
+            sel = lvl[r] == L
+            c, ci = cell[sel], rows[r[sel]]
+            order = np.lexsort((ci, c))  # by cell, then list order
+            c, flat = c[order], ci[order]
+            cs, st = np.unique(c, return_index=True)
+            starts = np.append(st, len(c)).astype(np.int64)
+            hit = self._hit_table(L, cs, starts, flat, edge_lvl == L, ci_open)
+            self._csr[L] = (cs, starts, flat, hit)
+
+    def _hit_table(self, lvl, cs, starts, flat, edges, ci_open):
+        """True-hit answer per CSR cell: the lowest candidate containing
+        the cell when no edge of the level's polygons comes within _EPS of
+        it, _MISS when none contains it, else _REFINE. Away from every
+        edge each candidate's ray-cast parity is the same all over the
+        cell, so the cell centre's ray-cast decides the whole cell."""
+        s = np.ldexp(360.0, -lvl)
+        # split each edge into pieces no longer than one cell and mark the
+        # cells each piece's eps-padded bbox reaches (at most 3x3): a long
+        # diagonal edge marks only the cells along it, not its whole bbox
+        x0, y0 = self._ex0[edges], self._ey0[edges]
+        dx, dy = self._ex1[edges] - x0, self._ey1[edges] - y0
+        npc = np.maximum(np.ceil(np.maximum(np.abs(dx), np.abs(dy)) / s), 1).astype(np.int64)
+        e = np.repeat(np.arange(len(npc)), npc)
+        k = _ranges(np.zeros_like(npc), npc)
+        ta, tb = k / npc[e], (k + 1) / npc[e]
+        xa, xb = x0[e] + dx[e] * ta, x0[e] + dx[e] * tb
+        ya, yb = y0[e] + dy[e] * ta, y0[e] + dy[e] * tb
+        ix0 = np.floor((np.minimum(xa, xb) - self._EPS) / s).astype(np.int64)
+        ix1 = np.floor((np.maximum(xa, xb) + self._EPS) / s).astype(np.int64)
+        iy0 = np.floor((np.minimum(ya, yb) - self._EPS) / s).astype(np.int64)
+        iy1 = np.floor((np.maximum(ya, yb) + self._EPS) / s).astype(np.int64)
+        marked = []
+        for i in range(3):
+            for j in range(3):
+                m = (ix0 + i <= ix1) & (iy0 + j <= iy1)
+                marked.append(((ix0[m] + i + self._OFF) << 26) + iy0[m] + j + self._OFF)
+        marked = np.concatenate(marked)
+        pos = np.minimum(np.searchsorted(cs, marked), len(cs) - 1)
+        refine = np.zeros(len(cs), bool)
+        refine[pos[cs[pos] == marked]] = True
+        cell_of = np.repeat(np.arange(len(cs)), np.diff(starts))
+        refine |= np.bincount(cell_of, weights=ci_open[flat], minlength=len(cs)) > 0
+        # ray-cast each decided cell's centre against its candidates
+        sel = ~refine[cell_of]
+        cx = ((cs >> 26) - self._OFF + 0.5) * s
+        cy = ((cs & ((1 << 26) - 1)) - self._OFF + 0.5) * s
+        best = np.full(len(cs), self._NONE, np.int64)
+        self._refine_pairs(cx, cy, cell_of[sel], flat[sel], best)
+        hit = np.where(best < self._NONE, best, self._MISS)
+        hit[refine] = self._REFINE
+        return hit
 
     def lookup(self, lon: np.ndarray, lat: np.ndarray):
-        """For each point: matching polygon index (first in list order) or
-        -1. Vectorized per CANDIDATE POLYGON, not per cell: one np.unique
-        over the batch's cells, a searchsorted probe into the CSR cell
-        index, and one masked PIP refine per polygon present —
-        O(#polys-present) numpy calls per batch with no per-cell Python
-        iteration anywhere."""
-        out = np.full(len(lon), -1, dtype=np.int64)
-        # expand to (point, candidate-poly) PAIRS per level — candidate
-        # fan-out per point is tiny (its one covering cell's list), so
-        # the pair set is ~O(points); processing pair blocks in global
-        # polygon order keeps "first polygon in list order wins" across
-        # levels without materializing a per-polygon point mask
+        """For each point: matching polygon index (first in list order ≡
+        the minimum matching candidate index over all levels) or -1. A
+        point in a decided cell takes the cell's answer from the true-hit
+        table; only points in refine cells expand into (point, candidate)
+        pairs, and all of them go through one batched ray-cast."""
+        best = np.full(len(lon), self._NONE, np.int64)
         pair_pt: list = []
         pair_ci: list = []
-        for lvl in sorted(self._csr):
-            cs, starts, flat = self._csr[lvl]
-            if not len(cs):
-                continue
-            s = 360.0 / (1 << lvl)
-            cells = (
-                (np.floor(lon / s).astype(np.int64) + self._OFF) << 26
-            ) + np.floor(lat / s).astype(np.int64) + self._OFF
-            uniq, inv = np.unique(cells, return_inverse=True)
-            pos = np.searchsorted(cs, uniq)
-            posc = np.minimum(pos, len(cs) - 1)
-            hitc = cs[posc] == uniq
-            # per-point candidate count via its unique-cell slot
-            ucnt = np.where(hitc, starts[posc + 1] - starts[posc], 0)
-            cnt_pt = ucnt[inv]
-            ptsel = np.flatnonzero(cnt_pt)
-            if not len(ptsel):
-                continue
-            cnt = cnt_pt[ptsel]
-            st = starts[posc[inv[ptsel]]]
-            offs = np.arange(int(cnt.sum())) - np.repeat(
-                np.concatenate([[0], np.cumsum(cnt[:-1])]), cnt
+        for lvl, (cs, starts, flat, hit) in self._csr.items():
+            s = np.ldexp(360.0, -lvl)
+            with np.errstate(invalid="ignore"):
+                fx = np.floor(lon / s)
+                fy = np.floor(lat / s)
+                cells = ((fx.astype(np.int64) + self._OFF) << 26) + fy.astype(np.int64) + self._OFF
+            # NaN, inf and far-off points get no cell: their packed ids
+            # would wrap around onto real cells
+            cells[~((np.abs(fx) < self._OFF) & (np.abs(fy) < self._OFF))] = -1
+            # a batch holds few distinct cells: probe those (a searchsorted
+            # of every point is ~15x slower than pandas' hash factorize)
+            codes, uniq = pd.factorize(cells)
+            pos = np.minimum(np.searchsorted(cs, uniq), len(cs) - 1)
+            h = np.where(cs[pos] == uniq, hit[pos], self._MISS)[codes]
+            np.minimum(best, np.where(h >= 0, h, self._NONE), out=best)
+            ref = np.flatnonzero(h == self._REFINE)
+            if len(ref):
+                p = pos[codes[ref]]
+                cnt = starts[p + 1] - starts[p]
+                pair_pt.append(np.repeat(ref, cnt))
+                pair_ci.append(flat[_ranges(starts[p], cnt)])
+        if pair_pt:
+            self._refine_pairs(
+                lon, lat, np.concatenate(pair_pt), np.concatenate(pair_ci), best
             )
-            pair_pt.append(np.repeat(ptsel, cnt))
-            pair_ci.append(flat[np.repeat(st, cnt) + offs])
-        if not pair_pt:
-            return out
-        pp = np.concatenate(pair_pt)
-        pc = np.concatenate(pair_ci)
-        order = np.argsort(pc, kind="stable")
-        pp, pc = pp[order], pc[order]
-        cuts = np.flatnonzero(np.concatenate([[True], pc[1:] != pc[:-1], [True]]))
-        if len(cuts) - 1 <= 512:
-            # few candidate polygons in this batch: per-polygon refine
-            # with contiguous point×edge broadcasts (cache-friendly, and
-            # the out<0 skip prunes later candidates of already-matched
-            # points); ascending blocks keep first-in-list-order wins
-            for b0, b1 in zip(cuts[:-1], cuts[1:]):
-                ci = int(pc[b0])
-                idxs = pp[b0:b1]
-                idxs = idxs[out[idxs] < 0]
-                if not len(idxs):
-                    continue
-                m = points_in_polygons(
-                    np.stack([lon[idxs], lat[idxs]], axis=1), self.polys[ci]
-                )
-                out[idxs[m]] = ci
-            return out
-        # many candidate polygons (a planetary boundary set): ONE
-        # vectorized ray-cast parity pass over every pair's edges
-        # (identical crossing conventions to points_in_ring), chunked by
-        # edge volume — no per-polygon Python iteration. "First polygon
-        # in list order wins" ≡ min matching candidate index per point,
-        # since matches are independent across points.
-        best = np.full(len(lon), np.iinfo(np.int64).max, dtype=np.int64)
-        csum = np.cumsum(self._ci_etot[pc])
-        a = 0
-        while a < len(pp):
-            budget = (csum[a - 1] if a else 0) + 2_000_000
-            b = max(int(np.searchsorted(csum, budget, side="right")), a + 1)
-            self._refine_pairs(lon, lat, pp[a:b], pc[a:b], best)
-            a = b
-        hitm = best < np.iinfo(np.int64).max
-        out[hitm] = best[hitm]
-        return out
+        return np.where(best < self._NONE, best, -1)
 
     def _refine_pairs(self, lon, lat, pp, pc, best):
-        """Parity ray-cast for a chunk of (point, candidate) pairs;
-        np.minimum.at-folds matching candidate indexes into `best`."""
-        rcnt = self._ci_nrings[pc]
-        rtot = int(rcnt.sum())
-        if not rtot:
-            return
-        offs = np.arange(rtot) - np.repeat(
-            np.concatenate([[0], np.cumsum(rcnt[:-1])]), rcnt
-        )
-        ridx = np.repeat(self._ci_ring_off[pc], rcnt) + offs
-        pr = np.repeat(np.arange(len(pp)), rcnt)  # pair row per ring row
-        ecnt = self._ring_ecnt[ridx]
-        etot = int(ecnt.sum())
-        if etot:
-            eoffs = np.arange(etot) - np.repeat(
-                np.concatenate([[0], np.cumsum(ecnt[:-1])]), ecnt
-            )
-            eidx = np.repeat(self._ring_estart[ridx], ecnt) + eoffs
-            er = np.repeat(np.arange(len(ridx)), ecnt)  # ring row per edge row
+        """Exact ray-cast of (point pp, candidate pc) pairs, with the
+        crossing convention of points_in_ring: one vectorized parity pass
+        per chunk of about _CHUNK_EDGES edges, np.minimum.at-folding each
+        matching candidate index into `best`."""
+        csum = np.cumsum(self._ci_etot[pc])
+        b = 0
+        while b < len(pp):
+            a = b
+            budget = (csum[a - 1] if a else 0) + self._CHUNK_EDGES
+            b = max(int(np.searchsorted(csum, budget, side="right")), a + 1)
+            ecnt = self._ci_etot[pc[a:b]]
+            er = np.repeat(np.arange(a, b), ecnt)  # pair per edge row
+            eidx = _ranges(self._ci_estart[pc[a:b]], ecnt)
+            # (pair, ring) runs: each pair's edges start on a ring's first edge
+            rs = np.flatnonzero(self._edge_first[eidx])
+            if not len(rs):
+                continue
             x0, y0 = self._ex0[eidx], self._ey0[eidx]
             x1, y1 = self._ex1[eidx], self._ey1[eidx]
-            pxr = lon[pp[pr]]
-            pyr = lat[pp[pr]]
-            pxe, pye = pxr[er], pyr[er]
-            cond = (y0 > pye) != (y1 > pye)
+            px, py = lon[pp[er]], lat[pp[er]]
             with np.errstate(divide="ignore", invalid="ignore"):
-                xint = x0 + (pye - y0) * (x1 - x0) / (y1 - y0)
-            cross = cond & (pxe < xint)
-            par = (
-                np.bincount(er, weights=cross, minlength=len(ridx)).astype(np.int64)
-                & 1
-            ).astype(bool)
-        else:
-            par = np.zeros(len(ridx), dtype=bool)
-        # rings → (pair, polygon) groups: each polygon's rings are
-        # contiguous and start with its exterior, and a pair's first
-        # ring is an exterior, so the newpoly flag alone cuts groups
-        newg = self._ring_newpoly[ridx].copy()
-        if len(newg):
-            newg[0] = True
-        gid = np.cumsum(newg) - 1
-        hole = self._ring_hole[ridx]
-        ng = int(gid[-1]) + 1 if len(gid) else 0
-        ext_in = np.bincount(gid, weights=par & ~hole, minlength=ng) > 0
-        hole_in = np.bincount(gid, weights=par & hole, minlength=ng) > 0
-        okg = np.flatnonzero(ext_in & ~hole_in)
-        if len(okg):
-            gpair = pr[np.flatnonzero(newg)]
-            np.minimum.at(best, pp[gpair[okg]], pc[gpair[okg]])
+                cross = ((y0 > py) != (y1 > py)) & (px < x0 + (py - y0) * (x1 - x0) / (y1 - y0))
+            par = np.bitwise_xor.reduceat(cross, rs)
+            ring = self._edge_ring[eidx[rs]]
+            hole = self._ring_hole[ring]
+            rpair, rpoly = er[rs], self._ring_poly[ring]
+            # (pair, polygon) groups: inside the exterior, in none of the holes
+            gs = np.flatnonzero(np.concatenate(
+                [[True], (rpair[1:] != rpair[:-1]) | (rpoly[1:] != rpoly[:-1])]
+            ))
+            inside = np.logical_or.reduceat(par & ~hole, gs) & ~np.logical_or.reduceat(par & hole, gs)
+            hp = rpair[gs[inside]]
+            np.minimum.at(best, pp[hp], pc[hp])
 
 
 def pip_join_broadcast(
@@ -301,21 +294,28 @@ def pip_join_broadcast(
 ) -> DataFrame:
     """Annotate each point row with the key of the first polygon containing
     it (NULL if none). Big side never shuffles."""
-    index = BroadcastPolygonIndex(polygon_rows, level=level)
-    keys = index.keys
-    fields = points.schema.fieldNames()
+    kernel = pip_join_kernel(
+        BroadcastPolygonIndex(polygon_rows, level=level), lon_col, lat_col, out_col
+    )
     out_schema = points.schema.simpleString()[7:-1] + f",{out_col} string"
+    return points.mapInPandas(kernel, out_schema)
+
+
+def pip_join_kernel(index, lon_col: str, lat_col: str, out_col: str):
+    """The mapInPandas kernel of `pip_join_broadcast`: each pandas batch
+    comes back with `out_col` holding the first containing polygon's key
+    as a string, or None."""
+    karr = np.array([str(k) for k in index.keys] + [None], dtype=object)
 
     def kernel(iterator):
         for pdf in iterator:
             lon = pdf[lon_col].to_numpy(dtype=np.float64)
             lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            hit = index.lookup(lon, lat)
             pdf = pdf.copy()
-            pdf[out_col] = [None if h < 0 else str(keys[h]) for h in hit]
+            pdf[out_col] = karr[index.lookup(lon, lat)]  # hit -1 → None
             yield pdf
 
-    return points.mapInPandas(kernel, out_schema)
+    return kernel
 
 
 def pip_tile_rollup(
@@ -353,9 +353,9 @@ def tile_rollup_kernel(index, res: int, grid: str, lon_col: str, lat_col: str):
     karr = np.array([str(k) for k in index.keys] + [None], dtype=object)
 
     def _reduce_pairs(t, h, w):
-        # group-sum (tile, hit) pairs with one lexsort — tile ids span
-        # the full int64 range (hex ids are Hilbert-mixed), so no
-        # single-key packing is possible without overflow
+        # group-sum (tile, hit) pairs with one lexsort — a hex id packs
+        # (res, q, r) into 4 + 30 + 30 bits (tiles.hex_cell), so no bits
+        # are left to pack the hit into the same int64 key
         order = np.lexsort((h, t))
         t, h, w = t[order], h[order], w[order]
         new = np.concatenate([[True], (t[1:] != t[:-1]) | (h[1:] != h[:-1])])

@@ -430,43 +430,127 @@ def test_knn_histogram_stays_off_python_rdds(spark):
     assert len(got) == 3
 
 
+def _square(x0, y0, x1, y1):
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
+
+
 def test_broadcast_index_batched_refine_matches_bruteforce():
-    """The >512-candidate batched parity refine (one vectorized
-    ray-cast pass over all pairs, first-match = min matching index)
-    must agree with the per-polygon points_in_polygons loop, holes
-    included."""
-    import numpy as np
+    """Every lookup path (true-hit cells, refine cells, coarsened levels,
+    the batched parity refine; first match = min matching index) must
+    agree with the per-polygon points_in_polygons loop, at levels 10, 12
+    and 14: holes, a big coarsened polygon with nested polygons listed
+    before and after it, overlapping squares, a multipolygon, edges and
+    points on level-12 cell lines, rings of < 3 points, unclosed rings,
+    empty polygons and NaN points."""
+    import pytest
 
     from osm_pbf2json_spark.functions.geometry import points_in_polygons
     from osm_pbf2json_spark.operators.spatial import BroadcastPolygonIndex
 
     rng = np.random.Generator(np.random.PCG64(11))
-    rows = []
-    k = 0
+    holes = []
     for gx in range(30):
         for gy in range(25):
             x0, y0 = gx * 0.25, gy * 0.25
             ring = [(x0 + 0.01, y0 + 0.01), (x0 + 0.24, y0 + 0.02),
                     (x0 + 0.23, y0 + 0.24), (x0 + 0.02, y0 + 0.23),
                     (x0 + 0.01, y0 + 0.01)]
-            hole = [(x0 + 0.10, y0 + 0.10), (x0 + 0.15, y0 + 0.10),
-                    (x0 + 0.15, y0 + 0.15), (x0 + 0.10, y0 + 0.15),
-                    (x0 + 0.10, y0 + 0.10)]
-            rows.append({"key": k, "polygons": [[ring, hole]]})
-            k += 1
-    idx = BroadcastPolygonIndex(rows, level=12)
-    lon = rng.uniform(0, 7.5, 8000)
-    lat = rng.uniform(0, 6.5, 8000)
-    got = idx.lookup(lon, lat)  # 750 polygons -> batched refine path
-    ref = np.full(len(lon), -1, np.int64)
+            hole = _square(x0 + 0.10, y0 + 0.10, x0 + 0.15, y0 + 0.15)
+            holes.append({"key": len(holes), "polygons": [[ring, hole]]})
+    # a big polygon (coarser level at every tested level) with a hole,
+    # listed between the grid polygons nested inside it
+    big = {"key": "big", "polygons": [[_square(-0.5, -0.5, 8.0, 7.0),
+                                       _square(3.0, 3.0, 3.6, 3.4)]]}
+    s = 360.0 / (1 << 12)  # level-12 cell size, exact in binary
+    odd = [
+        {"key": "overlap1", "polygons": [[_square(0.3, 0.3, 1.3, 1.3)]]},
+        {"key": "overlap2", "polygons": [[_square(0.8, 0.8, 1.8, 1.8)]]},
+        {"key": "multi", "polygons": [
+            [_square(2.0, 0.2, 2.5, 0.7)],
+            [_square(2.7, 0.2, 3.6, 1.1), _square(2.9, 0.4, 3.1, 0.6)],
+        ]},
+        {"key": "on_cell_lines", "polygons": [[_square(20 * s, 2 * s, 27 * s, 9 * s)]]},
+        {"key": "short_ring", "polygons": [[[(4.0, 4.0), (4.5, 4.5)]]]},
+        {"key": "short_hole", "polygons": [[_square(4.0, 0.2, 4.6, 0.8), [(4.2, 0.3)]]]},
+        # an open chain's parity also flips left of its gap, so it sits
+        # left of the other points; extra points cover its own bbox
+        {"key": "unclosed", "polygons": [[[(-1.6, 0.2), (-1.0, 0.25), (-1.1, 0.9)]]]},
+        {"key": "empty_part", "polygons": [[], [_square(6.0, 0.2, 6.4, 0.6)]]},
+        {"key": "empty", "polygons": []},
+    ]
+    cases = [holes, odd + holes[:300] + [big] + holes[300:]]
+    lon = np.concatenate([
+        rng.uniform(-1.0, 8.5, 8000),
+        np.arange(-8, 100) * s,  # on vertical cell lines
+        rng.uniform(-1.0, 8.5, 400),
+        rng.uniform(-1.6, -1.0, 300),
+        [np.nan, 1.0, np.nan, np.inf, 20 * s, 27 * s, 23 * s],
+    ])
+    lat = np.concatenate([
+        rng.uniform(-1.0, 7.5, 8000),
+        rng.uniform(-1.0, 7.5, 108),
+        np.repeat(np.arange(-8, 92) * s, 4),  # on horizontal cell lines
+        rng.uniform(0.2, 0.9, 300),
+        [1.0, np.nan, np.nan, 1.0, 5 * s, 2 * s, 9 * s],
+    ])
     P = np.stack([lon, lat], axis=1)
-    for ci, r in enumerate(rows):
-        polys = [[np.array(ring, float) for ring in poly]
-                 for poly in r["polygons"]]
-        m = points_in_polygons(P, polys) & (ref < 0)
-        ref[m] = ci
-    assert (got == ref).all()
-    assert (got >= 0).sum() > 1000  # hits actually exercised
+    for rows in cases:
+        ref = np.full(len(lon), -1, np.int64)
+        for ci, r in enumerate(rows):
+            polys = [[np.array(ring, float).reshape(-1, 2) for ring in poly]
+                     for poly in r["polygons"]]
+            m = points_in_polygons(P, polys) & (ref < 0)
+            ref[m] = ci
+        assert (ref >= 0).sum() > 1000  # hits actually exercised
+        for level in (10, 12, 14):
+            idx = BroadcastPolygonIndex(rows, level=level)
+            assert (idx.lookup(lon, lat) == ref).all(), level
+            assert (idx.lookup(lon[:0], lat[:0]) == ref[:0]).all()
+    # the big polygon sits on a coarser level than the rest
+    assert len(BroadcastPolygonIndex(cases[1], level=12)._csr) > 1
+    with pytest.raises(ValueError, match="finite"):
+        BroadcastPolygonIndex([{"key": "nan", "polygons": [[_square(0.0, 0.0, np.nan, 1.0)]]}])
+
+
+def test_broadcast_index_interior_points_skip_ray_cast(monkeypatch):
+    """Points at least one cell inside a district of the 16x16 flagship
+    grid take their answer from the true-hit table: no (point, polygon)
+    pair reaches the batched ray-cast, and no per-polygon ray-cast runs."""
+    from osm_pbf2json_spark.functions import geometry
+
+    pitch, lo, hi = 0.625, 0.01, 0.615
+    rows = [
+        {"key": f"P{gx:02d}{gy:02d}", "polygons": [[_square(
+            gx * pitch + lo, gy * pitch + lo, gx * pitch + hi, gy * pitch + hi)]]}
+        for gx in range(16)
+        for gy in range(16)
+    ]
+    idx = S.BroadcastPolygonIndex(rows, level=12)
+    pairs = []
+    refine = idx._refine_pairs
+    ring = geometry.points_in_ring
+
+    def counted_refine(lon, lat, pp, pc, best):
+        pairs.append(len(pp))
+        return refine(lon, lat, pp, pc, best)
+
+    def counted_ring(px, py, r):
+        pairs.append(len(px))
+        return ring(px, py, r)
+
+    monkeypatch.setattr(idx, "_refine_pairs", counted_refine)
+    monkeypatch.setattr(geometry, "points_in_ring", counted_ring)
+    margin = 360.0 / (1 << 12) + 1e-6  # one level-12 cell, and then some
+    rng = np.random.Generator(np.random.PCG64(5))
+    g = rng.integers(0, 16, (20_000, 2))
+    lon = g[:, 0] * pitch + rng.uniform(lo + margin, hi - margin, len(g))
+    lat = g[:, 1] * pitch + rng.uniform(lo + margin, hi - margin, len(g))
+    got = idx.lookup(lon, lat)
+    assert (got == g[:, 0] * 16 + g[:, 1]).all()
+    assert sum(pairs) == 0
+    # a point next to an edge still takes the exact path
+    assert idx.lookup(np.array([lo + 1e-4]), np.array([0.3]))[0] == 0
+    assert sum(pairs) > 0
 
 
 def _rollup(batches):
@@ -498,6 +582,33 @@ def test_tile_rollup_kernel_one_row_and_nan():
     out = _rollup([([2.0, np.nan, 2.0, 3.0], [2.0, 2.0, np.nan, 3.0])])
     got = out.groupby(out["polygon_key"].fillna("-"))["pn"].sum().to_dict()
     assert got == {"A": 2, "-": 2}
+
+
+def _pip_join(batches):
+    """Drive the pip_join_broadcast kernel as plain pandas, no Spark."""
+    import pandas as pd
+
+    index = S.BroadcastPolygonIndex([SQUARE_A, SQUARE_B])
+    kernel = S.pip_join_kernel(index, "lon", "lat", "polygon_key")
+    frames = [
+        pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat})
+        .astype({"lon": np.float64, "lat": np.float64})
+        for lon, lat in batches
+    ]
+    out = list(kernel(iter(frames)))
+    assert len(out) == len(frames)
+    for o in out:
+        assert list(o.columns) == ["id", "lon", "lat", "polygon_key"]
+    return [o["polygon_key"].tolist() for o in out]
+
+
+def test_pip_join_kernel_empty_one_row_and_nan():
+    assert _pip_join([]) == []
+    assert _pip_join([([], [])]) == [[]]
+    assert _pip_join([([12.0], [12.0])]) == [["B"]]
+    assert _pip_join([([6.0], [6.0])]) == [[None]]
+    got = _pip_join([([2.0, np.nan, 2.0, 3.0, np.inf], [2.0, 2.0, np.nan, 3.0, 1.0])])
+    assert got == [["A", None, None, "A", None]]
 
 
 def test_broadcast_index_rejects_colliding_levels():
