@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from ..functions.filter_dsl import build_admin_groups, compile_groups
 from ..functions.geometry import assemble_multipolygon, stitch_rings
 from .closure import EntityTables, closure
+from .resolve import _located
 
 RING = "array<struct<lon:double,lat:double>>"
 BOUNDARY_SCHEMA = (
@@ -126,7 +127,7 @@ def boundaries_from_closure(closed: EntityTables) -> DataFrame:
     way_pts = (
         closed.ways.select(F.col("id").alias("way_id"), F.posexplode("refs").alias("wpos", "ref"))
         .join(
-            closed.nodes.select(F.col("id").alias("ref"), "lon", "lat"),
+            closed.nodes.filter(_located()).select(F.col("id").alias("ref"), "lon", "lat"),
             "ref",
             "inner",
         )

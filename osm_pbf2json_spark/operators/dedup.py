@@ -177,27 +177,6 @@ def minhash_signatures(
     )
 
 
-def merge_signatures(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Minhash signatures are MERGEABLE: sig(Sa ∪ Sb) = elementwise
-    min(sig(Sa), sig(Sb)). Given per-batch signature tables keyed by id,
-    this derives the combined index without touching text again —
-    incremental dedup-index maintenance costs O(|new batch|), not
-    O(corpus). Pure zip_with/least, full-outer on id."""
-    return (
-        a.alias("a")
-        .join(b.alias("b"), "id", "full_outer")
-        .select(
-            "id",
-            F.when(F.col("a.sig").isNull(), F.col("b.sig"))
-            .when(F.col("b.sig").isNull(), F.col("a.sig"))
-            .otherwise(
-                F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: F.least(x, y))
-            )
-            .alias("sig"),
-        )
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.7,

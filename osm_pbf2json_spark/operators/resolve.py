@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 from .closure import _pin
@@ -32,8 +32,17 @@ from .closure import _pin
 COORD_ARR = "array<struct<lon:double,lat:double>>"
 
 
+def _located() -> Column:
+    """True for a node whose lon and lat are both set and not NaN. Other
+    nodes count as missing, like a ref with no node (parquet node tables
+    can hold NULL or NaN coordinates; a decoded PBF never does)."""
+    lon, lat = F.col("lon"), F.col("lat")
+    return lon.isNotNull() & lat.isNotNull() & ~F.isnan(lon) & ~F.isnan(lat)
+
+
 def resolve_way_coords(ways: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J1: (way id, refs) → ordered coords, dropping refs with no node.
+    """J1: (way id, refs) → ordered coords, dropping refs with no located
+    node (see `_located`).
 
     Returns DataFrame(id BIGINT, coords ARRAY<STRUCT<lon,lat>>).
     Ways whose refs all miss resolve to an empty array (reference yields an
@@ -53,7 +62,7 @@ def resolve_way_coords(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     return joined.groupBy("id").agg(
         F.array_sort(
             F.collect_list(
-                F.when(F.col("lon").isNotNull(), F.struct("pos", "lon", "lat"))
+                F.when(_located(), F.struct("pos", "lon", "lat"))
             )
         ).alias("pcoords")
     ).select(
@@ -84,7 +93,11 @@ def resolve_relation_coords(
     # node + way member coordinates resolve in one shot
     node_part = (
         members.filter(F.col("mtype") == "node")
-        .join(nodes.select(F.col("id").alias("mid"), "lon", "lat"), "mid", "inner")
+        .join(
+            nodes.filter(_located()).select(F.col("id").alias("mid"), "lon", "lat"),
+            "mid",
+            "inner",
+        )
         .select("id", "pos", F.array(F.struct("lon", "lat")).alias("mcoords"))
     )
     way_part = (

@@ -43,6 +43,7 @@ from ..functions.geometry import (
 )
 from .boundaries import boundaries_from_closure
 from .closure import EntityTables, closure
+from .resolve import _located
 
 RTREE_PADDING = 0.002  # streets.rs:14
 # target cell count for chunked dense pair/probe matrices (kept small
@@ -409,7 +410,7 @@ def extract_streets(ways_filtered: DataFrame, nodes: DataFrame) -> DataFrame:
         F.first("name").alias("name"),
         F.array_sort(
             F.collect_list(
-                F.when(F.col("lon").isNotNull(), F.struct("pos", "lon", "lat"))
+                F.when(_located(), F.struct("pos", "lon", "lat"))
             )
         ).alias("_pc"),
     ).select(

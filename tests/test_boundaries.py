@@ -71,6 +71,21 @@ def test_boundary_geometry_square(spark):
     assert (rows[0]["ne_lon"], rows[0]["ne_lat"]) == (14.0, 53.0)
 
 
+def test_boundary_unlocated_node_dropped(spark):
+    """A ref to a node with a NaN coordinate is dropped like a ref to a
+    missing node: the square still closes and its bbox stays finite."""
+    tags = {"boundary": "administrative", "name": "some_name", "admin_level": "11"}
+    nodes, ways, rels = _square_boundary_tables(spark, tags)
+    nodes.append((5, float("nan"), 13.5, {}))
+    ways[0] = (11, [1, 5, 2], {})
+    t = make_tables(spark, nodes=nodes, ways=ways, relations=rels)
+    rows = boundaries(t, levels=[11]).collect()
+    assert len(rows) == 1
+    assert len(rows[0]["polygons"][0][0]) == 5
+    assert (rows[0]["sw_lon"], rows[0]["sw_lat"]) == (13.0, 52.0)
+    assert (rows[0]["ne_lon"], rows[0]["ne_lat"]) == (14.0, 53.0)
+
+
 def test_boundary_wrong_tags_dropped(spark):
     # admin.rs:120-132
     tags = {"boundary": "wrong", "name": "some_name", "admin_level": "11"}
@@ -107,3 +122,40 @@ def test_dependency_relation_surfaces_in_output(spark):
     t = make_tables(spark, nodes=n1 + n2, ways=w1 + w2, relations=r1 + r2)
     rows = boundaries(t, levels=[11]).collect()
     assert sorted(r["name"] for r in rows) == ["child", "parent"]
+
+
+def test_assemble_group_kernel_degenerate_groups():
+    """`_assemble_group` driven as plain pandas, no Spark: one closed
+    way, an unclosable chain, None ids, inner-only members and
+    degenerate 2-point holes. The empty result keeps the kernel's column
+    order."""
+    import pandas as pd
+
+    from osm_pbf2json_spark.operators.boundaries import _assemble_group
+
+    cols = ["relation_id", "name", "admin_level", "sw_lon", "sw_lat", "ne_lon", "ne_lat", "polygons"]
+
+    def run(*members):
+        pdf = pd.DataFrame(
+            [(7, "R", 8, *m) for m in members],
+            columns=["relation_id", "name", "admin_level", "role", "pos", "ids", "_lons", "_lats"],
+        )
+        out = _assemble_group(pdf)
+        assert list(out.columns) == cols
+        return out
+
+    def ring_sizes(out):
+        return [[len(ring) for ring in poly] for poly in out["polygons"][0]]
+
+    square = ([1, 2, 3, 4, 1], [0.0, 1.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0, 0.0])
+    closed = run(("outer", 0, *square))
+    assert len(closed) == 1 and ring_sizes(closed) == [[5]]
+    bbox = tuple(closed[c][0] for c in ("sw_lon", "sw_lat", "ne_lon", "ne_lat"))
+    assert bbox == (0.0, 0.0, 1.0, 1.0)
+    assert len(run(("outer", 0, [1, 2, 3], [0.0, 1.0, 1.0], [0.0, 0.0, 1.0]))) == 0
+    assert len(run(("outer", 0, None, None, None))) == 0
+    assert len(run(("inner", 0, *square))) == 0
+    for hole in ([5, 6], [5, 6, 5]):
+        xy = [0.2, 0.3, 0.2][: len(hole)]
+        holed = run(("outer", 0, *square), ("inner", 1, hole, xy, xy))
+        assert len(holed) == 1 and ring_sizes(holed) == [[5]], hole

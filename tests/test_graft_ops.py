@@ -1,7 +1,5 @@
-"""Graft operators: dedup family, ANN, text analysis, pages, image
-codecs, lineage/restart."""
-
-import struct
+"""Graft operators: dedup family, ANN, text analysis, pages,
+lineage/restart."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -55,8 +53,16 @@ def test_minhash_lsh_pairs(docs):
 
 
 def test_minhash_vs_exact_jaccard_estimate(docs):
-    """Signature agreement rate approximates true Jaccard."""
+    """Signature agreement rate approximates true Jaccard. One signature
+    per doc, and a doc's signature does not depend on which other docs
+    share the table."""
     sigs = {r["id"]: r["sig"] for r in dedup.minhash_signatures(docs, 128).collect()}
+    assert sorted(sigs) == [1, 2, 3, 4, 5, 6]
+    part = docs.filter(F.col("doc_id").isin(1, 4))
+    assert {r["id"]: r["sig"] for r in dedup.minhash_signatures(part, 128).collect()} == {
+        1: sigs[1],
+        4: sigs[4],
+    }
     agree = np.mean(np.array(sigs[1]) == np.array(sigs[4]))
     # true 3-gram jaccard of docs 1 and 4:
     def sh(t):
@@ -509,35 +515,6 @@ def test_contamination_and_decontaminate(spark):
     assert clean == [2]
 
 
-def test_merge_signatures_equals_full(spark):
-    """Mergeability: signatures of two shingle-table halves, elementwise
-    min-merged, equal the signatures of the full table."""
-    import pyspark.sql.functions as F
-    from osm_pbf2json_spark.operators.dedup import (
-        _shingle_table,
-        merge_signatures,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    sh = _shingle_table(docs, "text", "doc_id", 3).cache()
-    half_a = sh.filter(F.pmod(F.col("h"), 2) == 0)
-    half_b = sh.filter(F.pmod(F.col("h"), 2) != 0)
-    full = minhash_signatures(docs, shingle_df=sh)
-    merged = merge_signatures(
-        minhash_signatures(docs, shingle_df=half_a),
-        minhash_signatures(docs, shingle_df=half_b),
-    )
-    diff = (
-        full.alias("f")
-        .join(merged.alias("m"), "id")
-        .filter(F.col("f.sig") != F.col("m.sig"))
-        .count()
-    )
-    assert diff == 0
-    assert full.count() == merged.count()
-
-
 def test_url_canonicalize_idempotent(spark):
     """canonical(canonical(u)) == canonical(u) over the full combinatorial
     grid of schemes x hosts x ports x paths x queries x fragments."""
@@ -774,568 +751,6 @@ def test_pbf_index_truncated_files():
             assert idx == full[: len(idx)], cut
 
 
-def test_jpeg_decode_spec_literal_golden():
-    """Decoder pinned by a HAND-CONSTRUCTED baseline JPEG (independent of
-    our encoder): grayscale 8x8 solid 130, unit quant table, standard
-    Annex K luma Huffman tables. DC coefficient = 8*(130-128) = 16
-    (category 5), AC = EOB. Also asserts the spec-documented code words
-    (DC cat-5 = 110b, AC EOB = 1010b) so the table builder itself is
-    checked against T.81 Annex K, not just self-consistent."""
-    import struct
-
-    from osm_pbf2json_spark.operators.jpeg import (
-        _AC_LUMA_SPEC,
-        _DC_LUMA_SPEC,
-        ZIGZAG,
-        _huff_codes,
-        decode_jpeg,
-    )
-
-    assert _huff_codes(_DC_LUMA_SPEC)[5] == (0b110, 3)
-    assert _huff_codes(_AC_LUMA_SPEC)[0x00] == (0b1010, 4)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc, th, spec):
-        bits, vals = spec
-        return bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-
-    data = bytearray(b"\xff\xd8")
-    data += seg(0xDB, bytes([0]) + bytes([1] * 64))  # unit quant
-    data += seg(0xC0, bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0]))
-    data += seg(0xC4, dht(0, 0, _DC_LUMA_SPEC))
-    data += seg(0xC4, dht(1, 0, _AC_LUMA_SPEC))
-    data += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    # entropy bits: DC cat5 '110' + value 16 '10000' + EOB '1010',
-    # padded with 1s: 1101 0000 1010 1111 = 0xD0 0xAF
-    data += bytes([0xD0, 0xAF])
-    data += b"\xff\xd9"
-
-    w, h, rgb = decode_jpeg(bytes(data))
-    assert (w, h) == (8, 8)
-    assert (rgb == 130).all()
-    assert ZIGZAG[0] == 0  # sanity: zigzag starts at DC
-
-
-def test_jpeg_decode_420_subsampled_hand_built():
-    """Hand-built 4:2:0 stream (MCU = 4 Y blocks + Cb + Cr): 16x16 solid
-    gray 100 through the full color pipeline must decode exactly —
-    validates MCU block ordering, chroma upsampling, and YCbCr→RGB."""
-    import struct
-
-    from osm_pbf2json_spark.operators.jpeg import (
-        _AC_CHROMA_SPEC,
-        _AC_LUMA_SPEC,
-        _BitWriter,
-        _DC_CHROMA_SPEC,
-        _DC_LUMA_SPEC,
-        _huff_codes,
-        decode_jpeg,
-    )
-
-    dc_l = _huff_codes(_DC_LUMA_SPEC)
-    ac_l = _huff_codes(_AC_LUMA_SPEC)
-    dc_c = _huff_codes(_DC_CHROMA_SPEC)
-    ac_c = _huff_codes(_AC_CHROMA_SPEC)
-
-    bw = _BitWriter()
-    # Y: DC = 8*(100-128) = -224 (cat 8, bits = -224 + 255 = 31)
-    code, ln = dc_l[8]
-    bw.write(code, ln)
-    bw.write(31, 8)
-    code, ln = ac_l[0x00]
-    bw.write(code, ln)
-    for _ in range(3):  # remaining Y blocks: diff 0 + EOB
-        code, ln = dc_l[0]
-        bw.write(code, ln)
-        code, ln = ac_l[0x00]
-        bw.write(code, ln)
-    for _ in range(2):  # Cb, Cr: DC 0 + EOB
-        code, ln = dc_c[0]
-        bw.write(code, ln)
-        code, ln = ac_c[0x00]
-        bw.write(code, ln)
-    bw.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc, th, spec):
-        bits, vals = spec
-        return bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-
-    data = bytearray(b"\xff\xd8")
-    data += seg(0xDB, bytes([0]) + bytes([1] * 64))
-    data += seg(0xDB, bytes([1]) + bytes([1] * 64))
-    data += seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", 16, 16)
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    data += seg(0xC4, dht(0, 0, _DC_LUMA_SPEC))
-    data += seg(0xC4, dht(1, 0, _AC_LUMA_SPEC))
-    data += seg(0xC4, dht(0, 1, _DC_CHROMA_SPEC))
-    data += seg(0xC4, dht(1, 1, _AC_CHROMA_SPEC))
-    data += seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    data += bytes(bw.out) + bytes([bw.cur]) if bw.nbits else bytes(bw.out)
-    data += b"\xff\xd9"
-
-    w, h, rgb = decode_jpeg(bytes(data))
-    assert (w, h) == (16, 16)
-    assert (rgb == 100).all()
-
-
-def test_jpeg_round_trip():
-    """encode_jpeg → decode_jpeg: solid exact; smooth gradients within
-    tight error; q100 noise ~exact (quant steps all small)."""
-    from osm_pbf2json_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    solid = np.full((8, 8, 3), 100, np.uint8)
-    w, h, back = decode_jpeg(encode_jpeg(solid, quality=95))
-    assert (w, h) == (8, 8) and (back == 100).all()
-
-    x = np.linspace(0, 4 * np.pi, 48)
-    y = np.linspace(0, 3 * np.pi, 32)
-    gx, gy = np.meshgrid(x, y)
-    img = np.stack(
-        [
-            (127 + 120 * np.sin(gx)).astype(np.uint8),
-            (127 + 120 * np.cos(gy)).astype(np.uint8),
-            (127 + 100 * np.sin(gx + gy)).astype(np.uint8),
-        ],
-        axis=-1,
-    )
-    w, h, back = decode_jpeg(encode_jpeg(img, quality=92))
-    err = np.abs(back.astype(int) - img.astype(int))
-    assert (w, h) == (48, 32) and err.max() <= 24 and err.mean() < 4
-
-    # non-multiple-of-8 dims exercise edge-block padding + crop
-    img2 = img[:27, :41]
-    w2, h2, back2 = decode_jpeg(encode_jpeg(img2, quality=85))
-    assert (w2, h2) == (41, 27)
-    assert np.abs(back2.astype(int) - img2.astype(int)).mean() < 6
-
-    rng = np.random.Generator(np.random.PCG64(9))
-    noise = rng.integers(0, 256, size=(24, 24, 3)).astype(np.uint8)
-    _, _, back3 = decode_jpeg(encode_jpeg(noise, quality=100))
-    assert np.abs(back3.astype(int) - noise.astype(int)).max() <= 4
-
-
-def test_jpeg_arithmetic_raises_and_routes_to_stub():
-    """SOF9 (arithmetic-coded) raises NotImplementedError from
-    decode_jpeg, the signal a caller routes to a stub on."""
-    import struct
-
-    import pytest
-
-    from osm_pbf2json_spark.operators.jpeg import decode_jpeg
-
-    body = bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0])
-    arith = (
-        b"\xff\xd8"
-        + bytes([0xFF, 0xC9]) + struct.pack(">H", len(body) + 2) + body
-        + b"\xff\xd9"
-    )
-    with pytest.raises(NotImplementedError, match="coding process"):
-        decode_jpeg(arith)
-
-
-def test_jpeg_corrupt_payload_contract():
-    """Malformed JPEG streams raise ValueError (one exception contract —
-    truncation and missing-DHT used to leak IndexError/KeyError)."""
-    import pytest
-
-    from osm_pbf2json_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.Generator(np.random.PCG64(7))
-    img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    good = encode_jpeg(img, quality=80)
-
-    with pytest.raises(ValueError):
-        decode_jpeg(good[:3])  # truncated inside the first marker
-    # strip every DHT segment -> referenced-but-missing Huffman table
-    no_dht = bytearray()
-    pos = 0
-    while pos < len(good):
-        if good[pos] == 0xFF and pos + 1 < len(good) and good[pos + 1] == 0xC4:
-            (ln,) = struct.unpack(">H", good[pos + 2 : pos + 4])
-            pos += 2 + ln
-            continue
-        no_dht.append(good[pos])
-        pos += 1
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(no_dht))
-    assert decode_jpeg(good)[:2] == (16, 16)
-
-
-def test_jpeg_progressive_spec_literal():
-    """Progressive decoder pinned by a HAND-CONSTRUCTED SOF2 stream
-    (independent of any encoder): grayscale 8x8 solid 130 in three
-    scans — DC first at Al=1 (diff 8, category 4 = '101' + '1000'),
-    DC refinement (one 0 bit), AC first 1..63 (EOB = '1010'). The
-    successive-approximation reconstruction (8<<1)|0 = 16 must equal
-    the baseline stream's DC coefficient, so the pixels match the
-    baseline spec-literal golden exactly."""
-    import struct
-
-    from osm_pbf2json_spark.operators.jpeg import (
-        _AC_LUMA_SPEC,
-        _DC_LUMA_SPEC,
-        decode_jpeg,
-    )
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc, th, spec):
-        bits, vals = spec
-        return bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-
-    data = bytearray(b"\xff\xd8")
-    data += seg(0xDB, bytes([0]) + bytes([1] * 64))  # unit quant
-    data += seg(0xC2, bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0]))
-    data += seg(0xC4, dht(0, 0, _DC_LUMA_SPEC))
-    data += seg(0xC4, dht(1, 0, _AC_LUMA_SPEC))
-    # scan 1: DC first, Ss=0 Se=0 Ah=0 Al=1 — codes 16>>1 = 8 (cat 4):
-    # '101' + '1000' = 1011000, 1-padded to 0xB1
-    data += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01])) + bytes([0xB1])
-    # scan 2: DC refine, Ah=1 Al=0 — one 0 bit (16 & 1), padded 0x7F
-    data += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10])) + bytes([0x7F])
-    # scan 3: AC first 1..63, all zero — EOB '1010', padded 0xAF
-    data += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00])) + bytes([0xAF])
-    data += b"\xff\xd9"
-
-    w, h, rgb = decode_jpeg(bytes(data))
-    assert (w, h) == (8, 8)
-    assert (rgb == 130).all()
-
-
-def _jpeg_seg(marker, body):
-    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-
-def _jpeg_dht(tc, th, spec):
-    bits, vals = spec
-    return bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-
-
-def _enc_dc(bw, diff, codes):
-    t = int(abs(diff)).bit_length()
-    c, ln = codes[t]
-    bw.write(c, ln)
-    if t:
-        bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-
-
-def _enc_block_baseline(bw, zz, pred, cid, dc, ac):
-    _enc_dc(bw, int(zz[0]) - pred[cid], dc)
-    pred[cid] = int(zz[0])
-    nz = [k for k in range(1, 64) if zz[k]]
-    last = nz[-1] if nz else 0
-    run = 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            c, ln = ac[0xF0]
-            bw.write(c, ln)
-            run -= 16
-        s = abs(v).bit_length()
-        c, ln = ac[(run << 4) | s]
-        bw.write(c, ln)
-        bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last < 63:
-        c, ln = ac[0x00]
-        bw.write(c, ln)
-
-
-def _enc_ac_first_scan(bw, blocks, ss, se, al, ac):
-    """Progressive AC first scan (T.81 G.1.2.2) with cross-block EOB-run
-    accumulation, so the decoder's multi-block EOBRUN skip is exercised."""
-    eobrun = 0
-
-    def flush_eob():
-        nonlocal eobrun
-        if eobrun:
-            r = eobrun.bit_length() - 1
-            c, ln = ac[r << 4]
-            bw.write(c, ln)
-            if r:
-                bw.write(eobrun - (1 << r), r)
-            eobrun = 0
-
-    for zz in blocks:
-        if not any(abs(int(zz[k])) >> al for k in range(ss, se + 1)):
-            eobrun += 1
-            continue
-        flush_eob()
-        r = 0
-        for k in range(ss, se + 1):
-            v = int(zz[k])
-            av = abs(v) >> al
-            if av == 0:
-                r += 1
-                continue
-            while r > 15:
-                c, ln = ac[0xF0]
-                bw.write(c, ln)
-                r -= 16
-            s = av.bit_length()
-            c, ln = ac[(r << 4) | s]
-            bw.write(c, ln)
-            sv = av if v >= 0 else -av
-            bw.write(sv if sv >= 0 else sv + (1 << s) - 1, s)
-            r = 0
-        if r > 0:
-            eobrun = 1
-    flush_eob()
-
-
-def _enc_ac_refine_scan(bw, blocks, ss, se, al, ac):
-    """Progressive AC refinement (T.81 G.1.2.3): per-block EOB, buffered
-    correction bits flushed after each symbol, libjpeg bit order."""
-    for zz in blocks:
-        r = 0
-        pending = []
-        for k in range(ss, se + 1):
-            v = int(zz[k])
-            t = abs(v) >> al
-            if t == 0:
-                r += 1
-                continue
-            # ZRL emission must precede buffering THIS position's bit
-            # (libjpeg order): pending bits flushed with a ZRL are read
-            # by the decoder while it advances over that ZRL's 16 zeros,
-            # so they may only come from positions before those zeros
-            while r > 15:
-                c, ln = ac[0xF0]
-                bw.write(c, ln)
-                for b in pending:
-                    bw.write(b, 1)
-                pending = []
-                r -= 16
-            if t > 1:
-                pending.append((abs(v) >> al) & 1)
-                continue
-            c, ln = ac[(r << 4) | 1]
-            bw.write(c, ln)
-            bw.write(1 if v > 0 else 0, 1)
-            for b in pending:
-                bw.write(b, 1)
-            pending = []
-            r = 0
-        if r > 0 or pending:
-            c, ln = ac[0x00]
-            bw.write(c, ln)
-            for b in pending:
-                bw.write(b, 1)
-
-
-def test_jpeg_progressive_matches_baseline():
-    """Baseline and progressive streams built from the SAME synthesized
-    quantized coefficients must decode to identical pixels — grayscale
-    and 3-component 4:2:0 (24x16: the luma MCU-padded grid is 4x2
-    blocks but its own grid is 3x2, so non-interleaved AC scans must
-    use the component grid). The progressive stream uses successive
-    approximation (Al=1 first scans + Al=0 refinements) with band
-    splits and cross-block EOB runs; DC scans are interleaved."""
-    from osm_pbf2json_spark.operators.jpeg import (
-        _AC_CHROMA_SPEC,
-        _AC_LUMA_SPEC,
-        _BitWriter,
-        _DC_CHROMA_SPEC,
-        _DC_LUMA_SPEC,
-        _huff_codes,
-        decode_jpeg,
-    )
-
-    dc_l, ac_l = _huff_codes(_DC_LUMA_SPEC), _huff_codes(_AC_LUMA_SPEC)
-    dc_c, ac_c = _huff_codes(_DC_CHROMA_SPEC), _huff_codes(_AC_CHROMA_SPEC)
-    # Annex K AC tables carry no EOBn (r>0, s=0) symbols — those exist
-    # only in progressive streams, which ship custom tables. Flat table:
-    # all 256 symbols at code length 9 (canonical, all-ones unused).
-    flat_spec = ([0, 0, 0, 0, 0, 0, 0, 0, 255, 0, 0, 0, 0, 0, 0, 0],
-                 list(range(255)))
-    flat_ac = _huff_codes(flat_spec)
-    rng = np.random.Generator(np.random.PCG64(21))
-
-    def sparse_blocks(n):
-        out = []
-        for _ in range(n):
-            zz = np.zeros(64, np.int64)
-            zz[0] = int(rng.integers(-90, 90))
-            for _k in range(int(rng.integers(0, 10))):
-                zz[int(rng.integers(1, 64))] = int(rng.integers(-80, 80))
-            out.append(zz)
-        # ensure some all-zero-AC blocks so EOB runs span blocks
-        for i in range(0, n, 3):
-            out[i][1:] = 0
-        return out
-
-    # --- grayscale 8 blocks wide x 1 high (64x8) -------------------------
-    gy = sparse_blocks(8)
-    hdr = bytearray(b"\xff\xd8")
-    hdr += _jpeg_seg(0xDB, bytes([0]) + bytes([1] * 64))
-    sof_body = bytes([8]) + struct.pack(">HH", 8, 64) + bytes([1, 1, 0x11, 0])
-    hdr += _jpeg_seg(0xC4, _jpeg_dht(0, 0, _DC_LUMA_SPEC))
-    hdr += _jpeg_seg(0xC4, _jpeg_dht(1, 0, _AC_LUMA_SPEC))
-
-    base = bytearray(hdr)
-    base += _jpeg_seg(0xC0, sof_body)
-    bw = _BitWriter()
-    pred = {1: 0}
-    for zz in gy:
-        _enc_block_baseline(bw, zz, pred, 1, dc_l, ac_l)
-    bw.flush()
-    base += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0])) + bytes(bw.out)
-    base += b"\xff\xd9"
-
-    prog = bytearray(hdr)
-    prog += _jpeg_seg(0xC4, _jpeg_dht(1, 0, flat_spec))  # flat AC w/ EOBn
-    prog += _jpeg_seg(0xC2, sof_body)
-    # DC first at Al=1
-    bw = _BitWriter()
-    pred = {1: 0}
-    for zz in gy:
-        _enc_dc(bw, (int(zz[0]) >> 1) - pred[1], dc_l)
-        pred[1] = int(zz[0]) >> 1
-    bw.flush()
-    prog += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01])) + bytes(bw.out)
-    # AC first, two bands, Al=1
-    for ss, se in ((1, 20), (21, 63)):
-        bw = _BitWriter()
-        _enc_ac_first_scan(bw, gy, ss, se, 1, flat_ac)
-        bw.flush()
-        prog += _jpeg_seg(0xDA, bytes([1, 1, 0x00, ss, se, 0x01])) + bytes(bw.out)
-    # DC refine
-    bw = _BitWriter()
-    for zz in gy:
-        bw.write(int(zz[0]) & 1, 1)
-    bw.flush()
-    prog += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10])) + bytes(bw.out)
-    # AC refine, same bands
-    for ss, se in ((1, 20), (21, 63)):
-        bw = _BitWriter()
-        _enc_ac_refine_scan(bw, gy, ss, se, 0, flat_ac)
-        bw.flush()
-        prog += _jpeg_seg(0xDA, bytes([1, 1, 0x00, ss, se, 0x10])) + bytes(bw.out)
-    prog += b"\xff\xd9"
-
-    wb, hb, rgb_base = decode_jpeg(bytes(base))
-    wp, hp, rgb_prog = decode_jpeg(bytes(prog))
-    assert (wb, hb) == (64, 8) == (wp, hp)
-    assert (rgb_base == rgb_prog).all()
-
-    # --- 3-component 4:2:0, 24x16 ---------------------------------------
-    # luma padded grid 4x2 (MCU-interleaved), own grid 3x2 (AC scans);
-    # chroma grids 2x1. Padded-only luma blocks (column 3) are coded by
-    # the baseline scan but not by progressive AC scans — they are
-    # cropped away, so outputs still match on the visible 24x16.
-    yb = sparse_blocks(8)  # 4x2 row-major padded grid
-    cb = sparse_blocks(2)
-    cr = sparse_blocks(2)
-    y_own = [yb[ry * 4 + rx] for ry in range(2) for rx in range(3)]
-    for blk in (yb[3], yb[7]):  # padded column: DC only, zero AC
-        blk[1:] = 0
-
-    hdr3 = bytearray(b"\xff\xd8")
-    hdr3 += _jpeg_seg(0xDB, bytes([0]) + bytes([1] * 64))
-    hdr3 += _jpeg_seg(0xDB, bytes([1]) + bytes([1] * 64))
-    for tc, th, spec in (
-        (0, 0, _DC_LUMA_SPEC), (1, 0, _AC_LUMA_SPEC),
-        (0, 1, _DC_CHROMA_SPEC), (1, 1, _AC_CHROMA_SPEC),
-    ):
-        hdr3 += _jpeg_seg(0xC4, _jpeg_dht(tc, th, spec))
-    sof3 = (
-        bytes([8]) + struct.pack(">HH", 16, 24)
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
-    )
-
-    def mcu_iter():
-        """(cid, zz) in interleaved MCU order for 2x1 MCUs."""
-        for mx in range(2):
-            for by in range(2):
-                for bx in range(2):
-                    yield 1, yb[by * 4 + mx * 2 + bx]
-            yield 2, cb[mx]
-            yield 3, cr[mx]
-
-    base3 = bytearray(hdr3)
-    base3 += _jpeg_seg(0xC0, sof3)
-    bw = _BitWriter()
-    pred = {1: 0, 2: 0, 3: 0}
-    for cid, zz in mcu_iter():
-        dc, ac = (dc_l, ac_l) if cid == 1 else (dc_c, ac_c)
-        _enc_block_baseline(bw, zz, pred, cid, dc, ac)
-    bw.flush()
-    base3 += _jpeg_seg(
-        0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    ) + bytes(bw.out)
-    base3 += b"\xff\xd9"
-
-    prog3 = bytearray(hdr3)
-    prog3 += _jpeg_seg(0xC4, _jpeg_dht(1, 0, flat_spec))
-    prog3 += _jpeg_seg(0xC4, _jpeg_dht(1, 1, flat_spec))
-    prog3 += _jpeg_seg(0xC2, sof3)
-    # DC first, interleaved over all three components, Al=1
-    bw = _BitWriter()
-    pred = {1: 0, 2: 0, 3: 0}
-    for cid, zz in mcu_iter():
-        dc = dc_l if cid == 1 else dc_c
-        _enc_dc(bw, (int(zz[0]) >> 1) - pred[cid], dc)
-        pred[cid] = int(zz[0]) >> 1
-    bw.flush()
-    prog3 += _jpeg_seg(
-        0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 0, 0x01])
-    ) + bytes(bw.out)
-    # AC first scans per component (luma band-split), Al=1
-    for comp_sel, blocks, ac, bands in (
-        (1, y_own, flat_ac, ((1, 5), (6, 63))),
-        (2, cb, flat_ac, ((1, 63),)),
-        (3, cr, flat_ac, ((1, 63),)),
-    ):
-        tt = 0x00 if comp_sel == 1 else 0x11
-        for ss, se in bands:
-            bw = _BitWriter()
-            _enc_ac_first_scan(bw, blocks, ss, se, 1, ac)
-            bw.flush()
-            prog3 += _jpeg_seg(
-                0xDA, bytes([1, comp_sel, tt, ss, se, 0x01])
-            ) + bytes(bw.out)
-    # DC refine, interleaved
-    bw = _BitWriter()
-    for cid, zz in mcu_iter():
-        bw.write(int(zz[0]) & 1, 1)
-    bw.flush()
-    prog3 += _jpeg_seg(
-        0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 0, 0x10])
-    ) + bytes(bw.out)
-    # AC refine scans
-    for comp_sel, blocks, ac, bands in (
-        (1, y_own, flat_ac, ((1, 5), (6, 63))),
-        (2, cb, flat_ac, ((1, 63),)),
-        (3, cr, flat_ac, ((1, 63),)),
-    ):
-        tt = 0x00 if comp_sel == 1 else 0x11
-        for ss, se in bands:
-            bw = _BitWriter()
-            _enc_ac_refine_scan(bw, blocks, ss, se, 0, ac)
-            bw.flush()
-            prog3 += _jpeg_seg(
-                0xDA, bytes([1, comp_sel, tt, ss, se, 0x10])
-            ) + bytes(bw.out)
-    prog3 += b"\xff\xd9"
-
-    wb, hb, rgb_base3 = decode_jpeg(bytes(base3))
-    wp, hp, rgb_prog3 = decode_jpeg(bytes(prog3))
-    assert (wb, hb) == (24, 16) == (wp, hp)
-    assert (rgb_base3 == rgb_prog3).all()
-
-
 def test_simhash_fold_chunk_boundary(spark):
     """The flattened simhash fold chunks rows at ~1M tokens; fingerprints
     must be identical whether docs land in one chunk or split across
@@ -1368,671 +783,3 @@ def test_simhash_fold_chunk_boundary(spark):
             dtype=np.uint64
         )
         assert int(word.astype(np.int64)) == base[r["doc_id"]], r["doc_id"]
-
-
-def test_jpeg_decoder_never_hangs_on_garbage():
-    """Truncations, bit-flips, and random JPEG-magic payloads either
-    decode or raise promptly — no hangs, no giant allocations (crafted
-    dimension fields are rejected by the max_pixels guard)."""
-    import time
-
-    import pytest
-
-    from osm_pbf2json_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.Generator(np.random.PCG64(33))
-    img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    good = bytearray(encode_jpeg(img, quality=80))
-
-    t0 = time.time()
-    for cut in (2, 3, 10, 50, len(good) // 2, len(good) - 3):
-        try:
-            decode_jpeg(bytes(good[:cut]))  # truncations may still decode
-        except Exception:
-            pass  # ...or raise promptly — either is clean
-    for trial in range(30):
-        mut = bytearray(good)
-        for _ in range(int(rng.integers(1, 6))):
-            mut[int(rng.integers(2, len(mut)))] = int(rng.integers(0, 256))
-        try:
-            w, h, rgb = decode_jpeg(bytes(mut))
-            assert rgb.shape == (h, w, 3)
-        except Exception:
-            pass  # clean failure is acceptable
-    for trial in range(20):
-        junk = b"\xff\xd8\xff" + bytes(rng.integers(0, 256, size=200, dtype=np.uint8))
-        try:
-            decode_jpeg(junk)
-        except Exception:
-            pass
-    assert time.time() - t0 < 30  # bounded work on all adversarial inputs
-
-
-def test_jpeg_restart_markers_and_dc_reset():
-    """Hand-built two-MCU grayscale stream with DRI=1: an RST0 marker
-    separates the MCUs and resets the DC predictor, so the second block's
-    DC diff is absolute. Solid values decode exactly."""
-    import struct
-
-    from osm_pbf2json_spark.operators.jpeg import (
-        _AC_LUMA_SPEC,
-        _BitWriter,
-        _DC_LUMA_SPEC,
-        _huff_codes,
-        decode_jpeg,
-    )
-
-    dc = _huff_codes(_DC_LUMA_SPEC)
-    ac = _huff_codes(_AC_LUMA_SPEC)
-
-    def block_bits(bw, dc_diff):
-        from osm_pbf2json_spark.operators.jpeg import _category
-
-        t = _category(dc_diff)
-        code, ln = dc[t]
-        bw.write(code, ln)
-        if t:
-            bw.write(dc_diff if dc_diff >= 0 else dc_diff + (1 << t) - 1, t)
-        code, ln = ac[0x00]
-        bw.write(code, ln)
-
-    # MCU 1: value 140 → DC = 8*(140-128) = 96 (diff from pred 0)
-    bw1 = _BitWriter()
-    block_bits(bw1, 96)
-    bw1.flush()
-    # MCU 2 (after restart, pred reset): value 120 → DC = 8*(120-128) = -64
-    bw2 = _BitWriter()
-    block_bits(bw2, -64)
-    bw2.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc, th, spec):
-        bits, vals = spec
-        return bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-
-    data = bytearray(b"\xff\xd8")
-    data += seg(0xDB, bytes([0]) + bytes([1] * 64))
-    data += seg(0xC0, bytes([8]) + struct.pack(">HH", 8, 16) + bytes([1, 1, 0x11, 0]))
-    data += seg(0xC4, dht(0, 0, _DC_LUMA_SPEC))
-    data += seg(0xC4, dht(1, 0, _AC_LUMA_SPEC))
-    data += seg(0xDD, struct.pack(">H", 1))  # DRI = 1 MCU
-    data += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    data += bytes(bw1.out) + b"\xff\xd0" + bytes(bw2.out)
-    data += b"\xff\xd9"
-
-    w, h, rgb = decode_jpeg(bytes(data))
-    assert (w, h) == (16, 8)
-    assert (rgb[:, :8] == 140).all()
-    assert (rgb[:, 8:] == 120).all()
-
-
-def test_jpeg_progressive_restart_markers():
-    """Progressive DC scan with DRI=1: RST0 between the two data units
-    resets the DC predictor, so the second unit's diff is absolute
-    (same contract as the baseline restart test, through the
-    progressive path)."""
-    from osm_pbf2json_spark.operators.jpeg import (
-        _AC_LUMA_SPEC,
-        _BitWriter,
-        _DC_LUMA_SPEC,
-        _huff_codes,
-        decode_jpeg,
-    )
-
-    dc = _huff_codes(_DC_LUMA_SPEC)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc, th, spec):
-        bits, vals = spec
-        return bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-
-    def dc_bits(vals):
-        bw = _BitWriter()
-        for v in vals:
-            t = int(abs(v)).bit_length()
-            c, ln = dc[t]
-            bw.write(c, ln)
-            if t:
-                bw.write(v if v >= 0 else v + (1 << t) - 1, t)
-        bw.flush()
-        return bytes(bw.out)
-
-    # 16x8 grayscale = 2 blocks; DC values 16 and 24 (solid 130 / 131)
-    data = bytearray(b"\xff\xd8")
-    data += seg(0xDB, bytes([0]) + bytes([1] * 64))
-    data += seg(0xC2, bytes([8]) + struct.pack(">HH", 8, 16) + bytes([1, 1, 0x11, 0]))
-    data += seg(0xC4, dht(0, 0, _DC_LUMA_SPEC))
-    data += seg(0xC4, dht(1, 0, _AC_LUMA_SPEC))
-    data += seg(0xDD, struct.pack(">H", 1))  # DRI = 1
-    # DC first scan at Al=0: unit 1 codes diff 16; RST0; unit 2 codes
-    # ABSOLUTE 24 (predictor reset). AC scan: both blocks all-zero EOB.
-    data += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00]))
-    data += dc_bits([16]) + b"\xff\xd0" + dc_bits([24])
-    # AC scan 1..63: both blocks all-zero — one EOB (0x00) per block;
-    # DRI=1 still applies, so an RST0 separates the two data units here
-    # too (a real progressive encoder emits restarts in every scan)
-    data += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
-    ac = _huff_codes(_AC_LUMA_SPEC)
-
-    def eob_unit():
-        bw = _BitWriter()
-        c, ln = ac[0x00]
-        bw.write(c, ln)
-        bw.flush()
-        return bytes(bw.out)
-
-    data += eob_unit() + b"\xff\xd0" + eob_unit()
-    data += b"\xff\xd9"
-
-    w, h, rgb = decode_jpeg(bytes(data))
-    assert (w, h) == (16, 8)
-    assert (rgb[:, :8] == 130).all() and (rgb[:, 8:] == 131).all()
-
-
-def test_jpeg_corrupt_dht_and_adobe_rgb():
-    """Review regressions: (1) a corrupt DHT mapping a symbol to a huge
-    magnitude category raises ValueError (previously OverflowError from
-    a 2^200-bit receive, escaping the contract); (2) Adobe APP14
-    transform=0 / RGB component ids raise NotImplementedError instead
-    of silently applying the YCbCr matrix to RGB planes; (3) decode
-    stays fast on larger payloads (the bit reader trims consumed bits —
-    was quadratic)."""
-    import time
-
-    import pytest
-
-    from osm_pbf2json_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.Generator(np.random.PCG64(41))
-    img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    good = bytearray(encode_jpeg(img, quality=80))
-    # hand-built stream whose DC table maps the (only) code to magnitude
-    # category 200 — br.receive(200) previously built a 2^200-bit int
-    # and OverflowError escaped the ValueError contract
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    from osm_pbf2json_spark.operators.jpeg import _AC_LUMA_SPEC
-
-    bad = bytearray(b"\xff\xd8")
-    bad += seg(0xDB, bytes([0]) + bytes([1] * 64))
-    bad += seg(0xC0, bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0]))
-    bad += seg(0xC4, bytes([0x00, 1] + [0] * 15) + bytes([200]))  # DC cat 200!
-    bits, vals = _AC_LUMA_SPEC
-    bad += seg(0xC4, bytes([0x10]) + bytes(bits) + bytes(vals))
-    bad += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    bad += b"\x00\x00" + b"\xff\xd9"
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(bad))
-
-    # Adobe APP14 transform=0: splice the marker right after SOI
-    app14 = b"\xff\xee" + struct.pack(">H", 14) + b"Adobe" + b"\x00" * 6 + b"\x00"
-    adobe = bytes(good[:2]) + app14 + bytes(good[2:])
-    with pytest.raises(NotImplementedError, match="RGB"):
-        decode_jpeg(adobe)
-
-    # decode time linear-ish in payload size (bit-reader trim)
-    big = rng.integers(0, 256, size=(256, 256, 3), dtype=np.uint8)
-    payload = encode_jpeg(big, quality=95)  # ~100KB of entropy data
-    t0 = time.time()
-    w, h, _ = decode_jpeg(payload)
-    assert (w, h) == (256, 256)
-    assert time.time() - t0 < 20
-
-
-def _imageio_decode_rgb(spark, path):
-    """Decode an image through the JVM's javax.imageio (an independent,
-    libjpeg-derived codec shipped with the JDK) and hand the pixels back
-    losslessly via a temporary 24-bit BMP (rows bottom-up, BGR, each
-    padded to 4 bytes)."""
-    import os
-    import tempfile
-
-    jvm = spark._jvm
-    img = jvm.javax.imageio.ImageIO.read(jvm.java.io.File(os.path.abspath(path)))
-    # normalize to TYPE_INT_RGB (lossless for opaque sources) so the BMP
-    # is always 24-bit
-    rgbimg = jvm.java.awt.image.BufferedImage(img.getWidth(), img.getHeight(), 1)
-    g = rgbimg.createGraphics()
-    g.drawImage(img, 0, 0, None)
-    g.dispose()
-    tmp = tempfile.mktemp(suffix=".bmp")
-    try:
-        assert jvm.javax.imageio.ImageIO.write(rgbimg, "bmp", jvm.java.io.File(tmp))
-        bmp = open(tmp, "rb").read()
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    off = struct.unpack_from("<I", bmp, 10)[0]
-    w, h = struct.unpack_from("<ii", bmp, 18)
-    assert struct.unpack_from("<HI", bmp, 28) == (24, 0)  # 24 bpp, BI_RGB
-    stride = (w * 3 + 3) & ~3
-    px = np.frombuffer(bmp, np.uint8, stride * abs(h), off).reshape(abs(h), stride)
-    rgb = px[:, : w * 3].reshape(abs(h), w, 3)[:, :, ::-1]
-    return w, abs(h), rgb[::-1] if h > 0 else rgb
-
-
-def test_jpeg_external_fixtures_match_imageio(spark):
-    """ADVICE r4 #5: pin the JPEG decoder against an INDEPENDENT codec
-    on files produced by an external encoder (public Rust embedded-book
-    doc assets: f3.jpg is progressive/SOF2 with 2x1-subsampled chroma
-    and successive approximation; verify.jpeg is baseline/SOF0 4:4:4).
-    Every sample must match javax.imageio within IDCT+upsampling
-    rounding (±4); a mean drift would betray a coefficient-decode bug
-    (the luma plane alone pins the progressive entropy decode, since
-    chroma upsampling never touches it)."""
-    import os
-
-    from osm_pbf2json_spark.operators.jpeg import decode_jpeg
-
-    here = os.path.dirname(__file__)
-    for name, kind in (
-        ("external_progressive.jpg", "progressive"),
-        ("external_baseline.jpg", "baseline"),
-    ):
-        path = os.path.join(here, "data", name)
-        w, h, ref = _imageio_decode_rgb(spark, path)
-        w2, h2, ours = decode_jpeg(open(path, "rb").read())
-        assert (w2, h2) == (w, h) == (720, 477), (name, w2, h2)
-        ad = np.abs(ours.astype(np.int16) - ref.astype(np.int16))
-        assert ad.max() <= 4, (name, kind, int(ad.max()))
-        assert ad.mean() < 1.0, (name, kind, float(ad.mean()))
-        luma = lambda a: (  # noqa: E731
-            0.299 * a[:, :, 0] + 0.587 * a[:, :, 1] + 0.114 * a[:, :, 2]
-        )
-        dy = np.abs(luma(ours.astype(np.float64)) - luma(ref.astype(np.float64)))
-        assert dy.max() < 4.0 and dy.mean() < 0.5, (name, kind, float(dy.max()))
-
-
-def test_jpeg_fancy_upsample_kernel():
-    """_upsample: factor-2 triangular weights with replicated edges
-    (IJG h2v1/h2v2 fancy upsampling); non-2 factors replicate samples,
-    matching libjpeg's int_upsample. Constant planes are invariant —
-    which is why the hand-built solid-gray 4:2:0 golden pins the exact
-    pixel value through either kernel."""
-    from osm_pbf2json_spark.operators.jpeg import _upsample
-
-    a = np.array([[0.0, 4.0, 8.0]])
-    up = _upsample(a, 2, axis=1)
-    assert np.allclose(up, [[0.0, 1.0, 3.0, 5.0, 7.0, 8.0]])
-    assert np.allclose(_upsample(a.T, 2, axis=0), up.T)
-    # non-2 factor -> replication; constant plane invariant under fancy
-    assert np.allclose(_upsample(a, 4, axis=1), np.repeat(a, 4, axis=1))
-    c = np.full((2, 5), 7.0)
-    assert np.allclose(_upsample(c, 2, axis=0), np.full((4, 5), 7.0))
-    # single-sample axis cannot triangulate -> replication
-    s = np.array([[3.0]])
-    assert np.allclose(_upsample(s, 2, axis=0), [[3.0], [3.0]])
-
-
-def test_vp8l_roundtrip_and_distance_map():
-    """encode_vp8l (minimal conformant subset) → decode_vp8l must be
-    identity for arbitrary RGB content at awkward sizes. The 120-entry
-    near-distance map's head is pinned against the spec's published
-    table (hex-packed convention: (dx, dy) with scan distance
-    dy·xsize+dx) and its invariants checked."""
-    from osm_pbf2json_spark.operators.vp8l import (
-        _DIST_MAP,
-        decode_vp8l,
-        encode_vp8l,
-    )
-
-    rng = np.random.Generator(np.random.PCG64(11))
-    for w, h in [(1, 1), (17, 3), (3, 29), (40, 25)]:
-        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        ww, hh, back, alpha = decode_vp8l(encode_vp8l(img))
-        assert (ww, hh) == (w, h) and not alpha
-        assert (back == img).all(), (w, h)
-
-    # spec table head (kCodeToPlaneCodes 0x18,0x07,0x17,0x19,0x28,0x06,
-    # 0x27,0x29,0x16,0x1a,...: yoffset = code>>4, xoffset = 8-(code&0xf))
-    expect_head = [(0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0),
-                   (1, 2), (-1, 2), (2, 1), (-2, 1), (2, 2), (-2, 2),
-                   (0, 3), (3, 0), (1, 3), (-1, 3), (3, 1), (-3, 1),
-                   (2, 3), (-2, 3), (3, 2), (-3, 2)]
-    assert _DIST_MAP[:22] == expect_head
-    assert len(_DIST_MAP) == len(set(_DIST_MAP)) == 120
-    assert all(-7 <= dx <= 8 and 0 <= dy <= 7 for dx, dy in _DIST_MAP)
-    assert not any(dy == 0 and dx <= 0 for dx, dy in _DIST_MAP)
-
-
-def test_vp8l_backref_and_color_cache():
-    """Hand-built spec-literal streams: (a) an LZ77 backref (green
-    length code 259 → length 4; plain distance 4 via prefix value 124 =
-    code 13 + 5 extra bits) over a custom 3-symbol green code emitted
-    through the full code-length-code machinery, and (b) a color cache
-    hit (hash 0x1e35a7bd, 4-bit cache) addressed by a cache symbol."""
-    from osm_pbf2json_spark.operators.vp8l import (
-        _BitWriter,
-        _emit_msb,
-        _write_single_symbol_code,
-        decode_vp8l,
-    )
-
-    # --- (a) backref ------------------------------------------------
-    bw = _BitWriter()
-    bw.write(8 - 1, 14)   # width 8
-    bw.write(1 - 1, 14)   # height 1
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(0, 1)        # no transforms
-    bw.write(0, 1)        # no cache
-    bw.write(0, 1)        # no meta
-    # green code: lengths {10:1, 20:2, 259:2} via CLC {1,2,17,18} all
-    # len 2 (canonical: 1→00, 2→01, 17→10, 18→11)
-    bw.write(0, 1)        # not simple
-    bw.write(5 - 4, 4)    # 5 CLC entries in order 17,18,0,1,2
-    for v in (2, 2, 0, 2, 2):
-        bw.write(v, 3)
-    bw.write(0, 1)        # no max_symbol: read all 280
-    def clc(sym):
-        _emit_msb(bw, {1: 0b00, 2: 0b01, 17: 0b10, 18: 0b11}[sym], 2)
-    clc(17); bw.write(10 - 3, 3)      # 10 zeros (sym 0..9)
-    clc(1)                            # sym 10 → len 1
-    clc(17); bw.write(9 - 3, 3)       # 9 zeros (11..19)
-    clc(2)                            # sym 20 → len 2
-    clc(18); bw.write(138 - 11, 7)    # 138 zeros (21..158)
-    clc(18); bw.write(100 - 11, 7)    # 100 zeros (159..258)
-    clc(2)                            # sym 259 → len 2
-    clc(18); bw.write(20 - 11, 7)     # 20 zeros (260..279)
-    for sym in (60, 70, 255):         # red, blue, alpha: 0-bit codes
-        _write_single_symbol_code(bw, sym)
-    _write_single_symbol_code(bw, 13)  # distance code 13, 0 bits
-    # canonical green codes: 10→'0', 20→'10', 259→'11'
-    _emit_msb(bw, 0b0, 1)    # g=10
-    _emit_msb(bw, 0b10, 2)   # g=20
-    _emit_msb(bw, 0b0, 1)
-    _emit_msb(bw, 0b10, 2)
-    _emit_msb(bw, 0b11, 2)   # length code 259 → length 4
-    bw.write(124 - 96 - 1, 5)  # distance prefix value 124 → plain 4
-    w, h, rgb, _ = decode_vp8l(b"\x2f" + bw.done())
-    assert (w, h) == (8, 1)
-    assert (rgb[0, :, 1] == [10, 20, 10, 20, 10, 20, 10, 20]).all()
-    assert (rgb[0, :, 0] == 60).all() and (rgb[0, :, 2] == 70).all()
-
-    # --- (b) color cache --------------------------------------------
-    px = (255 << 24) | (60 << 16) | (10 << 8) | 70  # first literal ARGB
-    idx = ((0x1E35A7BD * px) & 0xFFFFFFFF) >> 28    # 4-bit cache index
-    cache_sym = 280 + idx
-    bw = _BitWriter()
-    bw.write(3 - 1, 14)
-    bw.write(1 - 1, 14)
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(0, 1)   # no transforms
-    bw.write(1, 1)   # color cache
-    bw.write(4, 4)   # cache_bits = 4 → alphabet 256+24+16 = 296
-    bw.write(0, 1)   # no meta
-    # green lengths {10:1, 20:2, cache_sym:2} — same CLC shape
-    bw.write(0, 1)
-    bw.write(5 - 4, 4)
-    for v in (2, 2, 0, 2, 2):
-        bw.write(v, 3)
-    # max_symbol caps CLC *reads* (libwebp ReadHuffmanCodeLengths:
-    # `if (max_symbol-- == 0) break`): 7 reads below, then the
-    # remaining lengths (after cache_sym) stay 0 — a 1-zero tail can't
-    # be emitted via code 17 (min run 3)
-    n_reads = 0
-    bw.write(1, 1)   # use max_symbol
-    bw.write(1, 3)   # length_nbits = 2 + 2*1 = 4 (7-2 needs 3 bits)
-    bw.write(7 - 2, 4)  # max_symbol = 7
-    clc(17); bw.write(10 - 3, 3)      # read 1: sym 0..9 zeros
-    clc(1)                            # read 2: sym 10 → len 1
-    clc(17); bw.write(9 - 3, 3)       # read 3: sym 11..19 zeros
-    clc(2)                            # read 4: sym 20 → len 2
-    rest = cache_sym - 21  # zeros from 21 to cache_sym-1
-    while rest > 0:
-        take = min(138, rest)
-        if take < 11:
-            clc(17); bw.write(take - 3, 3)
-        else:
-            clc(18); bw.write(take - 11, 7)
-        rest -= take
-        n_reads += 1
-    assert n_reads == 2  # reads 5-6 (138 + 135)
-    clc(2)  # read 7: cache_sym → len 2
-    for sym in (60, 70, 255):
-        _write_single_symbol_code(bw, sym)
-    _write_single_symbol_code(bw, 0)  # distance: unused
-    _emit_msb(bw, 0b0, 1)    # literal g=10 → cached
-    _emit_msb(bw, 0b10, 2)   # literal g=20
-    _emit_msb(bw, 0b11, 2)   # cache hit → first pixel again
-    w, h, rgb, _ = decode_vp8l(b"\x2f" + bw.done())
-    assert (rgb[0, :, 1] == [10, 20, 10]).all()
-
-
-def test_vp8l_mapped_distance_backref():
-    """A backref through the NEAR-DISTANCE map (code ≤ 120): distance
-    code 3 decodes as (dx +1, dy 1) → scan distance xsize+1 per the
-    spec's kCodeToPlaneCodes convention (yoffset = code>>4,
-    xoffset = 8-(code&0xf)). The mirrored table (dx −1 → xsize−1)
-    copies different source pixels on this asymmetric row, so the
-    assertion pins the orientation end-to-end, not just the table
-    head."""
-    from osm_pbf2json_spark.operators.vp8l import (
-        _BitWriter,
-        _emit_msb,
-        _write_single_symbol_code,
-        decode_vp8l,
-    )
-
-    bw = _BitWriter()
-    bw.write(5 - 1, 14)   # width 5
-    bw.write(2 - 1, 14)   # height 2
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(0, 1)        # no transforms
-    bw.write(0, 1)        # no cache
-    bw.write(0, 1)        # no meta
-    # green code: lengths {10:1, 20:2, 259:2} (same CLC machinery as
-    # test_vp8l_backref_and_color_cache)
-    bw.write(0, 1)
-    bw.write(5 - 4, 4)
-    for v in (2, 2, 0, 2, 2):
-        bw.write(v, 3)
-    bw.write(0, 1)
-
-    def clc(sym):
-        _emit_msb(bw, {1: 0b00, 2: 0b01, 17: 0b10, 18: 0b11}[sym], 2)
-
-    clc(17); bw.write(10 - 3, 3)      # 10 zeros (sym 0..9)
-    clc(1)                            # sym 10 → len 1
-    clc(17); bw.write(9 - 3, 3)       # 9 zeros (11..19)
-    clc(2)                            # sym 20 → len 2
-    clc(18); bw.write(138 - 11, 7)    # 138 zeros (21..158)
-    clc(18); bw.write(100 - 11, 7)    # 100 zeros (159..258)
-    clc(2)                            # sym 259 → len 2
-    clc(18); bw.write(20 - 11, 7)     # 20 zeros (260..279)
-    for sym in (60, 70, 255):
-        _write_single_symbol_code(bw, sym)
-    # distance prefix SYMBOL 2 → lz77 value 3 → map code 3 → dist xsize+1
-    _write_single_symbol_code(bw, 2)
-    # greens: row0 = 10,20,20,20,10; row1 = 10, then backref len 4
-    _emit_msb(bw, 0b0, 1)    # 10
-    _emit_msb(bw, 0b10, 2)   # 20
-    _emit_msb(bw, 0b10, 2)   # 20
-    _emit_msb(bw, 0b10, 2)   # 20
-    _emit_msb(bw, 0b0, 1)    # 10
-    _emit_msb(bw, 0b0, 1)    # 10
-    _emit_msb(bw, 0b11, 2)   # length code 259 → length 4, dist code 3
-    w, h, rgb, _ = decode_vp8l(b"\x2f" + bw.done())
-    assert (w, h) == (5, 2)
-    # dist = 5+1 = 6: positions 6..9 copy positions 0..3
-    assert (rgb[0, :, 1] == [10, 20, 20, 20, 10]).all()
-    assert (rgb[1, :, 1] == [10, 10, 20, 20, 20]).all()
-
-
-def test_vp8l_transforms():
-    """Hand-built transform streams: subtract-green, whole-image
-    predictor mode 2 (top), and 4-color palette with 2-bit pixel
-    bundling — each decoded against the independently-computed
-    expected image."""
-    from osm_pbf2json_spark.operators.vp8l import (
-        _BitWriter,
-        _emit_msb,
-        _write_single_symbol_code,
-        _write_uniform8_code,
-        decode_vp8l,
-    )
-
-    # --- subtract-green ---------------------------------------------
-    rng = np.random.Generator(np.random.PCG64(5))
-    target = rng.integers(0, 256, size=(3, 5, 3), dtype=np.uint8)
-    g = target[:, :, 1].astype(np.int16)
-    coded = target.astype(np.int16).copy()
-    coded[:, :, 0] = (coded[:, :, 0] - g) % 256  # r - g
-    coded[:, :, 2] = (coded[:, :, 2] - g) % 256  # b - g
-    bw = _BitWriter()
-    bw.write(5 - 1, 14)
-    bw.write(3 - 1, 14)
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(1, 1); bw.write(2, 2)  # transform: subtract green
-    bw.write(0, 1)  # no more transforms
-    bw.write(0, 1); bw.write(0, 1)  # no cache, no meta
-    _write_uniform8_code(bw, 280)
-    _write_uniform8_code(bw, 256)
-    _write_uniform8_code(bw, 256)
-    _write_single_symbol_code(bw, 255)
-    _write_single_symbol_code(bw, 0)
-    for r, gg, b in coded.reshape(-1, 3):
-        _emit_msb(bw, int(gg), 8)
-        _emit_msb(bw, int(r), 8)
-        _emit_msb(bw, int(b), 8)
-    w, h, rgb, _ = decode_vp8l(b"\x2f" + bw.done())
-    assert (rgb == target).all()
-
-    # --- predictor mode 2 (top) -------------------------------------
-    target = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
-    res = target.astype(np.int16).copy()
-    # residual rules: (0,0) black pred (alpha+0xff only), row 0 left,
-    # col 0 top, else mode-2 top
-    res[0, 1:] = (target[0, 1:].astype(np.int16)
-                  - target[0, :-1].astype(np.int16)) % 256
-    res[1:, :] = (target[1:, :].astype(np.int16)
-                  - target[:-1, :].astype(np.int16)) % 256
-    # careful: col-0 rule (top) coincides with mode 2 here
-    bw = _BitWriter()
-    bw.write(4 - 1, 14)
-    bw.write(4 - 1, 14)
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(1, 1); bw.write(0, 2)  # predictor transform
-    bw.write(0, 3)                  # size_bits = 2 → 4x4 block → 1x1 modes
-    # mode subimage: every spatially-coded image (incl. transform
-    # subimages) starts with its own color-cache flag
-    bw.write(0, 1)                      # no cache
-    # all five codes single-symbol (mode pixel g=2)
-    _write_single_symbol_code(bw, 2)    # green = mode 2
-    _write_single_symbol_code(bw, 0)    # red
-    _write_single_symbol_code(bw, 0)    # blue
-    _write_single_symbol_code(bw, 255)  # alpha
-    _write_single_symbol_code(bw, 0)    # distance
-    bw.write(0, 1)  # no more transforms
-    bw.write(0, 1); bw.write(0, 1)
-    _write_uniform8_code(bw, 280)
-    _write_uniform8_code(bw, 256)
-    _write_uniform8_code(bw, 256)
-    _write_single_symbol_code(bw, 0)   # alpha residual always 0
-    _write_single_symbol_code(bw, 0)
-    for r, gg, b in res.reshape(-1, 3):
-        _emit_msb(bw, int(gg) & 0xFF, 8)
-        _emit_msb(bw, int(r) & 0xFF, 8)
-        _emit_msb(bw, int(b) & 0xFF, 8)
-    w, h, rgb, _ = decode_vp8l(b"\x2f" + bw.done())
-    assert (rgb == target).all()
-
-    # --- 4-color palette, 2-bit bundling ----------------------------
-    palette = np.array(
-        [[200, 0, 0], [0, 180, 0], [0, 0, 160], [255, 255, 255]], np.uint8
-    )
-    idx = np.array([[0, 1, 2, 3, 0, 1], [3, 3, 2, 1, 0, 0]], np.uint8)
-    target = palette[idx]
-    deltas = np.diff(
-        np.concatenate([np.zeros((1, 3), np.int16),
-                        palette.astype(np.int16)]), axis=0
-    ) % 256
-    alpha_deltas = [255, 0, 0, 0]
-    packed = np.zeros((2, 2), np.uint8)  # ceil(6/4)=2 packed columns
-    for y in range(2):
-        for x in range(6):
-            packed[y, x // 4] |= idx[y, x] << (2 * (x % 4))
-    bw = _BitWriter()
-    bw.write(6 - 1, 14)
-    bw.write(2 - 1, 14)
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(1, 1); bw.write(3, 2)  # color indexing
-    bw.write(4 - 1, 8)              # n_colors = 4
-    # palette subimage (4x1 of component deltas) — cache flag first
-    bw.write(0, 1)                  # no cache
-    _write_uniform8_code(bw, 280)
-    _write_uniform8_code(bw, 256)
-    _write_uniform8_code(bw, 256)
-    bw.write(1, 1); bw.write(1, 1)  # alpha: simple, 2 symbols
-    bw.write(1, 1); bw.write(255, 8)  # first symbol 255 (code 1)
-    bw.write(0, 8)                    # second symbol 0
-    _write_single_symbol_code(bw, 0)  # distance
-    for i in range(4):
-        d = deltas[i]
-        _emit_msb(bw, int(d[1]), 8)  # green delta
-        _emit_msb(bw, int(d[0]), 8)  # red
-        _emit_msb(bw, int(d[2]), 8)  # blue
-        # alpha: canonical over {0,255}: 0→'0', 255→'1'
-        _emit_msb(bw, 1 if alpha_deltas[i] == 255 else 0, 1)
-    bw.write(0, 1)  # no more transforms
-    bw.write(0, 1); bw.write(0, 1)
-    _write_uniform8_code(bw, 280)
-    _write_single_symbol_code(bw, 0)
-    _write_single_symbol_code(bw, 0)
-    _write_single_symbol_code(bw, 255)
-    _write_single_symbol_code(bw, 0)
-    for y in range(2):
-        for x in range(2):
-            _emit_msb(bw, int(packed[y, x]), 8)
-    w, h, rgb, _ = decode_vp8l(b"\x2f" + bw.done())
-    assert (w, h) == (6, 2)
-    assert (rgb == target).all()
-
-
-def test_vp8l_fuzz_valueerror_contract():
-    """decode_vp8l on arbitrary/corrupted bytes must either decode or
-    raise ValueError (never IndexError/struct.error/hang) — that is
-    the one contract a caller routes corrupt payloads on.
-    Covers random blobs and single-byte mutations of a valid stream
-    (the latter keep the header plausible, reaching deep decode
-    paths: simple-code symbols past the alphabet, incomplete trees,
-    backrefs out of range, truncation)."""
-    from osm_pbf2json_spark.operators.vp8l import decode_vp8l, encode_vp8l
-
-    rng = np.random.Generator(np.random.PCG64(21))
-    img = rng.integers(0, 256, size=(9, 11, 3), dtype=np.uint8)
-    valid = bytearray(encode_vp8l(img))
-
-    n_ok = n_err = 0
-    for _ in range(150):
-        blob = b"\x2f" + rng.integers(0, 256, size=40, dtype=np.uint8).tobytes()
-        try:
-            decode_vp8l(blob, max_pixels=1 << 16)
-            n_ok += 1
-        except ValueError:
-            n_err += 1
-    assert n_err > 0  # random blobs overwhelmingly malformed
-
-    for _ in range(200):
-        mut = bytearray(valid)
-        i = int(rng.integers(1, len(mut)))
-        mut[i] ^= 1 << int(rng.integers(0, 8))
-        try:
-            decode_vp8l(bytes(mut), max_pixels=1 << 16)
-        except ValueError:
-            pass
-    for cut in (2, 5, 9, len(valid) // 2, len(valid) - 1):
-        try:
-            decode_vp8l(bytes(valid[:cut]), max_pixels=1 << 16)
-        except ValueError:
-            pass

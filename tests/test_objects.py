@@ -67,15 +67,18 @@ def test_node_geo_is_point(alexanderplatz):
 
 def test_way_geometry_golden(spark):
     """Way centroid/bounds from resolved nodes; missing refs dropped
-    silently (mod.rs:36-47)."""
+    silently (mod.rs:36-47), and so are refs to nodes with a NULL or NaN
+    coordinate."""
     t = make_tables(
         spark,
         nodes=[
             (1, 49.0, 5.0, {}),
             (2, 50.0, 6.0, {}),
             (3, 49.0, 7.0, {}),
+            (4, float("nan"), 8.0, {}),
+            (5, 49.5, None, {}),
         ],
-        ways=[(10, [1, 2, 3, 999], {"highway": "residential"})],
+        ways=[(10, [1, 4, 2, 3, 5, 999], {"highway": "residential"})],
     )
     row = objects(t, "highway").collect()[0]
     assert row["centroid"]["lon"] == pytest.approx(6.0, abs=1e-5)
@@ -108,15 +111,17 @@ def test_relation_with_one_way_hull(spark):
 
 
 def test_relation_with_multiple_nodes_hull(spark):
-    # mod.rs:352-386: interior node dropped, closed rectangle
+    # mod.rs:352-386: interior node dropped, closed rectangle; a node
+    # member with a NaN coordinate counts as missing
     nodes = [
         (1, 52.0, 6.0, {}),
         (2, 50.0, 6.0, {}),
         (3, 50.0, 8.0, {}),
         (4, 52.0, 8.0, {}),
         (5, 51.0, 7.0, {}),
+        (6, 53.0, float("nan"), {}),
     ]
-    members = [("node", i, "something") for i in (1, 2, 3, 4, 5)]
+    members = [("node", i, "something") for i in (1, 2, 3, 4, 5, 6)]
     t = make_tables(spark, nodes=nodes, relations=[(42, members, {"x": "y"})])
     row = objects(t, "x", retain_coordinates=True).collect()[0]
     coords = [(c["lon"], c["lat"]) for c in row["coordinates"]]

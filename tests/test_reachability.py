@@ -18,10 +18,6 @@ ALLOWED_UNREACHED = {
     f"{PKG}._daemon": "loaded by name through spark.python.daemon.module",
     f"{PKG}.plans.lineage": "north-star lineage manifests and restart, reached only by tests so far",
     f"{PKG}.sources.pages": "north-star pages table, reached only by tests so far",
-    f"{PKG}.operators.jpeg": "dead codec, to be deleted with its tests (ROADMAP direction 3)",
-    f"{PKG}.operators.vp8l": "dead codec, to be deleted with its tests (ROADMAP direction 3)",
-    f"{PKG}.streaming.index_maintain": "dead, to be deleted with its tests (ROADMAP direction 3)",
-    f"{PKG}.plans.bucketing": "dead, to be deleted with its tests (ROADMAP direction 3)",
 }
 
 

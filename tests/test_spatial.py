@@ -430,6 +430,29 @@ def test_knn_histogram_stays_off_python_rdds(spark):
     assert len(got) == 3
 
 
+def test_knn_histogram_below_cap_is_one_action(spark):
+    """Below `max_hist_cells` the histogram reaches the driver through
+    one action (`limit(cap + 1).toPandas()`), with no persist, count or
+    unpersist around it. Under AQE that action is two jobs: the
+    aggregate's map stage and the transfer. Jobs are counted through a
+    job group and the status tracker."""
+    sc = spark.sparkContext
+    pts = spark.range(20_000, numPartitions=4).selectExpr(
+        "id", "13.0 + rand(1) * 0.3 AS lon", "52.0 + rand(2) * 0.3 AS lat"
+    )
+    group = "test-knn-below-cap"
+    sc.setJobGroup(group, group)
+    try:
+        out = S.knn_join(pts, [(0, 13.1, 52.1), (1, 13.2, 52.25)], k=5, res=9)
+        call_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert S._LAST_HIST_ROWS < 1 << 18
+    assert call_jobs <= 2, call_jobs
+    assert len(rows) == 10
+
+
 def _square(x0, y0, x1, y1):
     return [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
 

@@ -65,6 +65,24 @@ def test_street_length_and_loc(spark):
     assert rows[0]["length"] == pytest.approx(2.0 + math.sqrt(2.0), abs=1e-12)
 
 
+def test_unlocated_nodes_are_dropped_refs(spark):
+    """A node whose lon or lat is NULL or NaN (parquet node tables can
+    hold them) resolves like a missing node: its ref is dropped and the
+    pipeline still clusters the street."""
+    nan = float("nan")
+    nodes = [
+        (1, 0.0, 0.0, {}), (2, 0.0, 0.001, {}),
+        (3, 0.0, 0.002, {}), (4, 0.0, nan, {}), (5, nan, 0.003, {}),
+        (6, None, 0.003, {}), (7, 0.0, 0.004, {}),
+    ]
+    hw = {"highway": "residential", "name": "A"}
+    ways = [(42, [1, 2], hw), (43, [3, 4, 5, 6, 7], hw)]
+    rows = streets(make_tables(spark, nodes=nodes, ways=ways)).collect()
+    assert len(rows) == 1
+    segs = {s["way_id"]: [(c["lon"], c["lat"]) for c in s["coords"]] for s in rows[0]["segments"]}
+    assert segs == {42: [(0.0, 0.0), (0.001, 0.0)], 43: [(0.002, 0.0), (0.004, 0.0)]}
+
+
 def test_streets_alexanderstrasse_geojson(alexanderplatz):
     # integration_test.rs:46-59 → exactly 1 Feature
     df = streets(alexanderplatz, name="Alexanderstraße")
@@ -511,3 +529,28 @@ def test_split_cells_passthrough_only_cells_survive_cogroup(spark):
     rows = {r["name"]: r["boundary"] for r in split_streets_by_cells(sdf, bdf).collect()}
     assert rows == {"in": "b", "far0": None, "far1": None,
                     "far2": None, "far3": None}
+
+
+def test_cluster_group_kernel_degenerate_groups():
+    """`_cluster_group` driven as plain pandas, no Spark: one row, a
+    group whose coordinate arrays are all None or empty, and a one-point
+    way. The empty result keeps the kernel's column order."""
+    import pandas as pd
+
+    from osm_pbf2json_spark.operators.streets import _cluster_group
+
+    cols = ["id", "name", "boundary", "length", "loc_lon", "loc_lat", "segments"]
+
+    def run(*rows):
+        out = _cluster_group(pd.DataFrame(rows, columns=["way_id", "name", "_lons", "_lats"]))
+        assert list(out.columns) == cols
+        return out
+
+    one = run((7, "a", [0.0, 3.0], [0.0, 4.0]))
+    assert len(one) == 1
+    assert (one["id"][0], one["length"][0]) == (7, 5.0)
+    assert len(run((1, "a", None, None), (2, "a", [], []))) == 0
+    pt = run((1, "a", None, None), (2, "a", [0.5], [0.25]))
+    assert len(pt) == 1
+    assert (pt["id"][0], pt["length"][0], pt["loc_lon"][0], pt["loc_lat"][0]) == (2, 0.0, 0.5, 0.25)
+    assert [seg["way_id"] for seg in pt["segments"][0]] == [2]
