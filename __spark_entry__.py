@@ -545,11 +545,10 @@ def q_url_metrics(spark, sf_dir):
     member) over the messy-URL table with paths collapsed mod 1000 so
     real dup groups exist. Replaces the r3 pair url_canonical /
     url_dedup. The dedup rule (min-id survivor + count per canonical
-    form, urls.url_dedup's exact semantics — that operator is
-    golden-tested in tests/test_urls.py) runs as a WINDOW over the
-    canonical column: the regex-heavy canonicalization is computed
-    ONCE and one shuffle by curl replaces the self-join that
-    recomputed it on both branches (8.5s → ~1s at sf0.1)."""
+    form) runs as a WINDOW over the canonical column: the regex-heavy
+    canonicalization is computed ONCE and one shuffle by curl replaces
+    the self-join that recomputed it on both branches (8.5s → ~1s at
+    sf0.1)."""
     from osm_pbf2json_spark.functions.urls import (
         canonicalize_url,
         registered_domain,

@@ -28,6 +28,8 @@ __all__ = [
     "bbox_diag_length",
     "points_in_ring",
     "points_in_polygons",
+    "flatten_rings",
+    "EdgeTable",
     "segments_intersect",
     "linestring_intersects_polygon",
     "stitch_rings",
@@ -208,7 +210,7 @@ def bbox_diag_length(coords) -> float:
     return float(np.hypot(dx, dy))
 
 
-# --- point-in-polygon (vectorized over points) -----------------------------
+# --- point-in-polygon -------------------------------------------------------
 
 
 def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -235,7 +237,9 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
 
 
 def points_in_polygons(points: np.ndarray, polygons) -> np.ndarray:
-    """MultiPolygon::contains for N points (geo.rs:75-81 `owns` refine).
+    """MultiPolygon::contains for N points (geo.rs:75-81 `owns` refine),
+    one polygon at a time: the scalar reference that tests and kernel
+    timings compare `EdgeTable` against; engine code uses `EdgeTable`.
 
     ``polygons`` is a list of polygons; each polygon a list of rings
     (ring 0 = exterior, rest = holes). Returns bool[N]: inside any
@@ -252,6 +256,102 @@ def points_in_polygons(points: np.ndarray, polygons) -> np.ndarray:
             inside &= ~points_in_ring(px, py, np.asarray(hole, dtype=np.float64))
         out |= inside
     return out
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated aranges: starts[i] .. starts[i] + counts[i] - 1 for
+    each i, in order (the flat index of a CSR pair expansion)."""
+    return np.arange(int(counts.sum())) + np.repeat(
+        starts - (np.cumsum(counts) - counts), counts
+    )
+
+
+def flatten_rings(multipolygons):
+    """Candidates (each a list of polygons, a polygon a list of rings of
+    (lon, lat) points) → the flat ring layout `EdgeTable` reads: all
+    points back to back, points per ring, candidate per ring, and
+    whether each ring is a hole (ring 1.. of its polygon)."""
+    arrs: list[np.ndarray] = []
+    cand: list[int] = []
+    hole: list[bool] = []
+    for c, polygons in enumerate(multipolygons):
+        for rings in polygons:
+            for i, ring in enumerate(rings):
+                arrs.append(_as_xy(ring))
+                cand.append(c)
+                hole.append(i > 0)
+    xy = np.concatenate(arrs) if arrs else np.empty((0, 2))
+    npts = np.array([len(a) for a in arrs], np.int64)
+    return xy, npts, np.array(cand, np.int64), np.array(hole, bool)
+
+
+class EdgeTable:
+    """The engine's point-in-polygon test: every ring edge of `ncand`
+    candidate multipolygons in one flat table, ray-cast against
+    (point, candidate) pairs in one vectorized pass.
+
+    Input is the `flatten_rings` layout: a candidate's rings are
+    contiguous, and a polygon's rings are contiguous and start with its
+    exterior. Answers are those of `points_in_polygons`, with its
+    crossing convention: a ring under 3 points has no edges (never
+    inside, never a hole hit), and NaN points are never inside."""
+
+    # edges per ray-cast chunk: a 65k-point flagship batch ray-casts ~2x
+    # faster in 64k-edge chunks than whole (a dozen arrays of this length)
+    CHUNK_EDGES = 1 << 16
+
+    def __init__(self, xy, npts, ring_cand, ring_hole, ncand: int):
+        pt0 = np.cumsum(npts) - npts  # first point of each ring
+        ecnt = np.where(npts >= 3, npts - 1, 0)
+        # edge j runs from point j to j + 1 of its ring, so a candidate's
+        # edges are contiguous and start on its first ring's first edge
+        e = _ranges(pt0, ecnt)
+        self.x0, self.y0 = xy[e, 0], xy[e, 1]
+        self.x1, self.y1 = xy[e + 1, 0], xy[e + 1, 1]
+        self.edge_ring = np.repeat(np.arange(len(npts)), ecnt)
+        self._first = np.zeros(len(e), bool)
+        self._first[(np.cumsum(ecnt) - ecnt)[ecnt > 0]] = True
+        self._hole = ring_hole
+        self._poly = np.cumsum(~ring_hole) - 1
+        self._etot = np.bincount(ring_cand, weights=ecnt, minlength=ncand).astype(np.int64)
+        self._estart = np.cumsum(self._etot) - self._etot
+
+    def pairs_inside(self, px, py, pp, pc) -> np.ndarray:
+        """Ascending indices of the (point pp, candidate pc) pairs whose
+        point (px[pp], py[pp]) lies in the exterior and in none of the
+        holes of one of the candidate's polygons; a pair inside two of
+        its candidate's polygons is listed twice. One parity pass per
+        chunk of about CHUNK_EDGES edges."""
+        out = []
+        csum = np.cumsum(self._etot[pc])
+        b = 0
+        while b < len(pp):
+            a = b
+            budget = (csum[a - 1] if a else 0) + self.CHUNK_EDGES
+            b = max(int(np.searchsorted(csum, budget, side="right")), a + 1)
+            ecnt = self._etot[pc[a:b]]
+            er = np.repeat(np.arange(a, b), ecnt)  # pair per edge row
+            eidx = _ranges(self._estart[pc[a:b]], ecnt)
+            # (pair, ring) runs: each pair's edges start on a ring's first edge
+            rs = np.flatnonzero(self._first[eidx])
+            if not len(rs):
+                continue
+            x0, y0 = self.x0[eidx], self.y0[eidx]
+            x1, y1 = self.x1[eidx], self.y1[eidx]
+            qx, qy = px[pp[er]], py[pp[er]]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cross = ((y0 > qy) != (y1 > qy)) & (qx < x0 + (qy - y0) * (x1 - x0) / (y1 - y0))
+            par = np.bitwise_xor.reduceat(cross, rs)
+            ring = self.edge_ring[eidx[rs]]
+            hole = self._hole[ring]
+            rpair, rpoly = er[rs], self._poly[ring]
+            # (pair, polygon) groups: inside the exterior, in none of the holes
+            gs = np.flatnonzero(np.concatenate(
+                [[True], (rpair[1:] != rpair[:-1]) | (rpoly[1:] != rpoly[:-1])]
+            ))
+            inside = np.logical_or.reduceat(par & ~hole, gs) & ~np.logical_or.reduceat(par & hole, gs)
+            out.append(rpair[gs[inside]])
+        return np.concatenate(out) if out else np.empty(0, np.int64)
 
 
 # --- segment intersection ---------------------------------------------------
@@ -385,21 +485,23 @@ def stitch_rings(way_node_ids: list[list[int]], way_coords: list[np.ndarray]):
     return rings
 
 
-def _ring_contains_ring(outer: np.ndarray, inner: np.ndarray) -> bool:
-    pt = inner[:1]
-    return bool(points_in_ring(pt[:, 0], pt[:, 1], outer)[0])
-
-
 def assemble_multipolygon(outer_rings, inner_rings):
     """Classify stitched rings into polygons-with-holes: each inner ring is
-    attached to the first outer ring containing it. Returns the engine's
-    multipolygon structure: list[ list[ring ndarray] ]."""
+    attached to the first outer ring containing its first point, and
+    dropped when none does. Returns the engine's multipolygon structure:
+    list[ list[ring ndarray] ]."""
     polys = [[r] for r in outer_rings]
-    for hole in inner_rings:
-        for poly in polys:
-            if _ring_contains_ring(poly[0], hole):
-                poly.append(hole)
-                break
+    no, nh = len(outer_rings), len(inner_rings)
+    if not (no and nh):
+        return polys
+    table = EdgeTable(*flatten_rings([[[r]] for r in outer_rings]), no)
+    head = np.array([_as_xy(r)[0] for r in inner_rings])
+    hp, oc = np.repeat(np.arange(nh), no), np.tile(np.arange(no), nh)
+    h = table.pairs_inside(head[:, 0], head[:, 1], hp, oc)
+    first = np.full(nh, no)
+    np.minimum.at(first, hp[h], oc[h])
+    for i in np.flatnonzero(first < no).tolist():
+        polys[first[i]].append(inner_rings[i])
     return polys
 
 
@@ -408,7 +510,7 @@ def assemble_multipolygon(outer_rings, inner_rings):
 
 def pip_contains_col(px, py, polygons):
     """MultiPolygon contains-point as a PURE Catalyst expression — the
-    whole-stage-codegen twin of `points_in_polygons` (identical ray-cast
+    whole-stage-codegen twin of `EdgeTable` (identical ray-cast
     conventions: strict `y0 > py != y1 > py` edge straddle, strict
     `px < xint` crossing), for plans where the polygon column rides the
     rows and a Python kernel would be the only non-JVM stage.

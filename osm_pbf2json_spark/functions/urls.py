@@ -1,7 +1,7 @@
 """URL canonicalization for the Common-Crawl-style page table.
 
 The production input keys rows by `url` (BASELINE.json input_hint), and
-every web-scale pipeline needs the same three primitives before any
+every web-scale pipeline needs the same primitives before any
 dedup/join touches that key:
 
 - `canonicalize_url`: scheme+host lowercased, default ports stripped,
@@ -12,7 +12,6 @@ dedup/join touches that key:
   embedded multi-label-suffix table — co.uk and friends) for per-domain
   grouping, rate stats and skew handling (hot domains are the classic
   skewed key in crawl corpora: pair with plans.partitioning.salted_join).
-- `url_dedup`: exact dedup on the canonical form.
 
 Everything is pure Column expressions (JVM, whole-stage codegen) —
 regexps + array ops, no Python per row — and every rule is mirrorable
@@ -21,7 +20,7 @@ in ANSI-ish SQL (see the `url_canonical` DuckDB oracle).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 import pyspark.sql.functions as F
 
 # authority-splitting regex: scheme / host[:port] / path / ?query
@@ -53,8 +52,9 @@ def canonicalize_url(url: Column) -> Column:
 
     URLs that do not match the scheme://authority shape (mailto:,
     protocol-relative //host, bare paths) pass through UNCHANGED —
-    mapping them all to one mangled string would make url_dedup collapse
-    unrelated malformed rows into a single survivor."""
+    mapping them all to one mangled string would make a dedup on the
+    canonical form collapse unrelated malformed rows into a single
+    survivor."""
     scheme = _scheme(url)
     host = url_host(url)
     host = F.when(
@@ -101,14 +101,3 @@ def registered_domain(host: Column) -> Column:
         .otherwise(last2)
     )
 
-
-def url_dedup(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") -> DataFrame:
-    """One survivor per canonical URL (smallest id), with dup count —
-    the URL-level exact pass that precedes content-level dedup."""
-    return (
-        df.select(
-            F.col(id_col).alias("id"), canonicalize_url(F.col(url_col)).alias("curl")
-        )
-        .groupBy("curl")
-        .agg(F.min("id").alias("survivor_id"), F.count("*").alias("n_dups"))
-    )

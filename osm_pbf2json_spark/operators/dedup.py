@@ -300,25 +300,6 @@ def contamination_hits(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_hits: int = 1,
-    hash: str = "xxh",
-) -> DataFrame:
-    """Train rows with fewer than `min_hits` eval n-gram hits (anti-join
-    against the flagged set) — the output corpus is safe to train on."""
-    flagged = contamination_hits(
-        train, eval_df, n=n, text_col=text_col, id_col=id_col, hash=hash
-    ).filter(F.col("n_hits") >= min_hits)
-    return train.join(
-        flagged.select(F.col("id").alias(id_col)), id_col, "left_anti"
-    )
-
-
 def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "a",

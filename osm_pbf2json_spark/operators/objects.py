@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 
 from ..functions.filter_dsl import Group, compile_groups, parse
 from .closure import EntityTables, closure
-from .resolve import resolve_relation_coords, resolve_way_coords
+from .resolve import _located, resolve_relation_coords, resolve_way_coords
 
 GEO_SCHEMA = (
     "struct<centroid:struct<lat:double,lon:double>,"
@@ -147,8 +147,9 @@ def objects(
 
     closed = closure(tables, pred)
 
-    # re-filter (F8): only predicate matches are emitted
-    out_nodes = closed.nodes.filter(pred)
+    # re-filter (F8): only predicate matches are emitted, and a node
+    # without a location has no output line (see `_located`)
+    out_nodes = closed.nodes.filter(pred & _located())
     out_ways = closed.ways.filter(pred)
     out_rels = closed.relations.filter(pred)
 

@@ -35,18 +35,10 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from ..functions import tiles as T
-from ..functions.geometry import pip_contains_col
+from ..functions.geometry import EdgeTable, _ranges, flatten_rings, pip_contains_col
 
 
 # --- flagship: broadcast PIP join -------------------------------------------
-
-
-def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Concatenated aranges: starts[i] .. starts[i] + counts[i] - 1 for
-    each i, in order (the flat index of a CSR pair expansion)."""
-    return np.arange(int(counts.sum())) + np.repeat(
-        starts - (np.cumsum(counts) - counts), counts
-    )
 
 
 class BroadcastPolygonIndex:
@@ -71,9 +63,6 @@ class BroadcastPolygonIndex:
     _REFINE = -1  # hit-table value: ray-cast the cell's points
     _MISS = -2  # hit-table value: no candidate contains the cell
     _NONE = np.iinfo(np.int64).max  # "no match yet" in min-folds
-    # edges per ray-cast chunk: a 65k-point flagship batch ray-casts ~2x
-    # faster in 64k-edge chunks than whole (a dozen arrays of this length)
-    _CHUNK_EDGES = 1 << 16
 
     def __init__(self, polygon_rows: list[dict], level: int = 12, max_cells: int = 256):
         if level > self.MAX_LEVEL:
@@ -81,47 +70,17 @@ class BroadcastPolygonIndex:
                 f"level {level} is above {self.MAX_LEVEL}, the highest level "
                 "whose cell ids fit their 26-bit fields"
             )
-        # flat ring/edge tables for the batched ray-cast, laid out as
-        # points_in_polygons reads a polygon: empty polygons skipped, a
-        # ring < 3 points has 0 edges (never inside / never a hole hit),
-        # rings 1.. of a polygon are its holes
-        self.keys = []
-        arrs: list[np.ndarray] = []
-        ring_row: list[int] = []
-        ring_hole: list[bool] = []
-        for idx, row in enumerate(polygon_rows):
-            self.keys.append(row["key"])
-            for rings in row["polygons"]:
-                for hi, ring in enumerate(rings):
-                    arrs.append(np.asarray(ring, np.float64).reshape(-1, 2))
-                    ring_row.append(idx)
-                    ring_hole.append(hi > 0)
+        self.keys = [row["key"] for row in polygon_rows]
         npoly = len(self.keys)
-        xy = np.concatenate(arrs) if arrs else np.empty((0, 2))
+        xy, npts, ring_row, ring_hole = flatten_rings(row["polygons"] for row in polygon_rows)
         if not np.isfinite(xy).all():
             raise ValueError("polygon coordinates must be finite")
-        ring_row = np.asarray(ring_row, np.int64)
-        npts = np.array([len(a) for a in arrs], np.int64)
+        self.edges = EdgeTable(xy, npts, ring_row, ring_hole, npoly)
         pt0 = np.cumsum(npts) - npts  # first point of each ring
-        ecnt = np.where(npts >= 3, npts - 1, 0)
-        estart = np.cumsum(ecnt) - ecnt
-        # edge j runs from point j to j + 1 of its ring; a polygon's
-        # rings are contiguous and start with its exterior, and a
-        # candidate's edges are contiguous
-        e = _ranges(pt0, ecnt)
-        self._ex0, self._ey0 = xy[e, 0], xy[e, 1]
-        self._ex1, self._ey1 = xy[e + 1, 0], xy[e + 1, 1]
-        self._edge_ring = np.repeat(np.arange(len(arrs)), ecnt)
-        self._edge_first = np.zeros(len(e), bool)
-        self._edge_first[estart[ecnt > 0]] = True
-        self._ring_hole = np.asarray(ring_hole, bool)
-        self._ring_poly = np.cumsum(~self._ring_hole) - 1
-        self._ci_etot = np.bincount(ring_row, weights=ecnt, minlength=npoly).astype(np.int64)
-        self._ci_estart = np.cumsum(self._ci_etot) - self._ci_etot
         # the ray-cast of an unclosed ring is not constant away from its
         # edges (parity flips along rays from its loose ends), so cells of
         # a candidate with one are always refined
-        rr = np.flatnonzero(ecnt)
+        rr = np.flatnonzero(npts >= 3)
         ring_open = (xy[pt0[rr]] != xy[pt0[rr] + npts[rr] - 1]).any(axis=1)
         ci_open = np.bincount(ring_row[rr[ring_open]], minlength=npoly) > 0
 
@@ -152,7 +111,7 @@ class BroadcastPolygonIndex:
         cell = ((cx0[r] + k // ny[r] + self._OFF) << 26) + cy0[r] + k % ny[r] + self._OFF
         row_lvl = np.full(npoly, -1, np.int64)
         row_lvl[rows] = lvl
-        edge_lvl = row_lvl[ring_row[self._edge_ring]]
+        edge_lvl = row_lvl[ring_row[self.edges.edge_ring]]
         # CSR form per level (sorted cells + offsets + flat candidate
         # indexes + true-hit table). The grid is internal to this index: a
         # plain planar floor grid at 360°/2^level packed into one long,
@@ -179,8 +138,9 @@ class BroadcastPolygonIndex:
         # split each edge into pieces no longer than one cell and mark the
         # cells each piece's eps-padded bbox reaches (at most 3x3): a long
         # diagonal edge marks only the cells along it, not its whole bbox
-        x0, y0 = self._ex0[edges], self._ey0[edges]
-        dx, dy = self._ex1[edges] - x0, self._ey1[edges] - y0
+        t = self.edges
+        x0, y0 = t.x0[edges], t.y0[edges]
+        dx, dy = t.x1[edges] - x0, t.y1[edges] - y0
         npc = np.maximum(np.ceil(np.maximum(np.abs(dx), np.abs(dy)) / s), 1).astype(np.int64)
         e = np.repeat(np.arange(len(npc)), npc)
         k = _ranges(np.zeros_like(npc), npc)
@@ -207,7 +167,7 @@ class BroadcastPolygonIndex:
         cx = ((cs >> 26) - self._OFF + 0.5) * s
         cy = ((cs & ((1 << 26) - 1)) - self._OFF + 0.5) * s
         best = np.full(len(cs), self._NONE, np.int64)
-        self._refine_pairs(cx, cy, cell_of[sel], flat[sel], best)
+        self._refine(cx, cy, cell_of[sel], flat[sel], best)
         hit = np.where(best < self._NONE, best, self._MISS)
         hit[refine] = self._REFINE
         return hit
@@ -243,45 +203,14 @@ class BroadcastPolygonIndex:
                 pair_pt.append(np.repeat(ref, cnt))
                 pair_ci.append(flat[_ranges(starts[p], cnt)])
         if pair_pt:
-            self._refine_pairs(
-                lon, lat, np.concatenate(pair_pt), np.concatenate(pair_ci), best
-            )
+            self._refine(lon, lat, np.concatenate(pair_pt), np.concatenate(pair_ci), best)
         return np.where(best < self._NONE, best, -1)
 
-    def _refine_pairs(self, lon, lat, pp, pc, best):
-        """Exact ray-cast of (point pp, candidate pc) pairs, with the
-        crossing convention of points_in_ring: one vectorized parity pass
-        per chunk of about _CHUNK_EDGES edges, np.minimum.at-folding each
-        matching candidate index into `best`."""
-        csum = np.cumsum(self._ci_etot[pc])
-        b = 0
-        while b < len(pp):
-            a = b
-            budget = (csum[a - 1] if a else 0) + self._CHUNK_EDGES
-            b = max(int(np.searchsorted(csum, budget, side="right")), a + 1)
-            ecnt = self._ci_etot[pc[a:b]]
-            er = np.repeat(np.arange(a, b), ecnt)  # pair per edge row
-            eidx = _ranges(self._ci_estart[pc[a:b]], ecnt)
-            # (pair, ring) runs: each pair's edges start on a ring's first edge
-            rs = np.flatnonzero(self._edge_first[eidx])
-            if not len(rs):
-                continue
-            x0, y0 = self._ex0[eidx], self._ey0[eidx]
-            x1, y1 = self._ex1[eidx], self._ey1[eidx]
-            px, py = lon[pp[er]], lat[pp[er]]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cross = ((y0 > py) != (y1 > py)) & (px < x0 + (py - y0) * (x1 - x0) / (y1 - y0))
-            par = np.bitwise_xor.reduceat(cross, rs)
-            ring = self._edge_ring[eidx[rs]]
-            hole = self._ring_hole[ring]
-            rpair, rpoly = er[rs], self._ring_poly[ring]
-            # (pair, polygon) groups: inside the exterior, in none of the holes
-            gs = np.flatnonzero(np.concatenate(
-                [[True], (rpair[1:] != rpair[:-1]) | (rpoly[1:] != rpoly[:-1])]
-            ))
-            inside = np.logical_or.reduceat(par & ~hole, gs) & ~np.logical_or.reduceat(par & hole, gs)
-            hp = rpair[gs[inside]]
-            np.minimum.at(best, pp[hp], pc[hp])
+    def _refine(self, lon, lat, pp, pc, best):
+        """Ray-cast (point pp, candidate pc) pairs and fold each matching
+        candidate index into `best` (the minimum = first in list order)."""
+        h = self.edges.pairs_inside(lon, lat, pp, pc)
+        np.minimum.at(best, pp[h], pc[h])
 
 
 def pip_join_broadcast(

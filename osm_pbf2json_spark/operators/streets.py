@@ -28,6 +28,8 @@ near-linear rather than O(k²).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,10 +37,10 @@ import pyspark.sql.functions as F
 
 from ..functions.filter_dsl import build_admin_groups, build_street_groups, compile_groups
 from ..functions.geometry import (
-    _edges,
+    EdgeTable,
+    _ranges,
     bbox_diag_length,
     midpoint,
-    points_in_polygons,
     segments_intersect,
 )
 from .boundaries import boundaries_from_closure
@@ -343,6 +345,7 @@ _STREET_RAW_SCHEMA = (
     "loc_lon double, loc_lat double, "
     "segments array<struct<way_id:bigint,lons:array<double>,lats:array<double>>>"
 )
+_STREET_COLS = ["id", "name", "boundary", "length", "loc_lon", "loc_lat", "segments"]
 
 
 _FLAT_COLS = [
@@ -422,81 +425,79 @@ def extract_streets(ways_filtered: DataFrame, nodes: DataFrame) -> DataFrame:
     return raw.withColumn("segments", _segments_to_coords())
 
 
-def _ring_xy(ring) -> np.ndarray:
-    """One ring → (N,2) float64. Accepts the public coords layout (a
-    sequence of {lon,lat} dicts) or the raw parallel-array layout
-    ({lons: [...], lats: [...]}, produced JVM-side by _polys_to_raw) —
-    the raw form reaches Python as two primitive Arrow buffers, so
-    planet-scale admin rings never marshal per-vertex dicts."""
-    if isinstance(ring, dict):
-        return np.column_stack(
-            [
-                np.asarray(ring["lons"], np.float64),
-                np.asarray(ring["lats"], np.float64),
-            ]
-        )
-    return np.array([(c["lon"], c["lat"]) for c in ring], np.float64).reshape(-1, 2)
-
-
-def _parse_boundaries(boundary_rows: list[dict]):
-    """Deterministic (admin_level, name, relation_id) order + parsed ring
-    arrays + bbox matrix for a list of assembled boundary dicts."""
-    bnds = sorted(
-        boundary_rows, key=lambda b: (b["admin_level"], b["name"], b["relation_id"])
+def _boundaries_flat(boundaries_df: DataFrame) -> DataFrame:
+    """Boundary rows projected to the split kernels' one layout: each
+    multipolygon as FLAT parallel primitive arrays (`_plens`
+    rings-per-polygon, `_rlens` points-per-ring, `_bfx`/`_bfy`
+    flattened vertices). They reach Python as Arrow primitive buffers,
+    so a planet-scale admin ring never marshals per-vertex dicts, and
+    (load-bearing for the cogroup path) Spark 4.1's cogroup serializer
+    segfaults the Python worker (pyarrow arrow_to_pandas on the empty
+    substitute batch) whenever a left group has no right group and the
+    right schema carries nested array-of-struct columns; single-level
+    primitive arrays deserialize fine in every missing-group/empty
+    combination (verified by
+    test_split_cells_passthrough_only_cells_survive_cogroup)."""
+    return boundaries_df.select(
+        "relation_id", "name", "admin_level",
+        "sw_lon", "sw_lat", "ne_lon", "ne_lat",
+        F.transform("polygons", lambda p: F.size(p)).alias("_plens"),
+        F.flatten("polygons").alias("_rings"),
+    ).select(
+        "relation_id", "name", "admin_level",
+        "sw_lon", "sw_lat", "ne_lon", "ne_lat", "_plens",
+        F.transform("_rings", lambda r: F.size(r)).alias("_rlens"),
+        F.flatten(
+            F.transform("_rings", lambda r: F.transform(r, lambda c: c["lon"]))
+        ).alias("_bfx"),
+        F.flatten(
+            F.transform("_rings", lambda r: F.transform(r, lambda c: c["lat"]))
+        ).alias("_bfy"),
     )
-    polys = [
-        [[_ring_xy(ring) for ring in rings] for rings in b["polygons"]]
-        for b in bnds
-    ]
-    bb = np.array(
-        [[b["sw_lon"], b["sw_lat"], b["ne_lon"], b["ne_lat"]] for b in bnds]
-    ).reshape(-1, 4)
-    return bnds, polys, bb
 
 
-def _parse_boundaries_flat(right: pd.DataFrame):
-    """Deterministic (admin_level, name, relation_id) order + parsed ring
-    arrays + bbox matrix from the FLAT bundle layout (`_plens`
-    rings-per-polygon, `_rlens` points-per-ring, `_bfx`/`_bfy` flattened
-    vertices — single-level primitive arrays, reconstructed with
-    np.split over the Arrow buffers; no per-vertex dicts)."""
-    recs = right.to_dict("records")
-    bnds = sorted(
-        recs, key=lambda b: (b["admin_level"], b["name"], b["relation_id"])
+class _Boundaries(NamedTuple):
+    """A boundary set parsed for `_split_batch`, in the deterministic
+    (admin_level, name, relation_id) order that indexes every field."""
+
+    names: list
+    bb: np.ndarray  # (nb, 4): sw_lon, sw_lat, ne_lon, ne_lat
+    redges: np.ndarray  # (E, 4) ring edges x0, y0, x1, y1 for the J4 intersect
+    roff: np.ndarray  # nb + 1 offsets of each boundary's edges in redges
+    table: EdgeTable  # the point-in-polygon test over the same rings
+
+
+def _parse_boundaries_flat(right: pd.DataFrame) -> _Boundaries:
+    """Parse a `_boundaries_flat` frame (vertices stay in flat buffers;
+    no per-ring Python objects)."""
+    b = right.sort_values(["admin_level", "name", "relation_id"])
+    nb = len(b)
+
+    def cat(col, dtype):
+        return np.concatenate([np.empty(0, dtype), *b[col]]).astype(dtype)
+
+    npts, plens = cat("_rlens", np.int64), cat("_plens", np.int64)
+    xy = np.column_stack([cat("_bfx", np.float64), cat("_bfy", np.float64)])
+    ring_cand = np.repeat(np.arange(nb), [len(r) for r in b["_rlens"]])
+    # ring 0 of each non-empty polygon is its exterior, the rest holes
+    ring_hole = np.ones(len(npts), bool)
+    ring_hole[(np.cumsum(plens) - plens)[plens > 0]] = False
+    # the J4 intersect takes every edge of a ring of >= 2 points
+    secnt = np.maximum(npts - 1, 0)
+    e = _ranges(np.cumsum(npts) - npts, secnt)
+    roff = np.cumsum(np.bincount(ring_cand, weights=secnt, minlength=nb), dtype=np.int64)
+    return _Boundaries(
+        names=b["name"].tolist(),
+        bb=b[["sw_lon", "sw_lat", "ne_lon", "ne_lat"]].to_numpy(np.float64),
+        redges=np.column_stack([xy[e], xy[e + 1]]),
+        roff=np.concatenate([[0], roff]),
+        table=EdgeTable(xy, npts, ring_cand, ring_hole, nb),
     )
-    polys = []
-    for b in bnds:
-        fx = np.asarray(b["_bfx"], np.float64)
-        fy = np.asarray(b["_bfy"], np.float64)
-        rl = np.asarray(b["_rlens"], np.int64)
-        pl = np.asarray(b["_plens"], np.int64)
-        xs = np.split(fx, np.cumsum(rl)[:-1]) if len(rl) else []
-        ys = np.split(fy, np.cumsum(rl)[:-1]) if len(rl) else []
-        rings = [np.column_stack([x, y]) for x, y in zip(xs, ys)]
-        po = np.concatenate([[0], np.cumsum(pl)]).astype(np.int64)
-        polys.append(
-            [rings[po[i]:po[i + 1]] for i in range(len(pl))]
-        )
-    bb = np.array(
-        [[b["sw_lon"], b["sw_lat"], b["ne_lon"], b["ne_lat"]] for b in bnds]
-    ).reshape(-1, 4)
-    return bnds, polys, bb
 
 
-def _gather_ranges(starts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
-    """Concatenated [starts[i], starts[i]+cnt[i]) index ranges — the
-    vectorized form of np.concatenate([np.arange(s, s+c) ...])."""
-    tot = int(cnt.sum())
-    if not tot:
-        return np.empty(0, np.int64)
-    offs = np.arange(tot) - np.repeat(
-        np.concatenate([[0], np.cumsum(cnt[:-1])]), cnt
-    )
-    return np.repeat(starts, cnt) + offs
-
-
-def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
-    """Vectorized J3→J7 boundary split of one Arrow batch of street rows.
+def _split_batch(pdf: pd.DataFrame, bounds: _Boundaries) -> pd.DataFrame:
+    """Vectorized J3→J7 boundary split of one Arrow batch of street rows
+    into the street frame (`_STREET_COLS`).
 
     Fully offsets-based: segments arrive PRE-FLATTENED as four parallel
     columns (`_wids`/`_npts` + street-flattened `_flons`/`_flats`,
@@ -507,14 +508,14 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
 
     - J3 AABB probe: per-street bboxes by reduceat; one
       streets×boundaries broadcast (or the cell join's pre-candidates);
-    - J4 exact refine per BOUNDARY: one segments_intersect call over
+    - J4 exact refine: per BOUNDARY one segments_intersect call over
       the candidate streets' within-seg edges × the boundary's ring
-      edges, one points_in_polygons call over segment first points
-      (the containment case);
+      edges, and one EdgeTable pass over every (segment first point,
+      candidate boundary) pair (the containment case);
     - J5 ownership: per-seg length-weighted line centroids from one
-      masked-edge bincount pass; per boundary (ascending = the
-      deterministic first-match order) one PIP call over still-unowned
-      eligible segs;
+      masked-edge bincount pass, then one EdgeTable pass over every
+      (centroid, J4 boundary) pair; the owner is the lowest containing
+      boundary index (the deterministic first-match order);
     - J7 fallback: first candidate in deterministic order;
     - assembly: output groups keyed (street, owner NAME) — same-name
       boundaries merge, streets.rs:75-78 — with A3 xor id, A4 bbox-diag
@@ -527,7 +528,7 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
     """
     n = len(pdf)
     if n == 0:
-        return []
+        return pd.DataFrame(columns=_STREET_COLS)
     wid_arrs = pdf["_wids"].to_numpy()
     st_seg_cnt = np.fromiter(
         (0 if a is None else len(a) for a in wid_arrs), np.int64, n
@@ -573,7 +574,8 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
         sb[nzst, 2] = np.maximum.reduceat(fx, starts)
         sb[nzst, 3] = np.maximum.reduceat(fy, starts)
 
-    nb = len(bnds)
+    bb = bounds.bb
+    nb = len(bb)
     # J3: candidate (street, boundary) pairs as parallel index arrays,
     # straight off np.nonzero of the chunked bbox-overlap block (row
     # major ⇒ street-ascending within a chunk), stably sorted by
@@ -628,34 +630,23 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
     else:
         head_x = head_y = np.full(S, np.nan)
 
-    # J4: exact refine per boundary over edge/head gathers; passing
-    # (street, boundary) pairs accumulate as parallel arrays, emitted
-    # per-boundary in ascending-k blocks with ascending streets inside
-    E_all = (
-        np.column_stack([ex0, ey0, ex1, ey1])
-        if len(p3k) and len(e_seg)
-        else np.zeros((0, 4))
-    )
-    c4i_parts: list = []
-    c4k_parts: list = []
+    # J4 containment case: one pass over every (segment head, boundary)
+    # pair of the J3 pairs, folded to "any" per J3 pair
+    hcnt = st_seg_cnt[p3i]
+    hp = _ranges(seg_off0[p3i], hcnt)
+    hin = bounds.table.pairs_inside(head_x, head_y, hp, np.repeat(p3k, hcnt))
+    hit4 = np.zeros(len(p3i), bool)
+    hit4[np.repeat(np.arange(len(p3i)), hcnt)[hin]] = True
+    # J4 intersect case, per boundary over edge gathers
+    E_all = np.column_stack([ex0, ey0, ex1, ey1])
     for kb in range(len(kcuts) - 1):
         b0k, b1k = kcuts[kb], kcuts[kb + 1]
         k = int(p3k[b0k])
         idxs = p3i[b0k:b1k]
-        hitk = np.zeros(len(idxs), dtype=bool)
-        redges = [
-            _edges(np.asarray(ring, np.float64))
-            for rings in polys[k]
-            for ring in rings
-        ]
-        redges = (
-            np.vstack([r for r in redges if len(r)])
-            if any(len(r) for r in redges)
-            else np.zeros((0, 4))
-        )
+        redges = bounds.redges[bounds.roff[k]:bounds.roff[k + 1]]
         e_cnt = st_e_cnt[idxs]
         if len(redges) and e_cnt.sum():
-            eidx = _gather_ranges(st_e_off[idxs], e_cnt)
+            eidx = _ranges(st_e_off[idxs], e_cnt)
             owner_t = np.repeat(np.arange(len(idxs)), e_cnt)
             # chunk the E×R orientation matrix at ~2M cells
             step = max(1, _PAIR_CHUNK_CELLS // max(1, len(redges)))
@@ -664,30 +655,15 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
                     axis=1
                 )
                 # bincount-as-any: C-speed scatter (ufunc.at is per-element)
-                hitk |= (
+                hit4[b0k:b1k] |= (
                     np.bincount(
                         owner_t[c0 : c0 + step], weights=m, minlength=len(idxs)
                     )
                     > 0
                 )
-        h_cnt = st_seg_cnt[idxs]
-        if h_cnt.sum():
-            hsidx = _gather_ranges(seg_off0[idxs], h_cnt)
-            H = np.column_stack([head_x[hsidx], head_y[hsidx]])
-            inside = points_in_polygons(H, polys[k])
-            hitk |= (
-                np.bincount(
-                    np.repeat(np.arange(len(idxs)), h_cnt),
-                    weights=inside,
-                    minlength=len(idxs),
-                )
-                > 0
-            )
-        t_hit = np.flatnonzero(hitk)
-        c4i_parts.append(idxs[t_hit])
-        c4k_parts.append(np.full(len(t_hit), k, np.int64))
-    c4i = np.concatenate(c4i_parts) if c4i_parts else np.empty(0, np.int64)
-    c4k = np.concatenate(c4k_parts) if c4k_parts else np.empty(0, np.int64)
+    # passing (street, boundary) pairs in ascending-k blocks with
+    # ascending streets inside
+    c4i, c4k = p3i[hit4], p3k[hit4]
 
     out_rows: list[dict] = []
     has4 = np.zeros(n, dtype=bool)
@@ -700,40 +676,26 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
         wx = np.bincount(e_seg, weights=(ex0 + ex1) * 0.5 * elen, minlength=S)
         wy = np.bincount(e_seg, weights=(ey0 + ey1) * 0.5 * elen, minlength=S)
         safe_tot = np.where(tot > 0, tot, 1.0)
-        cent_pts = np.column_stack(
-            [
-                np.where(tot > 0, wx / safe_tot, head_x),
-                np.where(tot > 0, wy / safe_tot, head_y),
-            ]
-        )
+        cent_x = np.where(tot > 0, wx / safe_tot, head_x)
+        cent_y = np.where(tot > 0, wy / safe_tot, head_y)
 
-        # J5 ownership per boundary, ascending k = first-match order
-        # (c4i/c4k are already grouped in ascending-k blocks)
-        owner = np.full(S, -1, dtype=np.int64)
-        kcuts4 = np.flatnonzero(
-            np.concatenate([[True], c4k[1:] != c4k[:-1], [True]])
-        )
-        for kb in range(len(kcuts4) - 1):
-            b0k, b1k = kcuts4[kb], kcuts4[kb + 1]
-            k = int(c4k[b0k])
-            kidx = c4i[b0k:b1k]
-            sidx = _gather_ranges(seg_off0[kidx], st_seg_cnt[kidx])
-            sidx = sidx[owner[sidx] < 0]
-            if not len(sidx):
-                continue
-            inside = points_in_polygons(cent_pts[sidx], polys[k])
-            owner[sidx[inside]] = k
+        # J5 ownership: the lowest J4 boundary containing the centroid
+        scnt = st_seg_cnt[c4i]
+        sp = _ranges(seg_off0[c4i], scnt)
+        sk = np.repeat(c4k, scnt)
+        h = bounds.table.pairs_inside(cent_x, cent_y, sp, sk)
+        none = np.iinfo(np.int64).max
+        owner = np.full(S, none, np.int64)
+        np.minimum.at(owner, sp[h], sk[h])
 
         # J7 fallback (min k per street = first candidate in ascending
         # order) + grouping by (street, owner NAME)
         sub = np.flatnonzero(has4[st_of_seg])
-        fallback_st = np.full(n, np.iinfo(np.int64).max, np.int64)
+        fallback_st = np.full(n, none, np.int64)
         np.minimum.at(fallback_st, c4i, c4k)
         fown = owner[sub]
-        fown = np.where(fown >= 0, fown, fallback_st[st_of_seg[sub]])
-        name_codes, name_uniques = pd.factorize(
-            pd.Series([b["name"] for b in bnds])
-        )
+        fown = np.where(fown < none, fown, fallback_st[st_of_seg[sub]])
+        name_codes, name_uniques = pd.factorize(pd.Series(bounds.names))
         gname = name_codes[fown]
         gst = st_of_seg[sub]
         # stable (street, name, way_id, original order) — matches the
@@ -831,46 +793,29 @@ def _split_batch(pdf: pd.DataFrame, bnds, polys, bb) -> list[dict]:
                     ],
                 }
             )
-    return out_rows
+    if not out_rows:
+        return pd.DataFrame(columns=_STREET_COLS)
+    return pd.DataFrame(out_rows)[_STREET_COLS]
 
 
-_STREET_COLS = ["id", "name", "boundary", "length", "loc_lon", "loc_lat", "segments"]
-
-
-def _split_streets_factory(boundary_rows: list[dict]):
-    """mapInPandas kernel factory: broadcast boundary list → split kernel.
-
-    boundary_rows: [{name, admin_level, relation_id, sw_lon.., polygons}]
-    sorted deterministically; polygons as nested lon/lat lists.
-    """
-    bnds, polys, bb = _parse_boundaries(boundary_rows)
+def split_streets_broadcast(streets_df: DataFrame, boundaries: pd.DataFrame) -> DataFrame:
+    """Boundary split against a driver-collected `_boundaries_flat`
+    frame, parsed once here and shipped in the kernel closure: segments
+    flatten JVM-side into four parallel primitive-buffer columns, the
+    mapInPandas J3→J7 kernel consumes those directly, and the public
+    coords layout is rebuilt at the end."""
+    bounds = _parse_boundaries_flat(boundaries)
 
     def split(iterator):
         for pdf in iterator:
-            out_rows = _split_batch(pdf, bnds, polys, bb)
-            yield (
-                pd.DataFrame(out_rows)[_STREET_COLS]
-                if out_rows
-                else pd.DataFrame(columns=_STREET_COLS)
-            )
+            yield _split_batch(pdf, bounds)
 
-    return split
-
-
-def split_streets_broadcast(
-    streets_df: DataFrame, boundary_rows: list[dict]
-) -> DataFrame:
-    """Boundary split against a driver-collected (broadcastable)
-    boundary list: segments flatten JVM-side into four parallel
-    primitive-buffer columns, the mapInPandas J3→J7 kernel consumes
-    those directly, and the public coords layout is rebuilt at the
-    end."""
     return (
         streets_df.select(
             "id", "name", "boundary", "length", "loc_lon", "loc_lat",
             *_segments_flat_cols(),
         )
-        .mapInPandas(_split_streets_factory(boundary_rows), _STREET_RAW_SCHEMA)
+        .mapInPandas(split, _STREET_RAW_SCHEMA)
         .withColumn("segments", _segments_to_coords())
     )
 
@@ -975,35 +920,9 @@ def split_streets_by_cells(
         .distinct()
     )
 
-    # phase 2a: each boundary's geometry ships once per owner cell, as
-    # FLAT parallel primitive arrays (`_plens` rings-per-polygon,
-    # `_rlens` points-per-ring, `_bfx`/`_bfy` flattened vertices): the
-    # cogroup kernel reconstructs rings with np.split over zero-copy
-    # Arrow buffers, a planet-scale admin ring never marshals
-    # per-vertex dicts, AND — load-bearing — the cogroup serializer in
-    # Spark 4.1 segfaults the Python worker (pyarrow arrow_to_pandas on
-    # the empty substitute batch) whenever a left group has no right
-    # group and the right schema carries nested array-of-struct
-    # columns; single-level primitive arrays deserialize fine in every
-    # missing-group/empty combination (verified by
-    # test_split_cells_passthrough_only_cells_survive_cogroup)
-    rings_col = F.flatten("polygons")
-    bd_payload = boundaries_df.select(
-        "relation_id", "name", "admin_level",
-        "sw_lon", "sw_lat", "ne_lon", "ne_lat",
-        F.transform("polygons", lambda p: F.size(p)).alias("_plens"),
-        rings_col.alias("_rings"),
-    ).select(
-        "relation_id", "name", "admin_level",
-        "sw_lon", "sw_lat", "ne_lon", "ne_lat", "_plens",
-        F.transform("_rings", lambda r: F.size(r)).alias("_rlens"),
-        F.flatten(
-            F.transform("_rings", lambda r: F.transform(r, lambda c: c["lon"]))
-        ).alias("_bfx"),
-        F.flatten(
-            F.transform("_rings", lambda r: F.transform(r, lambda c: c["lat"]))
-        ).alias("_bfy"),
-    )
+    # phase 2a: each boundary's geometry ships once per owner cell, in
+    # the flat layout of `_boundaries_flat`
+    bd_payload = _boundaries_flat(boundaries_df)
     bundles = need.join(bd_payload, "relation_id")
 
     # phase 2b: payload pass — segments flatten ONCE into the four
@@ -1024,13 +943,7 @@ def split_streets_by_cells(
     def split(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left):
             return pd.DataFrame(columns=_STREET_COLS)
-        bnds, polys, bb = _parse_boundaries_flat(right)
-        out_rows = _split_batch(left[_FLAT_COLS], bnds, polys, bb)
-        return (
-            pd.DataFrame(out_rows)[_STREET_COLS]
-            if out_rows
-            else pd.DataFrame(columns=_STREET_COLS)
-        )
+        return _split_batch(left[_FLAT_COLS], _parse_boundaries_flat(right))
 
     return (
         left_df.groupBy("_ocx", "_ocy")
@@ -1069,9 +982,10 @@ def streets(
     admin_pred = compile_groups(build_admin_groups([boundary]))
     admin_closed = closure(tables, admin_pred)
     bdf = boundaries_from_closure(admin_closed).localCheckpoint(eager=True)
-    if bdf.count() <= max_broadcast_boundaries:
-        brows = [r.asDict(recursive=True) for r in bdf.collect()]
-        split = split_streets_broadcast(result, brows)
+    # one action both gates on the set's size and collects it
+    bpdf = _boundaries_flat(bdf).limit(max_broadcast_boundaries + 1).toPandas()
+    if len(bpdf) <= max_broadcast_boundaries:
+        split = split_streets_broadcast(result, bpdf)
     else:
         split = split_streets_by_cells(result, bdf)
     return split.localCheckpoint(eager=False).orderBy("name", "boundary", "id")

@@ -264,33 +264,22 @@ def _blob_payload(blob: bytes) -> bytes | None:
     return raw
 
 
-def decode_pbf(path: str) -> PbfData:
-    """Decode a .osm.pbf file into entity rows."""
+def decode_blobs(path: str, blobs) -> PbfData:
+    """Decode the OSMData blobs at the (offset, size) pairs `blobs` of
+    `path` (entries of `scan_blob_index`) into entity rows."""
     out = PbfData()
     with open(path, "rb") as f:
-        data = f.read()
-    pos = 0
-    n = len(data)
-    while pos < n:
-        (hdr_len,) = struct.unpack(">i", data[pos : pos + 4])
-        pos += 4
-        header = data[pos : pos + hdr_len]
-        pos += hdr_len
-        btype = b""
-        datasize = 0
-        for fnum, _, val in _iter_fields(header):
-            if fnum == 1:
-                btype = val
-            elif fnum == 3:
-                datasize = val
-        blob = data[pos : pos + datasize]
-        pos += datasize
-        if btype != b"OSMData":
-            continue
-        raw = _blob_payload(blob)
-        if raw is not None:
-            _decode_primitive_block(raw, out)
+        for off, size in blobs:
+            f.seek(int(off))
+            raw = _blob_payload(f.read(int(size)))
+            if raw is not None:
+                _decode_primitive_block(raw, out)
     return out
+
+
+def decode_pbf(path: str) -> PbfData:
+    """Decode a .osm.pbf file into entity rows."""
+    return decode_blobs(path, scan_blob_index(path))
 
 
 def to_arrow(data: PbfData):
@@ -397,14 +386,7 @@ def pbf_entities_distributed(spark, path: str, parallelism: int | None = None):
 
     def kernel(batches):
         for pdf in batches:
-            out = PbfData()
-            with open(apath, "rb") as f:
-                for off, size in zip(pdf["offset"], pdf["size"]):
-                    f.seek(int(off))
-                    blob = f.read(int(size))
-                    raw = _blob_payload(blob)
-                    if raw is not None:
-                        _decode_primitive_block(raw, out)
+            out = decode_blobs(apath, zip(pdf["offset"], pdf["size"]))
             yield pd.DataFrame(
                 {
                     "kind": ["node"] * len(out.nodes)

@@ -41,26 +41,3 @@ def streaming_tile_counts(
         F.count("*").alias("n_events")
     ).select(F.col("w.start").alias("window_start"), "tile", "n_events")
 
-
-def streaming_dedup(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: drop rows whose normalized-text fingerprint
-    already appeared within the watermark horizon.
-
-    `dropDuplicatesWithinWatermark` keeps state only as long as the
-    watermark — the 100-TB-stream shape, unlike plain dropDuplicates
-    whose key state grows without bound. The fingerprint is the same
-    Catalyst expression the batch `exact_dedup` groups on, so batch and
-    streaming dedup agree on what "duplicate" means."""
-    from ..functions.text import fingerprint
-
-    return (
-        stream_df.withColumn("_fp", fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_fp"])
-        .drop("_fp")
-    )

@@ -154,6 +154,17 @@ def test_assemble_multipolygon_hole_assignment():
     assert len(polys) == 1
     assert len(polys[0]) == 2
 
+    def sq(x0, y0, x1, y1):
+        return np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)])
+
+    # two overlapping outers: a hole in both goes to the first, a hole
+    # only in the second goes there, a hole in neither is dropped
+    outer = [sq(0, 0, 4, 4), sq(2, 0, 8, 4)]
+    both, second, neither = sq(2.5, 1, 3, 2), sq(6, 1, 7, 2), sq(10, 10, 11, 11)
+    polys = g.assemble_multipolygon(outer, [neither, second, both])
+    assert [len(p) for p in polys] == [2, 2]
+    assert polys[0][1] is both and polys[1][1] is second
+
 
 def test_pip_contains_col_matches_numpy_kernel(spark):
     """The Catalyst ray-cast must agree with points_in_polygons bit-for-bit

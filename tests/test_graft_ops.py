@@ -448,21 +448,6 @@ def test_hash_split_disjoint_exhaustive_stable(spark):
     assert all(s3[k] == v for k, v in s1.items())
 
 
-def test_stratified_sample_exact_counts(spark):
-    from osm_pbf2json_spark.operators.sampling import stratified_sample_exact
-
-    rows = [(i, "en" if i % 3 else "de") for i in range(999)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = stratified_sample_exact(df, 0.1, strata_cols=("lang",))
-    got = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    import math
-    assert got["en"] == math.ceil(666 * 0.1) and got["de"] == math.ceil(333 * 0.1)
-    # deterministic membership
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(r["doc_id"] for r in stratified_sample_exact(df, 0.1, strata_cols=("lang",)).collect())
-    assert a == b
-
-
 def test_repetition_stats(spark):
     """Gopher-style repetition goldens: crafted docs with known
     duplicate-word and top-bigram fractions."""
@@ -494,9 +479,9 @@ def test_repetition_stats(spark):
 
 
 def test_contamination_and_decontaminate(spark):
-    """Eval docs and their superstrings are flagged; unrelated docs
-    survive decontamination."""
-    from osm_pbf2json_spark.operators.dedup import contamination_hits, decontaminate
+    """Eval docs and their superstrings are flagged; unrelated docs are
+    not."""
+    from osm_pbf2json_spark.operators.dedup import contamination_hits
 
     train = spark.createDataFrame(
         [
@@ -511,8 +496,6 @@ def test_contamination_and_decontaminate(spark):
     )
     hits = {r["id"]: r["n_hits"] for r in contamination_hits(train, ev, n=5).collect()}
     assert hits.get(1) == 1 and hits.get(3) == 1 and 2 not in hits
-    clean = sorted(r["doc_id"] for r in decontaminate(train, ev, n=5).collect())
-    assert clean == [2]
 
 
 def test_url_canonicalize_idempotent(spark):

@@ -205,3 +205,26 @@ def test_no_groups_returns_everything(spark):
         ways=[(10, [1, 2], {})],
     )
     assert objects(t, None).count() == 3
+
+
+def test_unlocated_nodes_are_not_emitted(spark):
+    """A tagged node with a NaN or NULL coordinate has no location, so it
+    gets no output line; every line that is written is strict JSON."""
+    import json
+
+    from osm_pbf2json_spark.sinks import objects_json_lines
+
+    def no_constants(name):
+        raise ValueError(f"not JSON: {name}")
+
+    t = make_tables(
+        spark,
+        nodes=[
+            (1, float("nan"), 13.0, {"amenity": "x"}),
+            (2, None, 13.0, {"amenity": "x"}),
+            (3, 52.5, 13.4, {"amenity": "x"}),
+        ],
+    )
+    lines = [r["value"] for r in objects_json_lines(objects(t, "amenity~x")).collect()]
+    got = [json.loads(line, parse_constant=no_constants) for line in lines]
+    assert [(o["id"], o["lon"], o["lat"]) for o in got] == [(3, 13.4, 52.5)]

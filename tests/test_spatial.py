@@ -550,18 +550,18 @@ def test_broadcast_index_interior_points_skip_ray_cast(monkeypatch):
     ]
     idx = S.BroadcastPolygonIndex(rows, level=12)
     pairs = []
-    refine = idx._refine_pairs
+    refine = idx.edges.pairs_inside
     ring = geometry.points_in_ring
 
-    def counted_refine(lon, lat, pp, pc, best):
+    def counted_refine(lon, lat, pp, pc):
         pairs.append(len(pp))
-        return refine(lon, lat, pp, pc, best)
+        return refine(lon, lat, pp, pc)
 
     def counted_ring(px, py, r):
         pairs.append(len(px))
         return ring(px, py, r)
 
-    monkeypatch.setattr(idx, "_refine_pairs", counted_refine)
+    monkeypatch.setattr(idx.edges, "pairs_inside", counted_refine)
     monkeypatch.setattr(geometry, "points_in_ring", counted_ring)
     margin = 360.0 / (1 << 12) + 1e-6  # one level-12 cell, and then some
     rng = np.random.Generator(np.random.PCG64(5))

@@ -64,38 +64,6 @@ def test_streaming_pip_flags(spark, tmp_path):
     assert got == {1: "A", 2: None}
 
 
-def test_streaming_dedup(spark, tmp_path):
-    from osm_pbf2json_spark.streaming.tiles_stream import streaming_dedup
-
-    src = str(tmp_path / "dsrc")
-    os.makedirs(src)
-    batch = spark.createDataFrame(
-        [
-            ("2024-01-01 00:00:01", 1, "alpha beta"),
-            ("2024-01-01 00:00:02", 2, "ALPHA   beta!"),  # same fingerprint as 1
-            ("2024-01-01 00:00:03", 3, "gamma delta"),
-            ("2024-01-01 00:00:04", 4, "alpha beta"),      # dup again
-        ],
-        "ts_s string, doc_id long, text string",
-    ).select(F.to_timestamp("ts_s").alias("ts"), "doc_id", "text")
-    batch.write.parquet(src, mode="overwrite")
-
-    stream = spark.readStream.schema("ts timestamp, doc_id long, text string").parquet(src)
-    q = (
-        streaming_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from dedup_stream").collect()
-    # one survivor per distinct normalized text
-    texts = sorted({r["text"].lower().replace("!", "").split()[0] for r in rows})
-    assert len(rows) == 2 and texts == ["alpha", "gamma"]
-
-
 def test_pbf_unsupported_compression_raises(tmp_path):
     """A Blob carrying an lzma/lz4/zstd payload raises instead of being
     silently skipped (silent entity loss on files from other writers)."""
@@ -149,6 +117,32 @@ def test_pbf_index_truncation_raises_at_index_time(tmp_path):
     p.write_bytes(data[:cut])
     with pytest.raises(EOFError, match="truncated"):
         scan_blob_index(str(p))
+
+
+def test_decode_pbf_truncated_payload_raises_eof(tmp_path):
+    """The driver-side decode fails on a file cut inside a zlib blob's
+    payload with the same EOFError as the blob index, not a zlib error."""
+    import struct
+    import zlib
+
+    import pytest
+
+    from osm_pbf2json_spark.sources.pbf import decode_pbf
+
+    def ld(fnum, payload):  # length-delimited field, payload < 128 bytes
+        return bytes([(fnum << 3) | 2, len(payload)]) + payload
+
+    # PrimitiveBlock holding only an empty stringtable, zlib-compressed
+    blob = ld(3, zlib.compress(ld(1, ld(1, b""))))
+    hdr = ld(1, b"OSMData") + bytes([0x18, len(blob)])  # datasize varint
+    data = struct.pack(">i", len(hdr)) + hdr + blob
+    p = tmp_path / "one_blob.pbf"
+    p.write_bytes(data)
+    out = decode_pbf(str(p))
+    assert (out.nodes, out.ways, out.relations) == ([], [], [])
+    p.write_bytes(data[: len(data) - len(blob) // 2])
+    with pytest.raises(EOFError, match="truncated"):
+        decode_pbf(str(p))
 
 
 def test_cli_pbf_driver_ship_fallback(spark):

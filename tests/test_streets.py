@@ -133,6 +133,7 @@ def test_split_streets_by_cells_scale_parity(spark):
 
     from osm_pbf2json_spark.operators.streets import (
         STREET_SCHEMA,
+        _boundaries_flat,
         split_streets_broadcast,
         split_streets_by_cells,
     )
@@ -175,18 +176,7 @@ def test_split_streets_by_cells_scale_parity(spark):
     sdf = spark.createDataFrame(srows, STREET_SCHEMA).repartition(8)
 
     dist = split_streets_by_cells(sdf, bdf)
-    bcast = split_streets_broadcast(
-        sdf,
-        [
-            {
-                "relation_id": r[0], "name": r[1], "admin_level": r[2],
-                "sw_lon": r[3], "sw_lat": r[4], "ne_lon": r[5], "ne_lat": r[6],
-                "polygons": [[[{"lon": c["lon"], "lat": c["lat"]} for c in ring]
-                              for ring in poly] for poly in r[7]],
-            }
-            for r in brows
-        ],
-    )
+    bcast = split_streets_broadcast(sdf, _boundaries_flat(bdf).toPandas())
     got = sorted((r["id"], r["name"], r["boundary"]) for r in dist.collect())
     want = sorted((r["id"], r["name"], r["boundary"]) for r in bcast.collect())
     assert got == want and len(got) >= n_s
@@ -199,7 +189,9 @@ def test_split_batch_matches_scalar_reference():
     equal to a scalar reference built from linestring_intersects_polygon
     + per-seg line_centroid + _street_row — randomized streets (multi
     segment, single-point and duplicate-way cases) against overlapping
-    boundary grids including same-name boundaries (which must merge)."""
+    boundary grids including same-name boundaries (which must merge), a
+    boundary with a hole, one whose only ring has 2 points and one with
+    empty polygon parts."""
     import numpy as np
     import pandas as pd
 
@@ -208,7 +200,7 @@ def test_split_batch_matches_scalar_reference():
         linestring_intersects_polygon,
     )
     from osm_pbf2json_spark.operators.streets import (
-        _parse_boundaries,
+        _parse_boundaries_flat,
         _split_batch,
         _street_row,
     )
@@ -293,7 +285,40 @@ def test_split_batch_matches_scalar_reference():
             "sw_lon": x0, "sw_lat": y0, "ne_lon": x0 + 1.0, "ne_lat": y0 + 1.0,
             "polygons": [[ring]],
         })
-    bnds, polys, bb = _parse_boundaries(brows)
+
+    def square(x0, y0, x1, y1):
+        return [{"lon": x, "lat": y}
+                for x, y in ((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))]
+
+    # level 7 sorts before the grid, so these own segments where they can
+    brows += [
+        {"relation_id": 40, "name": "holed", "admin_level": 7,
+         "sw_lon": 2.0, "sw_lat": 1.0, "ne_lon": 5.0, "ne_lat": 4.0,
+         "polygons": [[square(2.0, 1.0, 5.0, 4.0), square(3.0, 2.0, 4.0, 3.0)]]},
+        {"relation_id": 41, "name": "two-point", "admin_level": 7,
+         "sw_lon": 6.0, "sw_lat": 1.0, "ne_lon": 7.0, "ne_lat": 2.0,
+         "polygons": [[[{"lon": 6.0, "lat": 1.0}, {"lon": 7.0, "lat": 2.0}]]]},
+        {"relation_id": 42, "name": "empty-parts", "admin_level": 7,
+         "sw_lon": 0.5, "sw_lat": 3.5, "ne_lon": 1.5, "ne_lat": 4.5,
+         "polygons": [[], [square(0.5, 3.5, 1.5, 4.5)], []]},
+    ]
+    bnds = sorted(brows, key=lambda b: (b["admin_level"], b["name"], b["relation_id"]))
+    polys = [
+        [[np.array([(c["lon"], c["lat"]) for c in ring], np.float64).reshape(-1, 2)
+          for ring in rings] for rings in b["polygons"]]
+        for b in bnds
+    ]
+    bb = np.array([[b["sw_lon"], b["sw_lat"], b["ne_lon"], b["ne_lat"]] for b in bnds])
+    # the kernel reads the flat boundary layout _boundaries_flat builds
+    # JVM-side, in any row order
+    cols = ["relation_id", "name", "admin_level", "sw_lon", "sw_lat", "ne_lon", "ne_lat"]
+    bframe = pd.DataFrame({
+        **{c: [b[c] for b in brows] for c in cols},
+        "_plens": [[len(rings) for rings in b["polygons"]] for b in brows],
+        "_rlens": [[len(r) for rings in b["polygons"] for r in rings] for b in brows],
+        "_bfx": [[c["lon"] for rings in b["polygons"] for r in rings for c in r] for b in brows],
+        "_bfy": [[c["lat"] for rings in b["polygons"] for r in rings for c in r] for b in brows],
+    })
 
     rows = []
     for i in range(300):
@@ -353,9 +378,76 @@ def test_split_batch_matches_scalar_reference():
             ],
         }
     )
-    got = norm(_split_batch(flat_pdf, bnds, polys, bb))
+    got = norm(_split_batch(flat_pdf, _parse_boundaries_flat(bframe)).to_dict("records"))
     want = norm(scalar_split(pdf, bnds, polys, bb))
     assert got == want
+
+
+def test_split_batch_kernel_contract():
+    """_split_batch driven as plain pandas (no Spark): an empty batch, one
+    row, no boundaries, and a street of single-point segments plus an
+    empty one (a NaN head, never inside) each give a street frame."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_pbf2json_spark.operators.streets import (
+        _FLAT_COLS,
+        _STREET_COLS,
+        _parse_boundaries_flat,
+        _split_batch,
+    )
+
+    def batch(rows):  # (id, [(way_id, lons, lats), ...])
+        return pd.DataFrame({
+            "id": [r[0] for r in rows], "name": ["s"] * len(rows),
+            "boundary": [None] * len(rows), "length": [0.5] * len(rows),
+            "loc_lon": [0.5] * len(rows), "loc_lat": [0.5] * len(rows),
+            "_wids": [np.array([g[0] for g in r[1]], np.int64) for r in rows],
+            "_npts": [np.array([len(g[1]) for g in r[1]], np.int64) for r in rows],
+            "_flons": [np.array([x for g in r[1] for x in g[1]], np.float64) for r in rows],
+            "_flats": [np.array([y for g in r[1] for y in g[2]], np.float64) for r in rows],
+        }, columns=_FLAT_COLS)
+
+    def bounds(squares):  # (relation_id, name, x0, y0, x1, y1)
+        cols = ["relation_id", "name", "admin_level", "sw_lon", "sw_lat", "ne_lon",
+                "ne_lat", "_plens", "_rlens", "_bfx", "_bfy"]
+        return _parse_boundaries_flat(pd.DataFrame([
+            (rid, name, 10, x0, y0, x1, y1, [1], [5],
+             [x0, x1, x1, x0, x0], [y0, y0, y1, y1, y0])
+            for rid, name, x0, y0, x1, y1 in squares
+        ], columns=cols))
+
+    def rows(out):
+        assert list(out.columns) == _STREET_COLS
+        return [
+            (r["id"], r["boundary"], r["length"], r["loc_lon"], r["loc_lat"],
+             [(g["way_id"], list(g["lons"]), list(g["lats"])) for g in r["segments"]])
+            for r in out.to_dict("records")
+        ]
+
+    none, one = bounds([]), bounds([(1, "A", 0.0, 0.0, 2.0, 2.0)])
+    assert rows(_split_batch(batch([]), none)) == []
+    assert rows(_split_batch(batch([]), one)) == []
+    line = (5, [(10, [0.5, 1.5], [0.5, 0.5])])
+    # no boundaries: the row passes through with its own attributes
+    assert rows(_split_batch(batch([line]), none)) == [
+        (5, None, 0.5, 0.5, 0.5, [(10, [0.5, 1.5], [0.5, 0.5])])
+    ]
+    # one row inside A: split output with the A4 length and A5 midpoint
+    assert rows(_split_batch(batch([line]), one)) == [
+        (10, "A", 1.0, 0.5, 0.5, [(10, [0.5, 1.5], [0.5, 0.5])])
+    ]
+    # single-point segments have no edges: the head inside A makes A a
+    # candidate; the point outside and the empty segment fall back to it
+    points = (6, [(11, [0.5], [0.5]), (12, [3.0], [3.0]), (13, [], [])])
+    assert rows(_split_batch(batch([points]), one)) == [
+        (11 ^ 12 ^ 13, "A", 0.0, 0.5, 0.5,
+         [(11, [0.5], [0.5]), (12, [3.0], [3.0]), (13, [], [])])
+    ]
+    far = (7, [(14, [5.0], [5.0])])
+    assert [r[:2] for r in rows(_split_batch(batch([far, points]), one))] == [
+        (11 ^ 12 ^ 13, "A"), (7, None)
+    ]
 
 
 def test_union_find_dense_cell_chunked():

@@ -1,13 +1,12 @@
 """URL canonicalization goldens (functions/urls.py): exact expected
 strings per rule — case, ports, fragments, tracking params, param sort,
-eTLD+1 with multi-label suffixes — plus the url_dedup survivor rule."""
+eTLD+1 with multi-label suffixes."""
 
 import pyspark.sql.functions as F
 
 from osm_pbf2json_spark.functions.urls import (
     canonicalize_url,
     registered_domain,
-    url_dedup,
     url_host,
 )
 
@@ -73,21 +72,6 @@ def test_url_functions_are_jvm_only(spark):
     assert "pythonUDF" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_url_dedup_survivor(spark):
-    # same canonical URL spelled three ways -> one survivor (min id)
-    urls = [
-        (7, "HTTP://Example.COM:80/x?utm_source=z&a=1"),
-        (3, "http://example.com/x?a=1#section"),
-        (9, "http://example.com/x?a=1"),
-        (5, "http://example.com/y"),
-    ]
-    df = spark.createDataFrame(urls, "doc_id long, url string")
-    out = {r["curl"]: r for r in url_dedup(df).collect()}
-    assert out["http://example.com/x?a=1"]["survivor_id"] == 3
-    assert out["http://example.com/x?a=1"]["n_dups"] == 3
-    assert out["http://example.com/y"]["n_dups"] == 1
-
-
 def test_canonicalize_malformed_passthrough(spark):
     """URLs that do not match scheme://authority pass through unchanged
     (NOT collapsed to one mangled key), and tracking-param stripping is
@@ -109,8 +93,6 @@ def test_canonicalize_malformed_passthrough(spark):
     assert got[2] == "mailto:x@y"
     assert got[3] == "//cdn.example.com/z"
     assert got[4] == "http://x.com/p?a=1"
-    # distinct malformed urls stay distinct through url_dedup
-    assert url_dedup(df).count() == 4
 
 
 def test_url_canonicalize_never_fails_on_garbage(spark):
