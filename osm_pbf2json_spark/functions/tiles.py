@@ -70,22 +70,6 @@ def hex_unpack(cell):
     return res, q, r
 
 
-def hex_k_ring(cell: int, k: int) -> np.ndarray:
-    """All cells within hex-grid distance k of `cell` (single query cell;
-    k-ring for the kNN expansion loop)."""
-    res, q, r = hex_unpack(np.asarray([cell]))
-    res, q, r = int(res[0]), int(q[0]), int(r[0])
-    out = []
-    for dq in range(-k, k + 1):
-        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
-            out.append(
-                (np.int64(res) << np.int64(60))
-                | (np.int64(q + dq + _Q_OFF) << np.int64(30))
-                | np.int64(r + dr + _Q_OFF)
-            )
-    return np.array(out, dtype=np.int64)
-
-
 def hex_covering_bbox(
     lon_min, lat_min, lon_max, lat_max, res: int, max_cells: int = 2_000_000
 ) -> np.ndarray:

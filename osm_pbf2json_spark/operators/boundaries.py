@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from ..functions.filter_dsl import build_admin_groups, compile_groups
 from ..functions.geometry import assemble_multipolygon, stitch_rings
 from .closure import EntityTables, closure
-from .resolve import _located
+from .resolve import way_points
 
 RING = "array<struct<lon:double,lat:double>>"
 BOUNDARY_SCHEMA = (
@@ -122,23 +122,12 @@ def boundaries_from_closure(closed: EntityTables) -> DataFrame:
         & (F.col("m.role").isin(list(_OUTER_ROLES | _INNER_ROLES)))
     )
 
-    # way refs + positional coord resolution in one join pass; stitching
-    # matches endpoints by node id, so keep (id, lon, lat) per resolved ref
-    way_pts = (
-        closed.ways.select(F.col("id").alias("way_id"), F.posexplode("refs").alias("wpos", "ref"))
-        .join(
-            closed.nodes.filter(_located()).select(F.col("id").alias("ref"), "lon", "lat"),
-            "ref",
-            "inner",
-        )
-        .groupBy("way_id")
-        .agg(F.array_sort(F.collect_list(F.struct("wpos", "ref", "lon", "lat"))).alias("pts"))
-        .select(
-            "way_id",
-            F.transform("pts", lambda s: s.ref).alias("ids"),
-            F.transform("pts", lambda s: s.lon).alias("_lons"),
-            F.transform("pts", lambda s: s.lat).alias("_lats"),
-        )
+    # stitching matches endpoints by node id, so keep each point's ref
+    way_pts = way_points(closed.ways, closed.nodes, ref=True).select(
+        F.col("id").alias("way_id"),
+        F.col("pts.ref").alias("ids"),
+        F.col("pts.lon").alias("_lons"),
+        F.col("pts.lat").alias("_lats"),
     )
 
     grouped_input = members.join(

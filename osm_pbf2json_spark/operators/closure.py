@@ -29,7 +29,7 @@ class EntityTables:
 def _pin(df: DataFrame) -> DataFrame:
     """Materialize and truncate lineage (barrier for iterative plans).
 
-    Iterative algorithms (closure fixpoint, per-level relation resolve)
+    Iterative algorithms (closure fixpoint, round-wise relation resolve)
     otherwise stack join plans multiplicatively — each round would replan
     and re-execute every prior round. localCheckpoint stores the
     partitions cluster-side (no driver collect), so this scales like a

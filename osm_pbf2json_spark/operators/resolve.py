@@ -6,17 +6,22 @@ missing refs silently dropped), relation resolution `mod.rs:49-75`
 level).
 
 Spark shape (scale-first):
-- J1 is `posexplode(refs)` → hash equi-join against nodes on id →
-  `groupBy(way_id)` + `array_sort(collect_list(struct(pos,lon,lat)))`.
+- J1 (`way_points`) is the engine's one way→node join; it serves all
+  three pipelines: objects (`resolve_way_coords`), streets
+  (`extract_streets`, carrying the way's name) and boundaries
+  (`boundaries_from_closure`, keeping node ids for ring stitching). It is
+  `posexplode_outer(refs)` → LEFT hash join against nodes on id →
+  `groupBy(way_id)` + `array_sort(collect_list(struct(pos, …)))`.
   The join is the engine's hottest shuffle at 100 TB: node refs are
   skewed (mega-junction nodes), so AQE skew-join stays on and callers can
   pre-repartition; the aggregation is partial (map-side combine) because
   collect_list groups by the exploded way_id which the join already
   co-located.
-- J2 runs bounded driver-side rounds (max relation nesting depth, ≤ a few
-  in OSM), each round a join of unresolved relations against the
-  already-resolved pool. Cycles are broken by treating intra-cycle member
-  edges as empty (deterministic; reference behavior is traversal-order
+- J2 resolves in bounded driver-side rounds (max relation nesting depth,
+  ≤ a few in OSM). Each round pins the relations with no edge to a
+  still-unresolved child and resolves them against the pool of earlier
+  rounds. Cycles are broken by treating intra-cycle member edges as
+  empty (deterministic; reference behavior is traversal-order
   dependent — see SURVEY.md §4 determinism notes).
 """
 
@@ -40,35 +45,44 @@ def _located() -> Column:
     return lon.isNotNull() & lat.isNotNull() & ~F.isnan(lon) & ~F.isnan(lat)
 
 
-def resolve_way_coords(ways: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J1: (way id, refs) → ordered coords, dropping refs with no located
-    node (see `_located`).
+def way_points(
+    ways: DataFrame, nodes: DataFrame, *carry: str, ref: bool = False
+) -> DataFrame:
+    """J1, the engine's one way→node join: (way id, refs) → the way's
+    located refs (see `_located`) in ref order.
 
-    Returns DataFrame(id BIGINT, coords ARRAY<STRUCT<lon,lat>>).
-    Ways whose refs all miss resolve to an empty array (reference yields an
-    empty coordinate vec, mod.rs:36-47); ways with empty refs likewise.
+    Returns DataFrame(id, *carry, pts ARRAY<STRUCT<pos, [ref,] lon, lat>>).
+    `carry` columns of `ways` ride the join and come back out of the
+    per-way aggregation through `first()`; `ref=True` keeps each point's
+    node id (ring stitching matches endpoints by node id). Ways whose refs
+    all miss, or whose refs are empty, get an empty array (the reference
+    yields an empty coordinate vec, mod.rs:36-47).
     """
     # LEFT join + null-skipping collect: the outer explode keeps one row
     # per way even for empty refs, and unresolved refs collect as NULL
     # entries that collect_list drops — so every way id reaches the
     # aggregation and ways with zero resolvable refs come out with an
-    # empty array directly. (The previous formulation inner-joined and
-    # then LEFT-joined the result back onto the way-id list: one more
-    # full shuffle of the hottest join's output for the same rows.)
-    exploded = ways.select("id", F.posexplode_outer("refs").alias("pos", "ref"))
+    # empty array directly, with no second join back onto the way ids
+    exploded = ways.select("id", *carry, F.posexplode_outer("refs").alias("pos", "ref"))
     joined = exploded.join(
         nodes.select(F.col("id").alias("ref"), "lon", "lat"), "ref", "left"
     )
+    fields = ["pos", "ref", "lon", "lat"] if ref else ["pos", "lon", "lat"]
     return joined.groupBy("id").agg(
+        *[F.first(c).alias(c) for c in carry],
         F.array_sort(
-            F.collect_list(
-                F.when(_located(), F.struct("pos", "lon", "lat"))
-            )
-        ).alias("pcoords")
-    ).select(
+            F.collect_list(F.when(_located(), F.struct(*fields)))
+        ).alias("pts"),
+    )
+
+
+def resolve_way_coords(ways: DataFrame, nodes: DataFrame) -> DataFrame:
+    """J1 for objects and relation members: (way id, refs) → ordered
+    coords. Returns DataFrame(id BIGINT, coords ARRAY<STRUCT<lon,lat>>)."""
+    return way_points(ways, nodes).select(
         "id",
         F.transform(
-            "pcoords", lambda s: F.struct(s.lon.alias("lon"), s.lat.alias("lat"))
+            "pts", lambda s: F.struct(s.lon.alias("lon"), s.lat.alias("lat"))
         ).alias("coords"),
     )
 
@@ -80,7 +94,7 @@ def resolve_relation_coords(
     max_rounds: int = 16,
 ) -> DataFrame:
     """J2: resolve every relation in `relations` to its compound (hull)
-    coordinates, bottom-up over nesting levels.
+    coordinates, bottom-up in rounds.
 
     `relations` must already be the dependency-closure set (all member
     relations present). Returns DataFrame(id, coords ARRAY<STRUCT<lon,lat>>).
@@ -115,13 +129,6 @@ def resolve_relation_coords(
         members.filter(F.col("mtype") == "relation")
         .select("id", "pos", F.col("mid").alias("child"))
     )
-
-    # Level assignment is DISTRIBUTED — an anti-join fixpoint over the
-    # relation→relation edge list (never over nodes/ways, and never a
-    # driver collect: the planet has ~10⁷ relations, which is edge-list
-    # driver-OOM territory). Each round: relations with no edge to a
-    # still-unassigned child (that exists in the input set) become
-    # `ready` at the current level. Rounds are bounded by nesting depth.
     all_ids = _pin(relations.select("id").distinct())
     # only edges to children that are actually present can block
     real_edges = _pin(
@@ -129,54 +136,21 @@ def resolve_relation_coords(
         .distinct()
         .join(all_ids.select(F.col("id").alias("child")), "child", "left_semi")
     )
-    remaining = all_ids
-    levels_df = spark.createDataFrame([], "id long, level int")
-    n_levels = 0
-    for level in range(max_rounds):
-        if remaining.isEmpty():
-            break
-        blocked = (
-            real_edges.join(
-                remaining.select(F.col("id").alias("child")), "child", "left_semi"
-            )
-            .select("id")
-            .distinct()
-        )
-        ready = _pin(remaining.join(blocked, "id", "left_anti"))
-        if ready.isEmpty():
-            break  # every remaining relation sits in a cycle
-        levels_df = levels_df.unionByName(
-            ready.withColumn("level", F.lit(level))
-        )
-        remaining = _pin(remaining.join(ready, "id", "left_anti"))
-        n_levels = level + 1
-    # cycle guard: everything still remaining resolves in one final level;
-    # intra-cycle child edges find no earlier-resolved child and thus
-    # contribute nothing (deterministic, matches SURVEY.md §4 notes)
-    if not remaining.isEmpty():
-        levels_df = levels_df.unionByName(
-            remaining.withColumn("level", F.lit(n_levels))
-        )
-        n_levels += 1
-    levels_df = _pin(levels_df)
 
     hull_udf = F.pandas_udf(
         _hull_batch, "struct<lons:array<double>,lats:array<double>>"
     )
 
-    resolved: DataFrame | None = None
-    for level in range(n_levels):
-        this_ids = levels_df.filter(F.col("level") == level).select("id")
-        if level == 0:
-            child_part = spark.createDataFrame([], "id long, pos int, mcoords " + COORD_ARR)
-        else:
-            child_part = rel_members.join(
-                resolved.select(F.col("id").alias("child"), F.col("coords").alias("mcoords")),
-                "child",
-                "inner",
-            ).select("id", "pos", "mcoords")
-        parts = static_parts.unionByName(child_part).join(this_ids, "id", "left_semi")
-        lvl = (
+    def resolve(ids: DataFrame, resolved: DataFrame) -> DataFrame:
+        """Hulls of `ids`, whose relation members come from `resolved`
+        (a member not resolved yet contributes nothing)."""
+        child_part = rel_members.join(
+            resolved.select(F.col("id").alias("child"), F.col("coords").alias("mcoords")),
+            "child",
+            "inner",
+        ).select("id", "pos", "mcoords")
+        parts = static_parts.unionByName(child_part).join(ids, "id", "left_semi")
+        return (
             parts.groupBy("id")
             .agg(
                 F.flatten(
@@ -186,7 +160,7 @@ def resolve_relation_coords(
                     )
                 ).alias("flat")
             )
-            .join(this_ids, "id", "right")
+            .join(ids, "id", "right")
             .select(
                 "id",
                 F.coalesce("flat", F.array().cast(COORD_ARR)).alias("flat"),
@@ -205,11 +179,33 @@ def resolve_relation_coords(
                 ).alias("coords"),
             )
         )
-        resolved = _pin(lvl if resolved is None else resolved.unionByName(lvl))
 
-    if resolved is None:
-        return spark.createDataFrame([], "id long, coords " + COORD_ARR)
-    return resolved
+    # Each round is DISTRIBUTED — an anti-join over the relation→relation
+    # edge list (never over nodes/ways, and never a driver collect: the
+    # planet has ~10⁷ relations): the remaining relations with no edge to
+    # a remaining child are `ready` and resolve against every earlier
+    # round. Rounds are bounded by nesting depth.
+    resolved = spark.createDataFrame([], "id long, coords " + COORD_ARR)
+    remaining = all_ids
+    for _ in range(max_rounds):
+        if remaining.isEmpty():
+            return resolved
+        blocked = (
+            real_edges.join(
+                remaining.select(F.col("id").alias("child")), "child", "left_semi"
+            )
+            .select("id")
+            .distinct()
+        )
+        ready = _pin(remaining.join(blocked, "id", "left_anti"))
+        if ready.isEmpty():
+            break  # every remaining relation sits in a cycle
+        resolved = _pin(resolved.unionByName(resolve(ready, resolved)))
+        remaining = _pin(remaining.join(ready, "id", "left_anti"))
+    # cycle guard (or round cap): whatever remains resolves in one final
+    # round; intra-cycle child edges find no earlier-resolved child and
+    # thus contribute nothing (deterministic, matches SURVEY.md §4 notes)
+    return _pin(resolved.unionByName(resolve(remaining, resolved)))
 
 
 def _hull_chain(xs: list, ys: list) -> tuple[list, list]:

@@ -809,11 +809,6 @@ def _knn_grid_size(
     return s
 
 
-# rows collected for the most recent knn_join histogram (read by tests
-# asserting the driver-ingress cap; never consumed by the operator)
-_LAST_HIST_ROWS: int | None = None
-
-
 def knn_join(
     points: DataFrame,
     queries,
@@ -942,8 +937,6 @@ def knn_join(
         raise AssertionError(
             f"kNN histogram {len(hpdf)} rows exceeds cap {max_hist_cells}"
         )
-    global _LAST_HIST_ROWS
-    _LAST_HIST_ROWS = len(hpdf)  # test observable for the driver-ingress cap
     M, W = 1 << 20, 1 << 21
     hist_arrs = (
         ((hpdf["_cx"].to_numpy(np.int64) + M) * W

@@ -45,7 +45,7 @@ from ..functions.geometry import (
 )
 from .boundaries import boundaries_from_closure
 from .closure import EntityTables, closure
-from .resolve import _located
+from .resolve import way_points
 
 RTREE_PADDING = 0.002  # streets.rs:14
 # target cell count for chunked dense pair/probe matrices (kept small
@@ -390,36 +390,20 @@ def _segments_to_coords(col: str = "segments"):
 def extract_streets(ways_filtered: DataFrame, nodes: DataFrame) -> DataFrame:
     """F5-filtered ways + nodes → street rows (one per component).
 
-    J1 resolution is FUSED with the name attach: `name` rides the
-    ref-explode join (a few bytes per ref row) and comes back out of the
-    per-way aggregation, so the pipeline is explode→join→groupBy(way)→
-    groupBy(name) with no way-id re-join anywhere (the r5 shape resolved
-    coords separately and joined them back onto the named ways — two
-    extra shuffles of the resolved coordinate arrays). The grouped
-    kernel exchanges coordinates as parallel double arrays (Arrow
-    primitive buffers); the public `coords` struct array is reassembled
-    JVM-side by arrays_zip — Python never touches per-point structs."""
+    J1 (`resolve.way_points`) is FUSED with the name attach: `name`
+    rides the ref-explode join and comes back out of the per-way
+    aggregation, so the pipeline is explode→join→groupBy(way)→
+    groupBy(name) with no way-id re-join anywhere. The grouped kernel
+    exchanges coordinates as parallel double arrays (Arrow primitive
+    buffers); the public `coords` struct array is reassembled JVM-side
+    by arrays_zip — Python never touches per-point structs."""
     named = ways_filtered.select(
         "id", F.col("tags").getItem("name").alias("name"), "refs"
     ).filter(F.col("name").isNotNull())
-    exploded = named.select(
+    seg_input = way_points(named, nodes, "name").select(
         F.col("id").alias("way_id"), "name",
-        F.posexplode_outer("refs").alias("pos", "ref"),
-    )
-    joined = exploded.join(
-        nodes.select(F.col("id").alias("ref"), "lon", "lat"), "ref", "left"
-    )
-    seg_input = joined.groupBy("way_id").agg(
-        F.first("name").alias("name"),
-        F.array_sort(
-            F.collect_list(
-                F.when(_located(), F.struct("pos", "lon", "lat"))
-            )
-        ).alias("_pc"),
-    ).select(
-        "way_id", "name",
-        F.col("_pc.lon").alias("_lons"),
-        F.col("_pc.lat").alias("_lats"),
+        F.col("pts.lon").alias("_lons"),
+        F.col("pts.lat").alias("_lats"),
     )
     raw = seg_input.groupBy("name").applyInPandas(_cluster_group, _STREET_RAW_SCHEMA)
     return raw.withColumn("segments", _segments_to_coords())
@@ -981,7 +965,8 @@ def streets(
         return result.localCheckpoint(eager=False).orderBy("name", "id")
     admin_pred = compile_groups(build_admin_groups([boundary]))
     admin_closed = closure(tables, admin_pred)
-    bdf = boundaries_from_closure(admin_closed).localCheckpoint(eager=True)
+    # lazy: the gate's toPandas (or the cell split) materializes it once
+    bdf = boundaries_from_closure(admin_closed).localCheckpoint(eager=False)
     # one action both gates on the set's size and collects it
     bpdf = _boundaries_flat(bdf).limit(max_broadcast_boundaries + 1).toPandas()
     if len(bpdf) <= max_broadcast_boundaries:

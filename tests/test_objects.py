@@ -149,6 +149,90 @@ def test_nested_relations(spark):
     assert coords == [(6.0, 50.0), (8.0, 52.0), (6.0, 52.0), (6.0, 50.0)]
 
 
+def test_relation_resolve_matches_recursion(spark):
+    """J2 against the reference's recursion (mod.rs:49-75): on a seeded
+    random acyclic relation graph, `resolve_relation_coords` equals a
+    memoized recursion that joins member coordinates in member order and
+    takes the convex hull at every level. The graph has diamonds, a
+    relation whose members are all relations, a member relation missing
+    from the input, an empty member list and node members without a
+    location."""
+    import math
+
+    import numpy as np
+
+    from osm_pbf2json_spark.functions.geometry import convex_hull
+    from osm_pbf2json_spark.operators.resolve import (
+        resolve_relation_coords, resolve_way_coords,
+    )
+
+    rng = np.random.Generator(np.random.PCG64(31))
+    nodes = [
+        (i, float(rng.uniform(50, 51)), float(rng.uniform(6, 7)), {})
+        for i in range(1, 41)
+    ]
+    nodes += [(41, float("nan"), 6.5, {}), (42, None, 6.5, {})]
+    ways = [
+        (100 + w, [int(r) for r in rng.integers(1, 44, int(rng.integers(0, 5)))], {})
+        for w in range(12)
+    ]
+    # topological slot j → relation id; ids are shuffled so a child's id
+    # is as often above its parent's as below
+    n_rel = 20
+    rid = [200 + int(p) for p in rng.permutation(n_rel)]
+
+    def random_member(j):
+        kind = rng.choice(["node", "way", "relation"] if j else ["node", "way"])
+        if kind == "node":
+            return ("node", int(rng.integers(1, 43)), "")
+        if kind == "way":
+            return ("way", int(rng.integers(100, 113)), "")  # 112: no such way
+        return ("relation", rid[int(rng.integers(0, j))], "")
+
+    members = {
+        rid[0]: [],
+        rid[1]: [("node", 1, ""), ("node", 41, ""), ("way", 100, "")],
+        rid[2]: [("relation", rid[1], ""), ("node", 42, ""), ("node", 2, "")],
+        rid[3]: [("way", 101, ""), ("relation", rid[1], "")],
+        # diamond over rid[1], all members relations, one of them missing
+        rid[4]: [("relation", rid[2], ""), ("relation", 999, ""), ("relation", rid[3], "")],
+    }
+    for j in range(5, n_rel):
+        members[rid[j]] = [random_member(j) for _ in range(int(rng.integers(1, 6)))]
+    members[rid[n_rel - 1]].append(("relation", rid[4], ""))
+
+    node_xy = {
+        i: (lon, lat) for i, lat, lon, _ in nodes
+        if lat is not None and not math.isnan(lat) and not math.isnan(lon)
+    }
+    way_xy = {w: [node_xy[r] for r in refs if r in node_xy] for w, refs, _ in ways}
+    memo: dict = {}
+
+    def coords(r):
+        if r not in memo:
+            flat = []
+            for mtype, mid, _ in members[r]:
+                if mtype == "node" and mid in node_xy:
+                    flat.append(node_xy[mid])
+                elif mtype == "way" and mid in way_xy:
+                    flat += way_xy[mid]
+                elif mtype == "relation" and mid in members:
+                    flat += coords(mid)
+            memo[r] = [(float(x), float(y)) for x, y in convex_hull(flat)]
+        return memo[r]
+
+    t = make_tables(
+        spark, nodes=nodes, ways=ways,
+        relations=[(r, m, {}) for r, m in members.items()],
+    )
+    way_coords = resolve_way_coords(t.ways, t.nodes)
+    got = {
+        row["id"]: [(c["lon"], c["lat"]) for c in row["coords"]]
+        for row in resolve_relation_coords(t.relations, way_coords, t.nodes).collect()
+    }
+    assert got == {r: coords(r) for r in members}
+
+
 def test_repeat_objects_call_compiles_no_classes(spark):
     # one objects() call generates more classes than Spark's default
     # codegen cache (100 entries) holds; get_session sizes the cache so a

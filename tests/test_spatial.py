@@ -367,7 +367,22 @@ def test_knn_grid_size_caps_histogram():
     assert _knn_grid_size(5.0, 5.0, 2.0, 2.0, 0.01, 16) == 0.01
 
 
-def test_knn_join_exact_under_tiny_histogram_cap(spark):
+def _collected_rows(monkeypatch, df):
+    """Wrap `toPandas` on `df`'s DataFrame class; the returned list gets
+    the row count of every frame collected that way, in call order."""
+    rows = []
+    to_pandas = type(df).toPandas
+
+    def counting(self, *args, **kwargs):
+        pdf = to_pandas(self, *args, **kwargs)
+        rows.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(type(df), "toPandas", counting)
+    return rows
+
+
+def test_knn_join_exact_under_tiny_histogram_cap(spark, monkeypatch):
     """Coarsening the internal grid (tiny max_hist_cells over a
     wide-extent corpus) must not change exactness — the provable-bound
     selection only widens candidate sets. Compared against brute
@@ -387,13 +402,13 @@ def test_knn_join_exact_under_tiny_histogram_cap(spark):
     )
     queries = [(i, float(rng.uniform(-170, 170)), float(rng.uniform(-80, 80)))
                for i in range(25)]
+    collected = _collected_rows(monkeypatch, pts)
     out = knn_join(pts, queries, k=4, res=9, max_hist_cells=16)
     got = {}
-    from osm_pbf2json_spark.operators import spatial as _sp
 
-    # the driver-ingress cap held: the collected histogram was coarsened
-    # to <= max_hist_cells rows (VERDICT r4 #2 "Done =" criterion)
-    assert _sp._LAST_HIST_ROWS is not None and _sp._LAST_HIST_ROWS <= 16
+    # the driver-ingress cap held: the histogram the call collects last
+    # was coarsened to <= max_hist_cells rows (VERDICT r4 #2 "Done =")
+    assert collected and collected[-1] <= 16
     for r in out.collect():
         got.setdefault(r["qid"], []).append((r["rank"], r["neighbor_id"]))
     assert len(got) == 25
@@ -430,7 +445,7 @@ def test_knn_histogram_stays_off_python_rdds(spark):
     assert len(got) == 3
 
 
-def test_knn_histogram_below_cap_is_one_action(spark):
+def test_knn_histogram_below_cap_is_one_action(spark, monkeypatch):
     """Below `max_hist_cells` the histogram reaches the driver through
     one action (`limit(cap + 1).toPandas()`), with no persist, count or
     unpersist around it. Under AQE that action is two jobs: the
@@ -440,6 +455,7 @@ def test_knn_histogram_below_cap_is_one_action(spark):
     pts = spark.range(20_000, numPartitions=4).selectExpr(
         "id", "13.0 + rand(1) * 0.3 AS lon", "52.0 + rand(2) * 0.3 AS lat"
     )
+    collected = _collected_rows(monkeypatch, pts)
     group = "test-knn-below-cap"
     sc.setJobGroup(group, group)
     try:
@@ -448,9 +464,51 @@ def test_knn_histogram_below_cap_is_one_action(spark):
         rows = out.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert S._LAST_HIST_ROWS < 1 << 18
+    assert collected and collected[-1] < 1 << 18
     assert call_jobs <= 2, call_jobs
     assert len(rows) == 10
+
+
+def test_knn_tile_select_contract():
+    """Plain-NumPy contract of the kNN tile selector: empty query arrays,
+    one query, k above the corpus count (every occupied tile), a NaN
+    query (no tile) and `query_chunk=1` (same output as one chunk)."""
+    from osm_pbf2json_spark.operators.spatial import _knn_tile_select
+
+    # four occupied tiles in a row, 0.1 deg apart, 3 points each
+    x0 = np.array([0.0, 0.1, 0.2, 0.3])
+    hist = (
+        np.array([10, 11, 12, 13], np.int64), np.full(4, 3, np.int64),
+        x0, x0 + 0.05, np.zeros(4), np.full(4, 0.05),
+    )
+
+    def select(qlon, qlat, k, chunk=256):
+        qlon = np.asarray(qlon, np.float64)
+        return _knn_tile_select(
+            np.arange(len(qlon), dtype=np.int64), qlon,
+            np.asarray(qlat, np.float64), hist, k, chunk,
+        )
+
+    out = select([], [], 3)
+    assert [len(a) for a in out] == [0, 0, 0, 0]
+    assert [a.dtype for a in out] == [np.int64, np.float64, np.float64, np.int64]
+
+    # tile 10 alone holds k=3 points within its farthest corner; k=4
+    # needs tile 11 too, whose near edge is within that bound, tile 12's not
+    qid, qlon, qlat, tile = select([0.02], [0.02], 3)
+    assert qid.tolist() == [0] and tile.tolist() == [10]
+    assert qlon.tolist() == [0.02] and qlat.tolist() == [0.02]
+    assert sorted(select([0.02], [0.02], 4)[3].tolist()) == [10, 11]
+
+    assert sorted(select([0.02], [0.02], 100)[3].tolist()) == [10, 11, 12, 13]
+    for k in (3, 100):
+        assert len(select([np.nan], [0.02], k)[0]) == 0
+
+    rng = np.random.Generator(np.random.PCG64(5))
+    qlon, qlat = rng.uniform(-0.1, 0.45, 9), rng.uniform(-0.1, 0.15, 9)
+    qlon[4] = np.nan
+    for got, want in zip(select(qlon, qlat, 5, chunk=1), select(qlon, qlat, 5)):
+        assert np.array_equal(got, want)
 
 
 def _square(x0, y0, x1, y1):
