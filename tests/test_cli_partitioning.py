@@ -13,6 +13,7 @@ from osm_pbf2json_spark.plans.partitioning import (
     salted_join,
 )
 from osm_pbf2json_spark.sources.fixtures import ensure_fixture
+from tests.reference import needs_reference
 from tests.test_objects import make_tables
 
 GONTARD_SEGMENTS = [
@@ -40,6 +41,7 @@ GONTARD_SEGMENTS = [
 ]
 
 
+@needs_reference("alexanderplatz")
 def test_cli_streets_geojson_gontardstrasse_golden(spark):
     """Readme.md:61-62: exact MultiLineString coordinates (segment order
     is R-tree-internal in the reference → compared as a set)."""
@@ -57,6 +59,7 @@ def test_cli_streets_geojson_gontardstrasse_golden(spark):
     assert sorted(got) == sorted(GONTARD_SEGMENTS)
 
 
+@needs_reference("alexanderplatz")
 def test_cli_objects_jsonlines(spark):
     out = io.StringIO()
     cli_main(
@@ -74,6 +77,7 @@ def test_cli_objects_jsonlines(spark):
     assert all(json.loads(l)["id"] for l in lines)
 
 
+@needs_reference("wilhelmstrasse")
 def test_cli_boundaries(spark):
     out = io.StringIO()
     cli_main(

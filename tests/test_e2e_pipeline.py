@@ -61,7 +61,8 @@ def test_pages_to_tiles_with_restart(spark, wilhelmstrasse, tmp_path):
     assert total == 300
 
 
-def test_district_assignment_is_deterministic(spark, wilhelmstrasse):
+def test_district_assignment_is_deterministic(spark, osm_tables):
+    wilhelmstrasse = osm_tables("wilhelmstrasse")
     pages = synth_pages(spark, 120)
     geo = attach_page_geo(pages, wilhelmstrasse.nodes)
     brows = [

@@ -13,6 +13,7 @@ from osm_pbf2json_spark.functions.text import (
     token_count,
 )
 from osm_pbf2json_spark.operators import ann, dedup
+from tests.reference import needs_reference, reference_pbf
 
 
 @pytest.fixture(scope="module")
@@ -242,10 +243,11 @@ def test_pages_text_identity(spark):
     assert verify_text_identity(pages) == 0  # byte-identical per url
 
 
-def test_page_geo_deterministic(spark, alexanderplatz):
+def test_page_geo_deterministic(spark, osm_tables):
     from osm_pbf2json_spark.sources.fixtures import synth_pages
     from osm_pbf2json_spark.sources.pages import attach_page_geo
 
+    alexanderplatz = osm_tables("alexanderplatz")
     pages = synth_pages(spark, 50)
     g1 = {r["url"]: r["entity_id"] for r in attach_page_geo(pages, alexanderplatz.nodes).collect()}
     g2 = {r["url"]: r["entity_id"] for r in attach_page_geo(pages, alexanderplatz.nodes).collect()}
@@ -558,13 +560,14 @@ def test_contamination_eval_different_id_column(spark):
     assert len(hits) == 1 and hits[0]["n_hits"] == 1
 
 
+@needs_reference("alexanderplatz")
 def test_distributed_pbf_decode_matches_single(spark):
     """Blob-parallel decode (executors) is row-identical to the
     single-process decoder, and feeds objects() to the reference golden."""
     from osm_pbf2json_spark.operators.objects import objects
     from osm_pbf2json_spark.sources.pbf import decode_pbf, load_pbf_distributed
 
-    path = "/root/reference/tests/data/alexanderplatz.pbf"
+    path = reference_pbf("alexanderplatz")
     t = load_pbf_distributed(spark, path, parallelism=8)
     single = decode_pbf(path)
     assert t.nodes.count() == len(single.nodes)
@@ -711,14 +714,14 @@ def test_ivfpq_opq_rotation_improves_recall(spark):
     assert opq >= resid, (resid, opq)
 
 
-def test_pbf_index_truncated_files():
+def test_pbf_index_truncated_files(osm_pbf):
     """scan_blob_index on truncated files returns a prefix of the full
     index or raises — never hangs, never fabricates blobs."""
     import pytest as _pytest
 
     from osm_pbf2json_spark.sources.pbf import scan_blob_index
 
-    path = "/root/reference/tests/data/alexanderplatz.pbf"
+    path = osm_pbf("alexanderplatz")
     full = scan_blob_index(path)
     data = open(path, "rb").read()
     import tempfile

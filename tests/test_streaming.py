@@ -99,14 +99,14 @@ def test_pbf_unsupported_compression_raises(tmp_path):
         decode_pbf(str(p))
 
 
-def test_pbf_index_truncation_raises_at_index_time(tmp_path):
+def test_pbf_index_truncation_raises_at_index_time(tmp_path, osm_pbf):
     """A file truncated mid-payload fails in scan_blob_index with the
     offending offset — not later as an opaque decode error in a task."""
     import pytest
 
     from osm_pbf2json_spark.sources.pbf import scan_blob_index
 
-    path = "/root/reference/tests/data/alexanderplatz.pbf"
+    path = osm_pbf("alexanderplatz")
     data = open(path, "rb").read()
     full = scan_blob_index(path)
     assert full, "fixture should contain OSMData blobs"
@@ -145,14 +145,14 @@ def test_decode_pbf_truncated_payload_raises_eof(tmp_path):
         decode_pbf(str(p))
 
 
-def test_cli_pbf_driver_ship_fallback(spark):
+def test_cli_pbf_driver_ship_fallback(spark, osm_pbf):
     """load_pbf_tables(distributed=False) — the remote-master fallback —
     produces the same objects output as the blob-parallel path."""
     from osm_pbf2json_spark.cli import load_pbf_tables
     from osm_pbf2json_spark.operators.objects import objects
     from osm_pbf2json_spark.sinks import objects_json_lines
 
-    path = "/root/reference/tests/data/alexanderplatz.pbf"
+    path = osm_pbf("alexanderplatz")
     t_dist = load_pbf_tables(spark, path)  # local master → distributed
     t_ship = load_pbf_tables(spark, path, distributed=False)
     a = sorted(r["value"] for r in objects_json_lines(objects(t_dist, "amenity")).collect())

@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 from package import build_zip, zip_fingerprint  # noqa: E402
 
 from osm_pbf2json_spark.sources.fixtures import ensure_fixture  # noqa: E402
+from tests.reference import needs_reference  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -76,6 +77,7 @@ def test_spark_submit_pyfiles_smoke(tmp_path):
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="no spark-submit")
+@needs_reference("alexanderplatz")
 def test_spark_submit_pyfiles_objects(tmp_path):
     fixture = ensure_fixture("alexanderplatz")
     zip_path = os.path.abspath(build_zip(str(tmp_path / "dist")))
