@@ -105,24 +105,21 @@ def _run(args, spark, out) -> None:
     else:
         tables = load_entities(spark, path)
 
+    # each command picks its frame and its sinks; one place writes them
     if args.cmd == "objects":
         df = objects(tables, args.tags, args.retain_coordinates)
-        for r in objects_json_lines(df).collect():
-            out.write(r["value"] + "\n")
+        lines, geojson = objects_json_lines, None
     elif args.cmd == "streets":
         df = streets(tables, args.name, args.boundary)
-        if args.geojson:
-            out.write(streets_geojson(df) + "\n")
-        else:
-            for r in streets_json_lines(df).collect():
-                out.write(r["value"] + "\n")
+        lines, geojson = streets_json_lines, streets_geojson
     else:
         df = boundaries(tables, args.levels)
-        if args.geojson:
-            out.write(boundaries_geojson(df) + "\n")
-        else:
-            for r in boundaries_json_lines(df).collect():
-                out.write(r["value"] + "\n")
+        lines, geojson = boundaries_json_lines, boundaries_geojson
+    if getattr(args, "geojson", False):
+        out.write(geojson(df) + "\n")
+    else:
+        for r in lines(df).collect():
+            out.write(r["value"] + "\n")
 
 
 if __name__ == "__main__":

@@ -266,6 +266,15 @@ def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
     )
 
 
+def flat_arrays(col, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """A column of arrays (an Arrow list column as pandas sees it; None
+    counts as empty) → (per-row counts, every row's values back to back
+    as one `dtype` buffer)."""
+    arrs = [np.empty(0, dtype) if a is None else np.asarray(a, dtype) for a in col]
+    counts = np.fromiter(map(len, arrs), np.int64, len(arrs))
+    return counts, np.concatenate([np.empty(0, dtype), *arrs])
+
+
 def flatten_rings(multipolygons):
     """Candidates (each a list of polygons, a polygon a list of rings of
     (lon, lat) points) → the flat ring layout `EdgeTable` reads: all

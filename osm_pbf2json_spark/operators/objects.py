@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 from ..functions.filter_dsl import Group, compile_groups, parse
+from ..functions.geometry import flat_arrays
 from .closure import EntityTables, closure
 from .resolve import _located, resolve_relation_coords, resolve_way_coords
 
@@ -38,24 +39,16 @@ def _geo_info_batch(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
     shoelace centroid with zero-area fallback to the linestring
     centroid; open → length-weighted segment-midpoint centroid with
     zero-length fallback to the first point)."""
-    R = len(lons)
-    cents: list = [None] * R
-    bnds: list = [None] * R
-    rows = []  # (row_idx, lon_arr, lat_arr) for non-empty rows
-    for i in range(R):
-        lo = lons.iloc[i]
-        if lo is None or len(lo) == 0:
-            continue
-        rows.append((i, np.asarray(lo, np.float64), np.asarray(lats.iloc[i], np.float64)))
-    if not rows:
+    counts, x = flat_arrays(lons, np.float64)
+    _, y = flat_arrays(lats, np.float64)
+    cents: list = [None] * len(counts)
+    bnds: list = [None] * len(counts)
+    idxs = np.flatnonzero(counts)
+    if not len(idxs):
         return pd.DataFrame({"centroid": cents, "bounds": bnds})
-
-    idxs = np.array([r[0] for r in rows])
-    lens = np.array([len(r[1]) for r in rows])
-    starts = np.concatenate([[0], np.cumsum(lens[:-1])])
+    lens = counts[idxs]
+    starts = (np.cumsum(counts) - counts)[idxs]
     ends = starts + lens
-    x = np.concatenate([r[1] for r in rows])
-    y = np.concatenate([r[2] for r in rows])
 
     e = np.maximum.reduceat(x, starts)
     n = np.maximum.reduceat(y, starts)
@@ -78,26 +71,23 @@ def _geo_info_batch(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
     cross[last] = 0.0
 
     seg_len = np.hypot(dx, dy)
-    mid_x = np.zeros(N)
-    mid_y = np.zeros(N)
-    mid_x[:-1] = (x[:-1] + x[1:]) * 0.5
-    mid_y[:-1] = (y[:-1] + y[1:]) * 0.5
     sum_x = np.zeros(N)
     sum_y = np.zeros(N)
     sum_x[:-1] = x[:-1] + x[1:]
     sum_y[:-1] = y[:-1] + y[1:]
 
     total = np.add.reduceat(seg_len, starts)
-    wx = np.add.reduceat(mid_x * seg_len, starts)
-    wy = np.add.reduceat(mid_y * seg_len, starts)
+    # segment midpoint = sum * 0.5, weighted by the segment's length
+    wx = np.add.reduceat(sum_x * 0.5 * seg_len, starts)
+    wy = np.add.reduceat(sum_y * 0.5 * seg_len, starts)
     area2 = np.add.reduceat(cross, starts)
     cwx = np.add.reduceat(sum_x * cross, starts)
     cwy = np.add.reduceat(sum_y * cross, starts)
 
     closed = (lens >= 2) & (x[starts] == x[last]) & (y[starts] == y[last])
     use_poly = closed & (area2 != 0.0)
-    use_line = ~use_poly & (total != 0.0)
-
+    # not a nonzero-area ring: the length-weighted line centroid, or the
+    # first point when the line has zero length (single point / repeats)
     clon = np.where(
         use_poly,
         np.divide(cwx, 3.0 * area2, out=np.zeros_like(cwx), where=area2 != 0.0),
@@ -108,20 +98,13 @@ def _geo_info_batch(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
         np.divide(cwy, 3.0 * area2, out=np.zeros_like(cwy), where=area2 != 0.0),
         np.divide(wy, total, out=y[starts].copy(), where=total != 0.0),
     )
-    # degenerate (single point / zero length, not a nonzero-area ring):
-    # geo falls back to the first point
-    degen = ~use_poly & ~use_line
-    clon[degen] = x[starts][degen]
-    clat[degen] = y[starts][degen]
 
-    for j, i in enumerate(idxs):
-        cents[i] = {"lat": float(clat[j]), "lon": float(clon[j])}
-        bnds[i] = {
-            "e": float(e[j]),
-            "n": float(n[j]),
-            "s": float(s[j]),
-            "w": float(w[j]),
-        }
+    for i, la, lo, ee, nn, ss, ww in zip(
+        idxs.tolist(), clat.tolist(), clon.tolist(),
+        e.tolist(), n.tolist(), s.tolist(), w.tolist(),
+    ):
+        cents[i] = {"lat": la, "lon": lo}
+        bnds[i] = {"e": ee, "n": nn, "s": ss, "w": ww}
     return pd.DataFrame({"centroid": cents, "bounds": bnds})
 
 

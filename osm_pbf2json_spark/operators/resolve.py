@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from ..functions.geometry import _ranges, flat_arrays
 from .closure import _pin
 
 COORD_ARR = "array<struct<lon:double,lat:double>>"
@@ -184,7 +185,9 @@ def resolve_relation_coords(
     # edge list (never over nodes/ways, and never a driver collect: the
     # planet has ~10⁷ relations): the remaining relations with no edge to
     # a remaining child are `ready` and resolve against every earlier
-    # round. Rounds are bounded by nesting depth.
+    # round. Rounds are bounded by nesting depth. Only each round's new
+    # hulls are pinned; `resolved` is the plain union of the pinned
+    # rounds, so no round copies an earlier round's hulls again.
     resolved = spark.createDataFrame([], "id long, coords " + COORD_ARR)
     remaining = all_ids
     for _ in range(max_rounds):
@@ -200,12 +203,12 @@ def resolve_relation_coords(
         ready = _pin(remaining.join(blocked, "id", "left_anti"))
         if ready.isEmpty():
             break  # every remaining relation sits in a cycle
-        resolved = _pin(resolved.unionByName(resolve(ready, resolved)))
+        resolved = resolved.unionByName(_pin(resolve(ready, resolved)))
         remaining = _pin(remaining.join(ready, "id", "left_anti"))
     # cycle guard (or round cap): whatever remains resolves in one final
     # round; intra-cycle child edges find no earlier-resolved child and
     # thus contribute nothing (deterministic, matches SURVEY.md §4 notes)
-    return _pin(resolved.unionByName(resolve(remaining, resolved)))
+    return resolved.unionByName(_pin(resolve(remaining, resolved)))
 
 
 def _hull_chain(xs: list, ys: list) -> tuple[list, list]:
@@ -243,15 +246,14 @@ def _hull_batch(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
     — the public coords struct array is re-zipped JVM-side, so Python
     never builds per-point dicts. Trivial-hull shapes (0/1 point; 2-3
     points keep INPUT order, closed) match convex_hull exactly."""
-    R = len(lons)
-    counts = np.fromiter(
-        (0 if lo is None else len(lo) for lo in lons), np.int64, R
-    )
-    out_x: list = [[]] * R
-    out_y: list = [[]] * R
+    counts, x = flat_arrays(lons, np.float64)
+    _, y = flat_arrays(lats, np.float64)
+    starts = np.cumsum(counts) - counts
+    out_x: list = [[]] * len(counts)
+    out_y: list = [[]] * len(counts)
     for i in np.flatnonzero((counts > 0) & (counts < 4)).tolist():
-        lo = np.asarray(lons.iloc[i], np.float64)
-        la = np.asarray(lats.iloc[i], np.float64)
+        lo = x[starts[i] : starts[i] + counts[i]]
+        la = y[starts[i] : starts[i] + counts[i]]
         if len(lo) == 1:
             out_x[i], out_y[i] = lo, la
         else:
@@ -259,8 +261,8 @@ def _hull_batch(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
             out_y[i] = np.concatenate([la, la[:1]])
     big = np.flatnonzero(counts >= 4)
     if len(big):
-        fx = np.concatenate([np.asarray(lons.iloc[i], np.float64) for i in big])
-        fy = np.concatenate([np.asarray(lats.iloc[i], np.float64) for i in big])
+        g = _ranges(starts[big], counts[big])
+        fx, fy = x[g], y[g]
         row_of = np.repeat(np.arange(len(big)), counts[big])
         order = np.lexsort((fy, fx, row_of))
         sx, sy, sr = fx[order], fy[order], row_of[order]

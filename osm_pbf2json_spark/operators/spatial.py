@@ -659,15 +659,11 @@ def hex_cell_col(lon: "F.Column", lat: "F.Column", res: int) -> "F.Column":
     fix_r = (~fix_q) & (dr > ds)
     qq = F.when(fix_q, -r - s).otherwise(q).cast("long")
     rr = F.when(fix_r, -q - s).otherwise(r).cast("long")
-    off = F.lit(1 << 29).cast("long")
-    return (
-        F.shiftleft(F.lit(res).cast("long"), 60)
-        .bitwiseOR(F.shiftleft(qq + off, 30))
-        .bitwiseOR(rr + off)
-    )
+    return _hex_pack(res, qq, rr)
 
 
 def _hex_pack(res: int, qc: "F.Column", rc: "F.Column") -> "F.Column":
+    """(res, q, r) → the int64-wrapping hex cell id of tiles.hex_cell."""
     off = F.lit(1 << 29).cast("long")
     return (
         F.shiftleft(F.lit(res).cast("long"), 60)

@@ -40,6 +40,7 @@ from ..functions.geometry import (
     EdgeTable,
     _ranges,
     bbox_diag_length,
+    flat_arrays,
     midpoint,
     segments_intersect,
 )
@@ -220,10 +221,9 @@ def _union_find_clusters(swx, swy, nex, ney) -> np.ndarray:
 
 def _street_row(name: str, boundary, seg_rows: list[dict]) -> dict:
     """SCALAR REFERENCE street-row assembly (A3 xor id, A4 bbox-diag
-    length, A5 midpoint), raw lons/lats segment layout. The hot path is
-    the batched reduceat formulation inside _split_batch /
-    _cluster_group; this per-row version is kept as the oracle for the
-    randomized split parity test (test_streets.py)."""
+    length, A5 midpoint), raw lons/lats segment layout. The engine runs
+    the batched `_street_frame`; this per-row version is kept as the
+    oracle for the randomized split parity test (test_streets.py)."""
     seg_rows = sorted(seg_rows, key=lambda s: s["way_id"])
     street_id = 0
     for s in seg_rows:
@@ -249,95 +249,101 @@ def _street_row(name: str, boundary, seg_rows: list[dict]) -> dict:
     }
 
 
+def _segment_lists(seg_way, pt_off, fx, fy, order, cuts) -> list:
+    """Per group, its segments `order[cuts[g]:cuts[g + 1]]` as
+    {way_id, lons, lats} dicts whose coordinates are views over the flat
+    point buffers (segment `i` holds points `pt_off[i]:pt_off[i + 1]`);
+    a group may be empty."""
+    # bulk .tolist() conversions: numpy-scalar indexing and int() casts
+    # per segment dominated the assembly loop
+    way_l, po_l, order_l = seg_way.tolist(), pt_off.tolist(), order.tolist()
+    ends = np.append(cuts[1:], len(order)).tolist()
+    return [
+        [
+            {
+                "way_id": way_l[i],
+                "lons": fx[po_l[i] : po_l[i + 1]],
+                "lats": fy[po_l[i] : po_l[i + 1]],
+            }
+            for i in order_l[b0:b1]
+        ]
+        for b0, b1 in zip(cuts.tolist(), ends)
+    ]
+
+
+def _street_frame(seg_way, pt_off, fx, fy, order, cuts, names, boundaries) -> pd.DataFrame:
+    """The engine's street-row assembly: one `_STREET_COLS` row per
+    group of segments, batched over flat buffers (`_street_row` is its
+    scalar oracle).
+
+    Segment `i` is way `seg_way[i]` with points `pt_off[i]:pt_off[i + 1]`
+    of `fx`/`fy`. `order` lists the segments group by group, each group
+    sorted by way id (the reference's member order, streets.rs:222-234),
+    and `cuts` holds each group's first position in `order` (no group is
+    empty). A3 is the XOR of the way ids (streets.rs:38-45), A4 the sum
+    of the segments' bbox diagonals (streets.rs:16-25), A5 the
+    mean-then-closest midpoint of the group's points (geo.rs:256-274,
+    NaN for a group without points); each is one reduceat pass over the
+    group-ordered buffers."""
+    plen = np.diff(pt_off)[order]
+    gather = _ranges(pt_off[:-1][order], plen)
+    px, py = fx[gather], fy[gather]
+    diag = np.zeros(len(order))
+    nz = plen > 0
+    if nz.any():
+        s0 = (np.cumsum(plen) - plen)[nz]
+        diag[nz] = np.hypot(
+            np.maximum.reduceat(px, s0) - np.minimum.reduceat(px, s0),
+            np.maximum.reduceat(py, s0) - np.minimum.reduceat(py, s0),
+        )
+    gnpts = np.add.reduceat(plen, cuts)
+    loc_x = np.full(len(cuts), np.nan)
+    loc_y = np.full(len(cuts), np.nan)
+    gnz = gnpts > 0
+    if gnz.any():
+        gp_start = (np.cumsum(gnpts) - gnpts)[gnz]
+        loc_x[gnz], loc_y[gnz] = _group_midpoints(px, py, gp_start, gnpts[gnz])
+    return pd.DataFrame({
+        "id": np.bitwise_xor.reduceat(seg_way[order], cuts),
+        "name": names,
+        "boundary": boundaries,
+        "length": np.add.reduceat(diag, cuts),
+        "loc_lon": loc_x,
+        "loc_lat": loc_y,
+        "segments": _segment_lists(seg_way, pt_off, fx, fy, order, cuts),
+    })
+
+
 def _cluster_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Grouped-map kernel: one street name → one row per connected
     component (A2). Coordinates arrive as parallel double arrays
-    (`_lons`/`_lats`, extracted from the struct array JVM-side) and the
-    per-segment bboxes come from ONE reduceat pass over the flattened
-    buffer — no iterrows, no per-point dict access in either direction."""
-    name = pdf["name"].iloc[0]
-    lons_col = pdf["_lons"].to_numpy()
-    lats_col = pdf["_lats"].to_numpy()
-    wids_col = pdf["way_id"].to_numpy()
-    # one flattening pass over array refs — no per-seg column_stack or
-    # dict building; empty segs dropped (SegmentGeometry::new fails on
-    # an empty coordinate set)
-    seg_lons: list[np.ndarray] = []
-    seg_lats: list[np.ndarray] = []
-    keep: list[int] = []
-    for k, lo in enumerate(lons_col):
-        if lo is None or len(lo) == 0:
-            continue
-        keep.append(k)
-        seg_lons.append(np.asarray(lo, np.float64))
-        seg_lats.append(np.asarray(lats_col[k], np.float64))
-    if not keep:
-        return pd.DataFrame(
-            columns=["id", "name", "boundary", "length", "loc_lon", "loc_lat", "segments"]
-        )
-    wids_kept = np.asarray(wids_col, np.int64)[keep]
-    lens = np.fromiter((len(a) for a in seg_lons), np.int64, len(keep))
-    starts = np.concatenate([[0], np.cumsum(lens[:-1])])
-    flat_x = np.concatenate(seg_lons)
-    flat_y = np.concatenate(seg_lats)
-    swx = np.minimum.reduceat(flat_x, starts)
-    nex = np.maximum.reduceat(flat_x, starts)
-    swy = np.minimum.reduceat(flat_y, starts)
-    ney = np.maximum.reduceat(flat_y, starts)
-    labels = _union_find_clusters(swx, swy, nex, ney)
-    # Per-component aggregates (A3 xor id, A4 Σ bbox-diag length, A5
-    # mean-then-closest midpoint) computed in ONE pass of reduceat over
-    # the component-sorted flattened buffers — no per-component Python
-    # math. Segments sort (component, way_id) to reproduce the
-    # reference's member order (streets.rs:222-234 sorts by way id).
-    wids = wids_kept
-    glex = np.lexsort((wids, labels))
+    (`_lons`/`_lats`, extracted from the struct array JVM-side) and
+    flatten into one buffer; the per-segment bboxes are one reduceat
+    pass over it and `_street_frame` assembles the components — no
+    iterrows, no per-point dict access in either direction."""
+    npts, fx = flat_arrays(pdf["_lons"], np.float64)
+    _, fy = flat_arrays(pdf["_lats"], np.float64)
+    pt_off = np.concatenate([[0], np.cumsum(npts)])
+    # empty segments are dropped (SegmentGeometry::new fails on an empty
+    # coordinate set)
+    keep = np.flatnonzero(npts)
+    if not len(keep):
+        return pd.DataFrame(columns=_STREET_COLS)
+    starts = pt_off[:-1][keep]
+    labels = _union_find_clusters(
+        np.minimum.reduceat(fx, starts), np.minimum.reduceat(fy, starts),
+        np.maximum.reduceat(fx, starts), np.maximum.reduceat(fy, starts),
+    )
+    # segments sort (component, way_id): the reference's member order
+    wids = pdf["way_id"].to_numpy(np.int64)
+    glex = np.lexsort((wids[keep], labels))
     ls = labels[glex]
-    cstart = np.flatnonzero(np.concatenate([[True], ls[1:] != ls[:-1]]))
-    ncomp = len(cstart)
-
-    diag = np.hypot(nex - swx, ney - swy)  # bbox_diag_length per segment
-    length = np.add.reduceat(diag[glex], cstart)
-    street_id = np.bitwise_xor.reduceat(wids[glex], cstart)
-
-    # flatten points in (component, way_id) segment order
-    plen = lens[glex]
-    pnew = np.concatenate([[0], np.cumsum(plen[:-1])])
-    within = np.arange(int(plen.sum())) - np.repeat(pnew, plen)
-    gather = np.repeat(starts[glex], plen) + within
-    px = flat_x[gather]
-    py = flat_y[gather]
-    cnpts = np.add.reduceat(plen, cstart)
-    cpstart = np.concatenate([[0], np.cumsum(cnpts[:-1])])
-    loc_x, loc_y = _group_midpoints(px, py, cpstart, cnpts)
-
-    cend = np.concatenate([cstart[1:], [len(glex)]])
-    # bulk .tolist() conversions: per-element numpy-scalar indexing and
-    # int() casts in the nested comprehension were ~85% of this kernel
-    wids_l = wids.tolist()
-    s_l = starts.tolist()
-    e_l = (starts + lens).tolist()
-    glex_l = glex.tolist()
-    rows = {
-        "id": street_id,
-        "name": [name] * ncomp,
-        "boundary": [None] * ncomp,
-        "length": length,
-        "loc_lon": loc_x,
-        "loc_lat": loc_y,
-        "segments": [
-            [
-                {
-                    "way_id": wids_l[i],
-                    "lons": flat_x[s_l[i] : e_l[i]],
-                    "lats": flat_y[s_l[i] : e_l[i]],
-                }
-                for i in glex_l[b0:b1]
-            ]
-            for b0, b1 in zip(cstart.tolist(), cend.tolist())
-        ],
-    }
-    return pd.DataFrame(rows)
+    cuts = np.flatnonzero(np.concatenate([[True], ls[1:] != ls[:-1]]))
+    order = keep[glex]
+    return _street_frame(
+        wids, pt_off, fx, fy, order, cuts,
+        pdf["name"].to_numpy()[order[cuts]], [None] * len(cuts),
+    )
 
 
 _STREET_RAW_SCHEMA = (
@@ -457,12 +463,10 @@ def _parse_boundaries_flat(right: pd.DataFrame) -> _Boundaries:
     b = right.sort_values(["admin_level", "name", "relation_id"])
     nb = len(b)
 
-    def cat(col, dtype):
-        return np.concatenate([np.empty(0, dtype), *b[col]]).astype(dtype)
-
-    npts, plens = cat("_rlens", np.int64), cat("_plens", np.int64)
-    xy = np.column_stack([cat("_bfx", np.float64), cat("_bfy", np.float64)])
-    ring_cand = np.repeat(np.arange(nb), [len(r) for r in b["_rlens"]])
+    nrings, npts = flat_arrays(b["_rlens"], np.int64)
+    plens = flat_arrays(b["_plens"], np.int64)[1]
+    xy = np.column_stack([flat_arrays(b[c], np.float64)[1] for c in ("_bfx", "_bfy")])
+    ring_cand = np.repeat(np.arange(nb), nrings)
     # ring 0 of each non-empty polygon is its exterior, the rest holes
     ring_hole = np.ones(len(npts), bool)
     ring_hole[(np.cumsum(plens) - plens)[plens > 0]] = False
@@ -486,8 +490,8 @@ def _split_batch(pdf: pd.DataFrame, bounds: _Boundaries) -> pd.DataFrame:
     Fully offsets-based: segments arrive PRE-FLATTENED as four parallel
     columns (`_wids`/`_npts` + street-flattened `_flons`/`_flats`,
     built JVM-side by _segments_flat_cols), so the global point buffers
-    are one np.concatenate per column — no per-segment dict gather, no
-    pdf.to_dict("records"); every later stage works on those buffers
+    are one `flat_arrays` call per column — no per-segment dict gather,
+    no pdf.to_dict("records"); every later stage works on those buffers
     and per-row Python never touches coordinates:
 
     - J3 AABB probe: per-street bboxes by reduceat; one
@@ -502,41 +506,21 @@ def _split_batch(pdf: pd.DataFrame, bounds: _Boundaries) -> pd.DataFrame:
       boundary index (the deterministic first-match order);
     - J7 fallback: first candidate in deterministic order;
     - assembly: output groups keyed (street, owner NAME) — same-name
-      boundaries merge, streets.rs:75-78 — with A3 xor id, A4 bbox-diag
-      length, and A5 mean-then-closest midpoint via reduceat over the
-      way_id-sorted flattened buffers, the _cluster_group pattern.
+      boundaries merge, streets.rs:75-78 — assembled by `_street_frame`,
+      as `_cluster_group` assembles its components. A street with no J4
+      candidate passes through with its own id, length and loc (boundary
+      NULL), after the split rows.
 
     Row-for-row parity with the scalar reference formulation
     (linestring_intersects_polygon + per-seg line_centroid +
     _street_row) is pinned by test_split_batch_matches_scalar_reference.
     """
     n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(columns=_STREET_COLS)
-    wid_arrs = pdf["_wids"].to_numpy()
-    st_seg_cnt = np.fromiter(
-        (0 if a is None else len(a) for a in wid_arrs), np.int64, n
-    )
-    S = int(st_seg_cnt.sum())
-    nz = st_seg_cnt > 0
-    if S:
-        seg_way = np.concatenate(
-            [np.asarray(a, np.int64) for a in wid_arrs[nz]]
-        )
-        seg_npts = np.concatenate(
-            [np.asarray(a, np.int64) for a in pdf["_npts"].to_numpy()[nz]]
-        )
-        fx = np.concatenate(
-            [np.asarray(a, np.float64) for a in pdf["_flons"].to_numpy()[nz]]
-        )
-        fy = np.concatenate(
-            [np.asarray(a, np.float64) for a in pdf["_flats"].to_numpy()[nz]]
-        )
-    else:
-        seg_way = np.empty(0, np.int64)
-        seg_npts = np.empty(0, np.int64)
-        fx = np.zeros(0)
-        fy = np.zeros(0)
+    st_seg_cnt, seg_way = flat_arrays(pdf["_wids"], np.int64)
+    _, seg_npts = flat_arrays(pdf["_npts"], np.int64)
+    _, fx = flat_arrays(pdf["_flons"], np.float64)
+    _, fy = flat_arrays(pdf["_flats"], np.float64)
+    S = len(seg_way)
     pt_off = np.concatenate([[0], np.cumsum(seg_npts)])  # S+1 offsets
     seg_off0 = np.concatenate([[0], np.cumsum(st_seg_cnt)])  # street→segs
     st_of_seg = np.repeat(np.arange(n), st_seg_cnt)
@@ -649,7 +633,7 @@ def _split_batch(pdf: pd.DataFrame, bounds: _Boundaries) -> pd.DataFrame:
     # ascending streets inside
     c4i, c4k = p3i[hit4], p3k[hit4]
 
-    out_rows: list[dict] = []
+    frames = []
     has4 = np.zeros(n, dtype=bool)
     has4[c4i] = True
     if len(c4i):
@@ -690,96 +674,22 @@ def _split_batch(pdf: pd.DataFrame, bounds: _Boundaries) -> pd.DataFrame:
         cuts = np.flatnonzero(
             np.concatenate([[True], (gc[1:] != gc[:-1]) | (gn[1:] != gn[:-1])])
         )
-        cend = np.concatenate([cuts[1:], [len(o_sub)]])
-
-        street_id = np.bitwise_xor.reduceat(seg_way[o_sub], cuts)
-
-        seg_diag = np.zeros(S)
-        nzseg = seg_npts > 0
-        if nzseg.any():
-            pstart = pt_off[:-1][nzseg]
-            seg_diag[nzseg] = np.hypot(
-                np.maximum.reduceat(fx, pstart) - np.minimum.reduceat(fx, pstart),
-                np.maximum.reduceat(fy, pstart) - np.minimum.reduceat(fy, pstart),
-            )
-        length = np.add.reduceat(seg_diag[o_sub], cuts)
-
-        plen = seg_npts[o_sub]
-        pnew = np.concatenate([[0], np.cumsum(plen[:-1])])
-        within = np.arange(int(plen.sum())) - np.repeat(pnew, plen)
-        gather = np.repeat(pt_off[:-1][o_sub], plen) + within
-        px, py = fx[gather], fy[gather]
-        gnpts = np.add.reduceat(plen, cuts)
-        loc_x = np.full(len(cuts), np.nan)
-        loc_y = np.full(len(cuts), np.nan)
-        gnz = gnpts > 0
-        if gnz.any():
-            gp_start = (np.concatenate([[0], np.cumsum(gnpts[:-1])]))[gnz]
-            loc_x[gnz], loc_y[gnz] = _group_midpoints(px, py, gp_start, gnpts[gnz])
-
-        names_col = pdf["name"].to_numpy()
-        # bulk .tolist() conversions: numpy-scalar indexing and int()
-        # casts per output row dominated the assembly loop
-        sid_l = street_id.tolist()
-        len_l = length.tolist()
-        lx_l = loc_x.tolist()
-        ly_l = loc_y.tolist()
-        gc0 = gc[cuts].tolist()
-        gn0 = gn[cuts].tolist()
-        sw_l = seg_way.tolist()
-        po_l = pt_off.tolist()
-        osub_l = o_sub.tolist()
-        for g, (b0, b1) in enumerate(zip(cuts.tolist(), cend.tolist())):
-            out_rows.append(
-                {
-                    "id": sid_l[g],
-                    "name": names_col[gc0[g]],
-                    "boundary": name_uniques[gn0[g]],
-                    "length": len_l[g],
-                    "loc_lon": lx_l[g],
-                    "loc_lat": ly_l[g],
-                    "segments": [
-                        {
-                            "way_id": sw_l[si],
-                            "lons": fx[po_l[si] : po_l[si + 1]],
-                            "lats": fy[po_l[si] : po_l[si + 1]],
-                        }
-                        for si in osub_l[b0:b1]
-                    ],
-                }
-            )
-    no_cand = np.flatnonzero(~has4).tolist()
-    if no_cand:
-        # passthrough (boundary stays NULL): attrs come straight off the
-        # input columns; segments reassemble as views over the buffers
-        sub_pdf = pdf.iloc[no_cand][
-            ["id", "name", "boundary", "length", "loc_lon", "loc_lat"]
-        ]
-        sw_l2 = seg_way.tolist()
-        po_l2 = pt_off.tolist()
-        so_l2 = seg_off0.tolist()
-        for i, rec in zip(no_cand, sub_pdf.itertuples(index=False)):
-            out_rows.append(
-                {
-                    "id": rec.id,
-                    "name": rec.name,
-                    "boundary": rec.boundary,
-                    "length": rec.length,
-                    "loc_lon": rec.loc_lon,
-                    "loc_lat": rec.loc_lat,
-                    "segments": [
-                        {
-                            "way_id": sw_l2[si],
-                            "lons": fx[po_l2[si] : po_l2[si + 1]],
-                            "lats": fy[po_l2[si] : po_l2[si + 1]],
-                        }
-                        for si in range(so_l2[i], so_l2[i + 1])
-                    ],
-                }
-            )
-    if not out_rows:
+        frames.append(_street_frame(
+            seg_way, pt_off, fx, fy, o_sub, cuts,
+            pdf["name"].to_numpy()[gc[cuts]], name_uniques.to_numpy()[gn[cuts]],
+        ))
+    no_cand = np.flatnonzero(~has4)
+    if len(no_cand):
+        # passthrough (boundary stays NULL): each row keeps its own
+        # attributes and only its segment lists are rebuilt
+        cnt = st_seg_cnt[no_cand]
+        segs = _segment_lists(
+            seg_way, pt_off, fx, fy, _ranges(seg_off0[no_cand], cnt), np.cumsum(cnt) - cnt
+        )
+        frames.append(pdf.take(no_cand)[_STREET_COLS[:-1]].assign(segments=segs))
+    if not frames:  # an empty batch
         return pd.DataFrame(columns=_STREET_COLS)
-    return pd.DataFrame(out_rows)[_STREET_COLS]
+    return pd.concat(frames, ignore_index=True)
 
 
 def split_streets_broadcast(streets_df: DataFrame, boundaries: pd.DataFrame) -> DataFrame:

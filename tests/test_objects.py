@@ -312,3 +312,57 @@ def test_unlocated_nodes_are_not_emitted(spark):
     lines = [r["value"] for r in objects_json_lines(objects(t, "amenity~x")).collect()]
     got = [json.loads(line, parse_constant=no_constants) for line in lines]
     assert [(o["id"], o["lon"], o["lat"]) for o in got] == [(3, 13.4, 52.5)]
+
+
+def test_geo_info_batch_kernel_contract():
+    """`_geo_info_batch` driven as plain pandas, no Spark, equals the
+    scalar `geometry.geo_info` row by row: an empty batch, all-None rows,
+    empty arrays between non-empty rows (the flat offsets must skip
+    them), one point, two equal points, an open line, a closed zero-area
+    ring and a closed square. The batch sums with reduceat, the scalar
+    with `ndarray.sum`, so a centroid may differ in its last ulp (the
+    zero-area ring does). `flat_arrays`, which flattens the batch, treats
+    None as empty and keeps int64 values exact."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_pbf2json_spark.functions.geometry import flat_arrays, geo_info
+    from osm_pbf2json_spark.operators.objects import _geo_info_batch
+
+    def check(rows):  # each row None or a list of (lon, lat)
+        def col(k):
+            return pd.Series(
+                [None if r is None else np.array([p[k] for p in r], np.float64) for r in rows],
+                dtype=object,
+            )
+
+        out = _geo_info_batch(col(0), col(1))
+        assert list(out.columns) == ["centroid", "bounds"] and len(out) == len(rows)
+        for r, cent, bnd in zip(rows, out["centroid"], out["bounds"]):
+            info = None if r is None else geo_info(r)
+            if info is None:
+                assert cent is None and bnd is None
+            else:
+                near = [pytest.approx(v, rel=1e-15) for v in info[:2]]
+                assert cent == {"lon": near[0], "lat": near[1]}
+                assert bnd == dict(zip("ensw", info[2:]))
+
+    line = [(9.0, 50.0), (9.0, 51.0), (10.0, 51.0)]
+    square = [(0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0), (0.0, 0.0)]
+    check([])
+    check([None, None])
+    check([line, [], None, square, []])
+    check([[(1.5, 2.5)]])
+    check([[(1.0, 1.0), (1.0, 1.0)]])
+    check([line])
+    check([[(0.0, 0.0), (1.0, 1.0), (3.0, 3.0), (0.0, 0.0)]])
+    check([square])
+
+    counts, values = flat_arrays(
+        pd.Series([None, np.array([], np.int64), [2**62 + 1, -3]], dtype=object), np.int64
+    )
+    assert counts.tolist() == [0, 0, 2]
+    assert values.dtype == np.int64 and values.tolist() == [2**62 + 1, -3]
+    counts, values = flat_arrays(pd.Series([], dtype=object), np.float64)
+    assert counts.dtype == np.int64 and len(counts) == 0
+    assert values.dtype == np.float64 and len(values) == 0
